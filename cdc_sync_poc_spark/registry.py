@@ -178,7 +178,7 @@ DRIVER_WINDOW = [
 # exactly from CORRECTNESS_r*.json with tools/next_window.py before
 # staging.
 _PRIORITY_PREFIXES = [
-    "a0", "a1", "ap0", "ap1", "bench_q1", "bench_q2",
+    "a0", "a1", "ap0", "ap1", "pipeline_", "bench_q1", "bench_q2",
     "cf0", "j0",
     "corpus_", "sample_", "emb_", "events_", "text_",
     "dedup_", "dup_", "bench_",
@@ -190,6 +190,7 @@ _PRIORITY_PREFIXES = [
     "retrieval_", "slice_",
     "sem_", "llm_", "dsir_",
     "plan_", "gopher_", "bpe_", "dq_", "maint_",
+    "pii_", "doc_", "seq_", "pack_", "train_",
 ]
 
 

@@ -24,6 +24,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_driver_memory() -> str:
+    """Default driver heap: half of the host's physical memory
+    (``MemTotal`` in /proc/meminfo), capped at 24g. The other half is
+    left to the JVM's off-heap use, the Python workers and the page
+    cache; 4g when /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{min(kb // 2048, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "cdc-sync-poc-spark",
     cpus: int | None = None,
@@ -54,12 +67,15 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-        # the single local JVM plays driver AND all 32 executor threads;
-        # the host budget is 128 GiB (see ARCHITECTURE), and a small heap
-        # turns the session-shared caches (loop-guard result, shingle/
-        # signature views) into eviction-recompute churn under repeated
-        # queries. On a real cluster this is spark.executor.memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # the single local JVM plays driver AND every executor thread; a
+        # small heap turns the session-shared caches (loop-guard result,
+        # shingle/signature views) into eviction-recompute churn under
+        # repeated queries, a heap past physical memory gets the JVM
+        # OOM-killed. On a real cluster this is spark.executor.memory.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or host_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
     )

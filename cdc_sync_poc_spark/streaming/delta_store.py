@@ -20,7 +20,7 @@ Contract (two mechanisms, each carrying half the safety):
   partitions are filtered out by ``batch_id > upto``, never
   double-counted).
 
-Three fold disciplines share that skeleton:
+Four fold disciplines share that skeleton:
 
 * :class:`AdditiveDeltaStore` — sum-mergeable keyed counters (term
   counts, document frequencies, edge weights): folding re-sums per
@@ -36,6 +36,10 @@ Three fold disciplines share that skeleton:
   (``delta_partition_by``) and the compacted base
   (``base_partition_by``) keeps key-pruned probes — e.g. the IVF
   cell_id layout — pruning at planning time after compaction too.
+* :class:`LastWinsDeltaStore` — keyed last-writer-wins rows with
+  tombstones (the MERGE target of streaming/writer.py): each delta row
+  is a resolved decision for its key, the newest row per key by
+  ``batch_id`` decides, folding keeps that row and drops tombstones.
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from cdc_sync_poc_spark.streaming.swapstore import SwapStore
 
@@ -72,6 +77,10 @@ class _DeltaStoreBase:
         self.base = SwapStore(spark, root, base_name)
         self.cols = list(cols)
         self.base_partition_by: list[str] | None = None
+        # read schemas (partition columns included) of stores that know
+        # them; None infers one with a footer-reading Spark job per read
+        self.delta_schema: StructType | None = None
+        self.base_schema: StructType | None = None
 
     def _delta_frame(self) -> DataFrame | None:
         if not os.path.isdir(self.deltas_dir):
@@ -80,12 +89,15 @@ class _DeltaStoreBase:
             d.startswith("batch_id=") for d in os.listdir(self.deltas_dir)
         ):
             return None
-        return self.spark.read.parquet(self.deltas_dir)
+        reader = self.spark.read
+        if self.delta_schema is not None:
+            reader = reader.schema(self.delta_schema)
+        return reader.parquet(self.deltas_dir)
 
     def _base_frame(self) -> tuple[DataFrame | None, int | None]:
         """The live base and its watermark (None, None when absent or
         degenerate-empty)."""
-        base = self.base.read()
+        base = self.base.read(self.base_schema)
         if base is None:
             return None, None
         upto = base.agg(F.max("upto").alias("u")).collect()[0].u
@@ -391,3 +403,129 @@ class AppendDeltaStore(_DeltaStoreBase):
                 raise ValueError("empty store and no ddl to type it")
             return self.spark.createDataFrame([], self.ddl)
         return rows
+
+
+class LastWinsDeltaStore(_DeltaStoreBase):
+    """Keyed last-writer-wins state with tombstones — MERGE as
+    merge-on-read. A delta row is a resolved decision for its key: a
+    full row (``deleted`` false) or a tombstone (``deleted`` true).
+    The newest row per key decides, ordered by ``batch_id``; base rows
+    keep the batch_id that wrote them, all <= the watermark, so every
+    live delta outranks them.
+
+    Folding keeps each key's newest row and drops tombstones, so the
+    base holds live rows only — plus one watermark row (null key,
+    tombstone) so ``upto`` survives a fold that deletes every key.
+    Newest-row-wins is idempotent, so a replayed batch that re-derives
+    its partition from the same snapshot changes nothing.
+
+    The base is laid out as ``upto=U/<base_partition_by>/``: the
+    watermark is one directory listing (:meth:`watermark`), not a
+    Spark job, because the MERGE writer needs it every micro-batch.
+    ``ddl`` types the key and value columns, so no read infers a schema.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        key_cols: list[str],
+        ddl: str,
+        base_partition_by: list[str] | None = None,
+        deltas_name: str = "deltas",
+        base_name: str = "base",
+    ) -> None:
+        schema = spark.createDataFrame(
+            [], f"{ddl}, deleted boolean, batch_id long"
+        ).schema
+        super().__init__(
+            spark, root, schema.fieldNames(), deltas_name, base_name
+        )
+        self.key_cols = list(key_cols)
+        self.base_partition_by = ["upto", *(base_partition_by or [])]
+        self.delta_schema = schema
+        self.base_schema = StructType(
+            [*schema.fields, StructField("upto", LongType())]
+        )
+
+    def watermark(self) -> int | None:
+        """The base's ``upto`` (None before the first base exists)."""
+        self.base.recover()
+        if not os.path.isdir(self.base.cur_dir):
+            return None
+        for d in os.listdir(self.base.cur_dir):
+            if d.startswith("upto="):
+                return int(d.split("=", 1)[1])
+        return None
+
+    def _with_watermark_row(self, rows: DataFrame) -> DataFrame:
+        marker = self.spark.range(1).select(
+            *[
+                F.lit(True if f.name == "deleted" else None)
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in self.delta_schema.fields
+            ]
+        )
+        return rows.select(*self.cols).unionByName(marker)
+
+    def reset(self, rows: DataFrame) -> None:
+        """Replace the whole store by ``rows`` (key + value columns, one
+        live row per key) as a base at watermark -1. The deltas go
+        first: a crash in between leaves the old base and no deltas,
+        never an old delta outranking the new base."""
+        if os.path.isdir(self.deltas_dir):
+            shutil.rmtree(self.deltas_dir)
+        base = rows.withColumn("deleted", F.lit(False)).withColumn(
+            "batch_id", F.lit(-1).cast("long")
+        )
+        self.base.swap(
+            self._with_watermark_row(base).withColumn(
+                "upto", F.lit(-1).cast("long")
+            ),
+            partition_by=self.base_partition_by,
+        )
+
+    def write_delta(self, df: DataFrame, batch_id: int) -> None:
+        """Persist one batch's decisions (key + value columns and
+        ``deleted``, one row per key) under its own partition."""
+        df.write.mode("overwrite").parquet(
+            os.path.join(self.deltas_dir, f"batch_id={batch_id}")
+        )
+
+    def rows(self, upto: int | None, before: int | None = None) -> DataFrame | None:
+        """Base rows plus the live deltas ``upto < batch_id < before``
+        (``upto`` as returned by :meth:`watermark`; no upper bound when
+        ``before`` is None), unreduced — several rows per key."""
+        base = self.base.read(self.base_schema) if upto is not None else None
+        deltas = self._delta_frame()
+        if deltas is not None:
+            live = F.col("batch_id") > (upto if upto is not None else -1)
+            if before is not None:
+                live &= F.col("batch_id") < before
+            deltas = deltas.filter(live).select(*self.cols)
+        if base is None:
+            return deltas
+        base = base.select(*self.cols)
+        return base if deltas is None else base.unionByName(deltas)
+
+    def _newest(self, rows: DataFrame) -> DataFrame:
+        """Each key's newest row (tombstones included): one hash
+        aggregate, no sort."""
+        rest = [c for c in self.cols if c not in self.key_cols]
+        return rows.groupBy(*self.key_cols).agg(
+            F.max_by(F.struct(*rest), "batch_id").alias("r")
+        ).select(*self.key_cols, *[F.col(f"r.{c}").alias(c) for c in rest])
+
+    def _fold(self, rows: DataFrame) -> DataFrame:
+        return self._with_watermark_row(
+            self._newest(rows).filter(~F.col("deleted"))
+        )
+
+    def live(self) -> DataFrame | None:
+        """Current state: each key's newest row over base + live
+        deltas, tombstones dropped (None for a never-reset store)."""
+        rows = self.rows(self.watermark())
+        if rows is None:
+            return None
+        return self._newest(rows).filter(~F.col("deleted"))

@@ -32,6 +32,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SwapStore:
@@ -62,11 +63,14 @@ class SwapStore:
         if os.path.isdir(self.tmp_dir):
             shutil.rmtree(self.tmp_dir)  # partial temp, never promoted
 
-    def read(self) -> DataFrame | None:
+    def read(self, schema: StructType | None = None) -> DataFrame | None:
+        """The live state; ``schema`` (partition columns included) skips
+        the footer-reading job Spark runs to infer one."""
         self.recover()
         if not os.path.isdir(self.cur_dir):
             return None
-        return self.spark.read.parquet(self.cur_dir)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.cur_dir)
 
     def swap(self, df: DataFrame, partition_by: list[str] | None = None) -> None:
         """Persist ``df`` as the new state; atomic at every step.

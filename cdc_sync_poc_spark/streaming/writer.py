@@ -1,62 +1,61 @@
-"""foreachBatch MERGE writer (SURVEY §2.7 ap01-ap05, streaming side).
+"""foreachBatch MERGE writer (SURVEY §2.7 ap01-ap05, streaming side),
+merge-on-read on the shared delta-store recipe
+(streaming/delta_store.py::LastWinsDeltaStore).
 
-Per micro-batch (the 5 s trigger replaces the reference's Oracle
+Per micro-batch N (the 5 s trigger replaces the reference's Oracle
 Scheduler job, st04):
 
-1. per-key batch reduction — ``strategy="last_wins"`` (default: the
-   newest row per key decides, s01/ap01 semantics) or
+1. per-key batch reduction (``reduce_batch``) — ``strategy="last_wins"``
+   (default: the newest row per key decides, s01/ap01 semantics) or
    ``strategy="net"`` (ap08's net_effect compaction: replay-exact ap06
-   semantics at any batch granularity, each key still written once),
-2. MERGE into the base table (ap01): the state table is hash-bucketed
-   by pk into ``n_buckets`` parquet directories (``bucket=K/``), and a
-   batch rewrites ONLY the buckets that contain changed keys — the
-   plain-parquet analog of the reference's row-level MERGE
-   (poc/tobe-oracle/init/04_create_procedures.sql:184-232). With
-   Delta/Iceberg available the same step is a real ``MERGE INTO``; the
-   join logic is byte-identical (operators/apply.py::merge_final_state).
-3. audit append (sink_audit_log) + TARGET_NOT_FOUND log (ap03), written
-   idempotently into a per-batch partition.
+   semantics at any batch granularity, each key still written once);
+2. one probe of the batch's keys against the immutable pre-batch
+   snapshot — the compacted base plus the live deltas with
+   ``upto < batch_id < N``, newest row per pk — which decides every key
+   as in operators/apply.py::merge_final_state;
+3. two outputs from that probe, each owned by batch N and written with
+   mode=overwrite: ``deltas/batch_id=N`` (an upsert row per applied
+   key, a tombstone per DELETE of an existing key; an UPDATE or DELETE
+   of a missing key writes nothing, ap03/ap04) and the audit partition
+   ``audit/batch_id=N`` (sink_audit_log statuses, TARGET_NOT_FOUND log).
 
-Scale: a batch touching k distinct keys rewrites at most
-min(k, n_buckets) buckets — i.e. ~(k / n_buckets) of the table instead
-of all of it; at 100 TB you raise ``n_buckets`` (or switch to Delta
-row-level MERGE + deletion vectors) so each rewrite stays bounded. The
-reference's per-row commits (04_create_procedures.sql:99) have no scale
-path at all.
+A read (``current_state``) is the newest row per pk over base ∪ live
+deltas, tombstones dropped. A batch writes O(changed keys) rows; the
+base (hash-bucketed by pk, ``n_buckets`` partitions, so a probe with
+fewer keys than buckets opens only the buckets it needs) is rewritten
+only by compaction.
 
 Replay/crash semantics (at-least-once foreachBatch made effectively
 exactly-once):
 
-* audit — written with ``mode=overwrite`` into ``batch_id=<B>/``, so a
-  replayed batch replaces its own audit partition instead of appending
-  duplicates.
-* state — each touched bucket directory is swapped via rename (atomic
-  on a POSIX filesystem); a crash mid-batch leaves some buckets new and
-  some old, and the replay re-derives the same merged result because
-  the MERGE is idempotent (last-wins upsert; DELETE of a missing key is
-  a no-op, ap04). A crash BETWEEN a swap's two renames leaves a bucket
-  only as ``.old.bucket=K``; ``_recover_buckets`` renames it back
-  before any state read, so the replay always sees pre-batch state.
-* known bounded deviation: audit statuses are computed against the
-  pre-batch state, so a replay AFTER a partial swap can reclassify a
-  DELETE as TARGET_NOT_FOUND (the row is already gone). Status strings
-  may differ on that narrow path; row counts and final state do not.
+* a batch's outputs are a pure function of the batch and its snapshot,
+  and a replay of N sees the same snapshot: no partition >= N is part
+  of it, and compaction never folds the running batch. A replay
+  therefore overwrites both of N's partitions with the same rows,
+  audit statuses included.
+* compaction (``LastWinsDeltaStore.compact``, at the start of a batch
+  N once ``_compact_at`` delta partitions are live, folding batches
+  <= N-1) swaps the base atomically through
+  SwapStore with the watermark inside it; a crash between its renames
+  is healed before the next read, and folded-but-not-yet-deleted
+  partitions are ignored by the watermark. A batch at or below the
+  watermark was fully applied before it was folded, so its replay is a
+  no-op.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cdc_sync_poc_spark.streaming.delta_store import LastWinsDeltaStore
+
 
 def reduce_batch(changes: DataFrame, strategy: str) -> DataFrame:
-    """Per-key batch reduction shared by ParquetMergeWriter and the
-    Delta-gated DeltaMergeWriter (streaming/delta_writer.py), so the
-    two MERGE backends can never drift on WHAT gets merged — only HOW.
-    Returns one row per key: (cdc_seq, pk, operation, val, first_op).
+    """Per-key batch reduction of ParquetMergeWriter. Returns one row
+    per key: (cdc_seq, pk, operation, val, first_op).
 
     ``last_wins``: the newest row per key decides (s01/ap01 semantics).
     ``net``: ap08's net_effect — each key's in-batch op sequence
@@ -102,8 +101,8 @@ def pk_bucket_col(col: F.Column, n_buckets: int) -> F.Column:
 
 
 class ParquetMergeWriter:
-    """MERGE-into-parquet state maintainer for foreachBatch, with
-    pk-hash-bucketed state so each batch rewrites only touched buckets."""
+    """MERGE-into-parquet state maintainer for foreachBatch: one delta
+    partition per micro-batch over a pk-hash-bucketed compacted base."""
 
     def __init__(
         self,
@@ -124,162 +123,142 @@ class ParquetMergeWriter:
         # "net": ap08's net_effect — each key's in-batch op SEQUENCE
         #   compacts to its replay-exact net op (ap06 semantics at any
         #   batch granularity; see test_writer_net_strategy_matches_
-        #   sequential_replay). Same merge join either way: the net op
-        #   vocabulary {UPSERT, UPDATE, DELETE} flows through the
-        #   last-wins CASE logic unchanged (UPSERT = unconditional
+        #   sequential_replay). Same decision table either way: the net
+        #   op vocabulary {UPSERT, UPDATE, DELETE} flows through the
+        #   last-wins rules unchanged (UPSERT = unconditional
         #   create-or-update, exactly how INSERT is treated).
         self.strategy = strategy
+        self.store = LastWinsDeltaStore(
+            spark, state_dir, ["pk"],
+            "pk long, name string, acctbal double, bucket long",
+            base_partition_by=["bucket"],
+        )
 
     def _bucket(self, col: F.Column) -> F.Column:
         """Deterministic bucket for a pk (stable across batches/retries)."""
         return pk_bucket_col(col, self.n_buckets)
 
     def init_state(self, base: DataFrame) -> None:
-        (
+        self.store.reset(
             base.select(
-                F.col("c_custkey").alias("pk"),
-                F.col("c_name").alias("name"),
-                F.col("c_acctbal").alias("acctbal"),
-            )
-            .withColumn("bucket", self._bucket(F.col("pk")))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self.state_dir)
+                F.col("c_custkey").cast("long").alias("pk"),
+                F.col("c_name").cast("string").alias("name"),
+                F.col("c_acctbal").cast("double").alias("acctbal"),
+            ).withColumn("bucket", self._bucket(F.col("pk")))
         )
 
     def current_state(self) -> DataFrame:
-        self._recover_buckets()
-        return self.spark.read.parquet(self.state_dir).drop("bucket")
+        return self.store.live().select("pk", "name", "acctbal")
 
-    def _recover_buckets(self) -> None:
-        """Repair a crash that landed between the two renames of a swap:
-        rename(live -> .old) succeeded but rename(new -> live) did not,
-        so the bucket's data exists ONLY as ``.old.bucket=K`` (hidden
-        from the parquet reader — its keys would silently vanish from
-        the next merge). Restore such buckets by renaming them back;
-        delete ``.old`` only when the live dir exists (crash after the
-        second rename, where ``.old`` is a true leftover). Runs before
-        every state read so the documented replay idempotence holds."""
-        if not os.path.isdir(self.state_dir):
-            return
-        for entry in os.listdir(self.state_dir):
-            if not entry.startswith(".old.bucket="):
-                continue
-            old = os.path.join(self.state_dir, entry)
-            live = os.path.join(self.state_dir, entry[len(".old.") :])
-            if os.path.exists(live):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, live)
-
-    def _swap_buckets(self, tmp_dir: str, buckets: list[int]) -> None:
-        """Replace each touched live bucket dir with the rewritten one.
-        Per-bucket rename is atomic; untouched buckets are never opened,
-        read, or rewritten. ``_recover_buckets`` ran before the state
-        scan, so any ``.old`` seen here is from a crash that happened
-        AFTER its live dir was restored or replaced — safe to drop."""
-        for k in buckets:
-            live = os.path.join(self.state_dir, f"bucket={k}")
-            new = os.path.join(tmp_dir, f"bucket={k}")
-            old = os.path.join(self.state_dir, f".old.bucket={k}")
-            if os.path.exists(old):
-                if os.path.exists(live):  # true leftover
-                    shutil.rmtree(old)
-                else:  # crashed mid-swap and not yet recovered
-                    os.rename(old, live)
-            if os.path.exists(live):
-                os.rename(live, old)
-            if os.path.exists(new):  # a bucket can merge to empty
-                os.rename(new, live)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(tmp_dir, ignore_errors=True)
+    def _compact_at(self) -> int:
+        """Live delta partitions that trigger a compaction: Spark's
+        serial-listing limit. Past it every read of the deltas lists
+        them with a distributed Spark job, so a batch would pay a job
+        of listing before it reads a row."""
+        return int(
+            self.spark.conf.get(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+            )
+        )
 
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        """The foreachBatch body: crash recovery -> last-wins ->
-        bucket-pruned merge -> idempotent audit -> atomic bucket swap."""
+        """The foreachBatch body: compact if due -> reduce -> probe the
+        pre-batch snapshot -> delta partition + audit partition."""
         from cdc_sync_poc_spark.streaming.util import persisted
 
-        self._recover_buckets()
-        with persisted(
-            reduce_batch(changes, self.strategy).withColumn(
-                "bucket", self._bucket(F.col("pk"))
+        upto = self.store.watermark()
+        if upto is not None and batch_id <= upto:
+            return  # folded into the base, so applied in full already
+        pending = [b for b in self.store.newer_deltas(upto) if b < batch_id]
+        if len(pending) >= self._compact_at():
+            self.store.compact(batch_id - 1)
+            upto = batch_id - 1
+        # ``last`` and ``decided`` hold one row per changed key, a count
+        # the source's per-trigger cap bounds, so each is cached as ONE
+        # partition: cached plans keep their shuffle partitioning (AQE
+        # does not coalesce them), and 2x cores near-empty partitions
+        # would cost every job over them that many tasks and every
+        # delta/audit partition that many files
+        with persisted(reduce_batch(changes, self.strategy).coalesce(1)) as last:
+            buckets = {r[0] for r in last.select(self._bucket(F.col("pk"))).collect()}
+            if not buckets:
+                return
+            # partition pruning: the probe opens only the base buckets
+            # holding batch keys (and never the watermark row's)
+            snap = (
+                self.store.rows(upto, before=batch_id)
+                .filter(F.col("bucket").isin(sorted(buckets)))
+                .join(F.broadcast(last.select("pk")), "pk", "left_semi")
             )
-        ) as last:
-            self._apply_reduced(last, batch_id)
+            with persisted(self._decide(last, snap).coalesce(1)) as decided:
+                self._write(decided, batch_id)
 
-    def _apply_reduced(self, last: DataFrame, batch_id: int) -> None:
-        touched = sorted(r.bucket for r in last.select("bucket").distinct().collect())
-        if not touched:
-            return
-
-        # partition pruning: the filter on the partition column means the
-        # scan lists/reads ONLY the touched bucket directories
-        state = self.spark.read.parquet(self.state_dir).filter(
-            F.col("bucket").isin([int(b) for b in touched])
+    @staticmethod
+    def _decide(last: DataFrame, snap: DataFrame) -> DataFrame:
+        """The one probe: each batch key's reduced op beside ``exists``
+        — whether its newest snapshot row is a live row. A union and one
+        hash aggregate on pk instead of a join: each group holds the
+        key's one batch row (the op) and its snapshot rows (tombstone
+        flag and batch_id), so the probe costs a single small shuffle."""
+        op_cols = ["cdc_seq", "operation", "val", "first_op"]
+        types = dict(last.dtypes)
+        rows = last.select(
+            "pk", *op_cols,
+            F.lit(None).cast("boolean").alias("deleted"),
+            F.lit(None).cast("long").alias("batch_id"),
+        ).unionByName(
+            snap.select(
+                "pk", *[F.lit(None).cast(types[c]).alias(c) for c in op_cols],
+                "deleted", F.col("batch_id").cast("long"),
+            )
         )
-        j = state.join(last, state.pk == last.pk, "full_outer")
-        s_pk, l_pk = state.pk, last.pk
-        keep = ~((F.col("operation") == "DELETE") & l_pk.isNotNull()).eqNullSafe(
-            True
-        ) & ~(s_pk.isNull() & (F.col("operation") == "UPDATE")).eqNullSafe(True)
-        untouched = l_pk.isNull()
-        merged = j.filter(keep).select(
-            F.coalesce(s_pk, l_pk).alias("pk"),
-            F.when(untouched, F.col("name"))
-            .otherwise(F.concat(F.lit("U"), l_pk.cast("string")))
-            .alias("name"),
-            F.when(untouched, F.col("acctbal")).otherwise(F.col("val")).alias(
-                "acctbal"
+        return rows.groupBy("pk").agg(
+            *[F.max(c).alias(c) for c in op_cols],
+            F.coalesce(
+                ~F.max_by("deleted", "batch_id"), F.lit(False)
+            ).alias("exists"),
+        )
+
+    def _write(self, decided: DataFrame, batch_id: int) -> None:
+        """Batch N's two partitions from the probe. Delta: the decision
+        table of operators/apply.py::merge_final_state — INSERT/UPSERT
+        writes the row, UPDATE writes it only for an existing key,
+        DELETE of an existing key writes a tombstone. Audit: each key's
+        DECIDING row gets a status — UPDATE/DELETE on a missing key ->
+        TARGET_NOT_FOUND (ap03), everything else -> SUCCESS (INSERT on
+        an existing key is the ap02 dup->update path). Under
+        strategy='net' a net DELETE whose first op was INSERT means the
+        key was created AND deleted inside this batch: the sequential
+        replay it claims parity with would log INSERT=SUCCESS then
+        DELETE=SUCCESS, so it is audited SUCCESS too (ADVICE r4)."""
+        op, exists, pk = F.col("operation"), F.col("exists"), F.col("pk")
+        deleted = op == "DELETE"
+        self.store.write_delta(
+            decided.filter(op.isin("INSERT", "UPSERT") | exists).select(
+                pk,
+                F.when(~deleted, F.concat(F.lit("U"), pk.cast("string"))).alias(
+                    "name"
+                ),
+                F.when(~deleted, F.col("val")).alias("acctbal"),
+                self._bucket(pk).alias("bucket"),
+                deleted.alias("deleted"),
             ),
+            batch_id,
         )
-        tmp = f"{self.state_dir}.tmp-batch-{batch_id}"
-        (
-            merged.withColumn("bucket", self._bucket(F.col("pk")))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
-
-        # audit BEFORE swapping state (the plan scans the pre-batch state
-        # lazily); each key's DECIDING row gets a status — the last-wins
-        # survivor, or the net op carrying the key's last cdc_seq
-        # (sink_audit_log's per-row form is the batch sink; here the
-        # audit is per applied decision):
-        # UPDATE/DELETE on a missing key -> TARGET_NOT_FOUND (ap03),
-        # everything else -> SUCCESS (INSERT on an existing key is the
-        # ap02 dup->update path, still SUCCESS). Under strategy='net' a
-        # net DELETE whose first op was INSERT means the key was created
-        # AND deleted inside this batch: the sequential replay it claims
-        # parity with would log INSERT=SUCCESS then DELETE=SUCCESS, so
-        # the compacted decision is audited SUCCESS too, not
-        # TARGET_NOT_FOUND (ADVICE r4). A batch key's state row
-        # necessarily lives in a touched bucket, so the pruned state is
-        # sufficient for the existence check. mode=overwrite into the
-        # per-batch partition dir makes replays idempotent.
-        state_keys = state.select(F.col("pk").alias("state_pk"))
-        created_in_batch = F.coalesce(
-            F.col("first_op") == "INSERT", F.lit(False)
-        )
-        audit = last.join(
-            state_keys, last.pk == state_keys.state_pk, "left"
-        ).select(
+        created_in_batch = F.coalesce(F.col("first_op") == "INSERT", F.lit(False))
+        decided.select(
             "cdc_seq",
             "pk",
             "operation",
             F.when(
-                F.col("operation").isin("UPDATE", "DELETE")
-                & F.col("state_pk").isNull()
-                & ~created_in_batch,
+                op.isin("UPDATE", "DELETE") & ~exists & ~created_in_batch,
                 "TARGET_NOT_FOUND",
             )
             .otherwise("SUCCESS")
             .alias("status"),
-        )
-        audit.write.mode("overwrite").parquet(
+        ).write.mode("overwrite").parquet(
             os.path.join(self.audit_dir, f"batch_id={batch_id}")
         )
-
-        self._swap_buckets(tmp, touched)
 
 
 def run_stream_pipeline(

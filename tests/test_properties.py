@@ -8,7 +8,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # keep example counts small: each example runs Spark jobs
@@ -1099,6 +1099,80 @@ def test_additive_delta_store_totals_invariant(
 
     got = {r.k: r.n for r in store.totals().collect()}
     assert got == {k: v for k, v in want.items() if v}
+
+
+@given(
+    batches=st.lists(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=5),  # pk
+                st.sampled_from(["INSERT", "UPDATE", "DELETE"]),
+                st.integers(min_value=0, max_value=99),  # val
+            ),
+            min_size=0,
+            max_size=5,
+        ),
+        min_size=1,
+        max_size=4,
+    ),
+    base_keys=st.sets(st.integers(min_value=0, max_value=5), max_size=4),
+    compact_after=st.integers(min_value=-1, max_value=3),
+    replay=st.integers(min_value=0, max_value=3),
+)
+# a fold that deletes every key, then a replay of the folded batch
+@example(
+    batches=[[(0, "DELETE", 0)]], base_keys={0}, compact_after=0, replay=0
+)
+@settings(**_SETTINGS)
+def test_merge_writer_state_matches_per_batch_merge_fold(
+    spark, tmp_path_factory, batches, base_keys, compact_after, replay
+):
+    """ParquetMergeWriter (merge-on-read over LastWinsDeltaStore): for
+    ANY batch split, compaction point and replayed batch,
+    current_state() equals the straight-line fold of
+    merge_final_state over the batches — compaction and replays must be
+    observationally invisible, including folds that delete every key."""
+    from cdc_sync_poc_spark.operators.apply import merge_final_state
+    from cdc_sync_poc_spark.streaming.writer import (
+        ParquetMergeWriter,
+        reduce_batch,
+    )
+
+    root = tmp_path_factory.mktemp("mor_prop")
+    base_ddl = "c_custkey long, c_name string, c_acctbal double"
+    base = spark.createDataFrame(
+        [(k, f"name{k}", float(k)) for k in sorted(base_keys)], base_ddl
+    )
+    writer = ParquetMergeWriter(
+        spark, str(root / "state"), str(root / "audit"), n_buckets=4
+    )
+    writer.init_state(base)
+    frames, seq = [], 0
+    for rows in batches:
+        frames.append(
+            spark.createDataFrame(
+                [(seq + i, pk, op, float(v)) for i, (pk, op, v) in enumerate(rows)],
+                "cdc_seq long, pk long, operation string, val double",
+            )
+        )
+        seq += len(rows)
+
+    want = {tuple(r) for r in base.collect()}
+    for bid, frame in enumerate(frames):
+        writer.apply_batch(frame, bid)
+        if bid == compact_after:
+            writer.store.compact(bid)
+        folded = merge_final_state(
+            spark.createDataFrame(sorted(want), base_ddl),
+            reduce_batch(frame, "last_wins"),
+        )
+        want = {(r.pk, r.name, r.acctbal) for r in folded.collect()}
+    if replay < len(frames):
+        # at-least-once: the batch may already be folded into the base
+        writer.apply_batch(frames[replay], replay)
+
+    got = {(r.pk, r.name, r.acctbal) for r in writer.current_state().collect()}
+    assert got == want
 
 
 @pytest.mark.slow

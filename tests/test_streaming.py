@@ -182,62 +182,105 @@ def test_kafka_reader_options_parity():
     assert custom["maxOffsetsPerTrigger"] == "500"
 
 
-def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
-    """The MERGE writer hash-buckets state by pk and a batch must leave
-    every untouched bucket's files byte-identical (the partition-pruned
-    analog of row-level MERGE); replaying the same batch must not
-    duplicate audit rows and must leave the state unchanged."""
-    import hashlib
-    from pathlib import Path
-
+def _keyed_base(spark, n):
     from pyspark.sql import functions as F
 
-    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
-
-    out = tmp_path / "bucketed"
-    writer = ParquetMergeWriter(
-        spark, str(out / "state"), str(out / "audit"), n_buckets=8
-    )
-    base = spark.range(0, 400).select(
+    return spark.range(0, n).select(
         F.col("id").alias("c_custkey"),
         F.concat(F.lit("name"), F.col("id")).alias("c_name"),
         F.col("id").cast("double").alias("c_acctbal"),
     )
-    writer.init_state(base)
 
-    def bucket_digests():
-        digests = {}
-        for bdir in sorted(Path(out, "state").glob("bucket=*")):
-            h = hashlib.sha256()
-            for f in sorted(bdir.rglob("*.parquet")):
-                h.update(f.name.encode())
-                h.update(f.read_bytes())
-            digests[bdir.name] = h.hexdigest()
-        return digests
 
-    before = bucket_digests()
-    assert len(before) == 8  # 400 keys spread over every bucket
+def _tree_digests(root):
+    """File path -> sha256 of every parquet file under ``root``."""
+    import hashlib
+    from pathlib import Path
 
-    # one UPDATE -> exactly one touched bucket
+    return {
+        str(f.relative_to(root)): hashlib.sha256(f.read_bytes()).hexdigest()
+        for f in sorted(Path(root).rglob("*.parquet"))
+    }
+
+
+def test_merge_batch_writes_one_delta_partition_base_untouched(spark, tmp_path):
+    """Merge-on-read: a batch that does not compact leaves every base
+    file byte-identical and writes ONE delta partition holding one row
+    per applied key — an upsert row, or a tombstone for a DELETE of an
+    existing key; an UPDATE or DELETE of a missing key writes nothing.
+    The base is laid out by pk bucket, so n_buckets stays meaningful."""
+    import pyarrow.parquet as pq
+
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
+
+    out = tmp_path / "mor"
+    writer = ParquetMergeWriter(
+        spark, str(out / "state"), str(out / "audit"), n_buckets=8
+    )
+    writer.init_state(_keyed_base(spark, 400))
+    base_dir = out / "state" / "base"
+    before = _tree_digests(base_dir)
+    buckets = {p.name for p in base_dir.glob("upto=-1/bucket=*")}
+    assert {f"bucket={k}" for k in range(8)} <= buckets
+
     changes = spark.createDataFrame(
-        [(1, 7, "UPDATE", 123.0)], ["cdc_seq", "pk", "operation", "val"]
+        [
+            (1, 7, "UPDATE", 123.0),      # existing -> upsert row
+            (2, 8, "DELETE", None),       # existing -> tombstone
+            (3, 1000, "INSERT", 5.0),     # new -> upsert row
+            (4, 2000, "UPDATE", 6.0),     # missing -> no row
+            (5, 2001, "DELETE", None),    # missing -> no row
+        ],
+        "cdc_seq long, pk long, operation string, val double",
     )
     writer.apply_batch(changes, batch_id=0)
-    after = bucket_digests()
-    changed = {k for k in before if before[k] != after.get(k)}
-    assert len(changed) == 1  # only pk=7's bucket rewritten
-    assert {r.acctbal for r in writer.current_state().filter("pk = 7").collect()} == {
-        123.0
-    }
 
-    # replay the same batch: audit stays one row, state stays identical
+    assert _tree_digests(base_dir) == before
+    deltas = out / "state" / "deltas"
+    assert [p.name for p in deltas.iterdir()] == ["batch_id=0"]
+    rows = pq.read_table(deltas / "batch_id=0").to_pylist()
+    assert sorted((r["pk"], r["deleted"], r["acctbal"]) for r in rows) == [
+        (7, False, 123.0), (8, True, None), (1000, False, 5.0),
+    ]
+    state = {r.pk: (r.name, r.acctbal) for r in writer.current_state().collect()}
+    assert len(state) == 400  # -8, +1000
+    assert state[7] == ("U7", 123.0) and state[1000] == ("U1000", 5.0)
+    assert 8 not in state and 2000 not in state and 2001 not in state
+
+
+def test_replayed_delete_of_existing_key_keeps_audit(spark, tmp_path):
+    """A replayed batch probes the same pre-batch snapshot, so its audit
+    partition is identical — including a DELETE of an existing key,
+    which must stay SUCCESS (not TARGET_NOT_FOUND) after its own first
+    attempt already tombstoned the key. The replay runs on a new writer,
+    as after a restart, and leaves the state unchanged."""
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
+
+    out = tmp_path / "replay"
+    dirs = (str(out / "state"), str(out / "audit"))
+    writer = ParquetMergeWriter(spark, *dirs, n_buckets=8)
+    writer.init_state(_keyed_base(spark, 50))
+    changes = spark.createDataFrame(
+        [(1, 7, "UPDATE", 1.0), (2, 8, "DELETE", None), (3, 99, "DELETE", None)],
+        "cdc_seq long, pk long, operation string, val double",
+    )
+
+    def audit():
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(str(out / "audit" / "batch_id=0")).collect()
+        )
+
     writer.apply_batch(changes, batch_id=0)
-    audit = spark.read.parquet(str(out / "audit"))
-    assert audit.count() == 1
-    assert writer.current_state().count() == 400
-    assert {r.acctbal for r in writer.current_state().filter("pk = 7").collect()} == {
-        123.0
-    }
+    first, state = audit(), sorted(writer.current_state().collect())
+    assert first == [
+        (1, 7, "UPDATE", "SUCCESS"),
+        (2, 8, "DELETE", "SUCCESS"),
+        (3, 99, "DELETE", "TARGET_NOT_FOUND"),
+    ]
+    ParquetMergeWriter(spark, *dirs, n_buckets=8).apply_batch(changes, batch_id=0)
+    assert audit() == first
+    assert sorted(writer.current_state().collect()) == state
 
 
 def test_stream_pipeline_stateful_dedup_variant(spark, stream_dirs):
@@ -267,52 +310,63 @@ def test_stream_pipeline_stateful_dedup_variant(spark, stream_dirs):
     assert got == want
 
 
-def test_crash_between_swap_renames_recovers(spark, tmp_path):
-    """A crash between _swap_buckets' two renames leaves a bucket only
-    as .old.bucket=K (hidden from the parquet reader). The next state
-    read must restore it — without recovery the replay would silently
-    drop every non-batch key in that bucket."""
+@pytest.mark.parametrize("failing_rename", ["live_to_old", "next_to_live"])
+def test_crash_between_compaction_renames_converges(
+    spark, tmp_path, monkeypatch, failing_rename
+):
+    """A compaction swaps the base through SwapStore's two renames. A
+    crash at either rename must converge: the restarted writer heals
+    the swap (roll back, or roll forward from the complete next base),
+    replays the interrupted batch, and lands the same state as a run
+    without the crash — folded delta partitions are never applied
+    twice."""
     import os
-    import shutil
 
-    from pyspark.sql import functions as F
-
+    from cdc_sync_poc_spark.streaming import swapstore
     from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
 
-    out = tmp_path / "crash"
-    writer = ParquetMergeWriter(
-        spark, str(out / "state"), str(out / "audit"), n_buckets=8
-    )
-    base = spark.range(0, 400).select(
-        F.col("id").alias("c_custkey"),
-        F.concat(F.lit("name"), F.col("id")).alias("c_name"),
-        F.col("id").cast("double").alias("c_acctbal"),
-    )
-    writer.init_state(base)
+    monkeypatch.setattr(ParquetMergeWriter, "_compact_at", lambda self: 2)
+    schema = "cdc_seq long, pk long, operation string, val double"
+    batches = [
+        [(0, 1, "UPDATE", 10.0), (1, 2, "DELETE", None)],
+        [(2, 1, "UPDATE", 11.0), (3, 100, "INSERT", 1.0)],
+        [(4, 100, "DELETE", None), (5, 3, "UPDATE", 12.0)],
+    ]
 
-    # crash simulation: rename(live -> .old) committed, rename(new ->
-    # live) lost — the bucket exists only under the hidden name
-    state_dir = out / "state"
-    victim = sorted(state_dir.glob("bucket=*"))[0]
-    os.rename(victim, state_dir / f".old.{victim.name}")
+    def run(out, crash):
+        dirs = (str(out / "state"), str(out / "audit"))
+        writer = ParquetMergeWriter(spark, *dirs, n_buckets=4)
+        writer.init_state(_keyed_base(spark, 20))
+        for bid, rows in enumerate(batches[:2]):
+            writer.apply_batch(spark.createDataFrame(rows, schema), bid)
+        last = spark.createDataFrame(batches[2], schema)
+        if crash:
+            rename = os.rename
+            tmp, cur = writer.store.base.tmp_dir, writer.store.base.cur_dir
+            src = cur if failing_rename == "live_to_old" else tmp
 
-    changes = spark.createDataFrame(
-        [(1, 7, "UPDATE", 123.0)],
-        "cdc_seq long, pk long, operation string, val double",
-    )
-    writer.apply_batch(changes, batch_id=0)
+            def crashing_rename(a, b):
+                if a == src:
+                    raise OSError("simulated crash")
+                rename(a, b)
 
-    state = writer.current_state()
-    assert state.count() == 400  # no keys vanished
-    assert {r.acctbal for r in state.filter("pk = 7").collect()} == {123.0}
-    assert not list(state_dir.glob(".old.bucket=*"))
+            monkeypatch.setattr(swapstore.os, "rename", crashing_rename)
+            with pytest.raises(OSError, match="simulated crash"):
+                writer.apply_batch(last, 2)
+            monkeypatch.setattr(swapstore.os, "rename", rename)
+            writer = ParquetMergeWriter(spark, *dirs, n_buckets=4)  # restart
+        writer.apply_batch(last, 2)
+        assert writer.store.watermark() == 1  # batches 0 and 1 folded
+        return sorted(writer.current_state().collect()), sorted(
+            spark.read.parquet(dirs[1]).collect()
+        )
 
-    # a true leftover (.old alongside its live dir, i.e. crash AFTER the
-    # second rename) is deleted, not restored
-    some = sorted(state_dir.glob("bucket=*"))[0]
-    shutil.copytree(some, state_dir / f".old.{some.name}")
-    assert writer.current_state().count() == 400
-    assert not list(state_dir.glob(".old.bucket=*"))
+    want = run(tmp_path / "clean", crash=False)
+    got = run(tmp_path / "crash", crash=True)
+    assert got == want
+    state = {r.pk: r.acctbal for r in got[0]}
+    assert state[1] == 11.0 and state[3] == 12.0
+    assert 2 not in state and 100 not in state and len(state) == 19
 
 
 def test_stream_final_state_matches_duckdb_oracle(spark, duck, stream_dirs):
