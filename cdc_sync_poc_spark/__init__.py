@@ -19,7 +19,7 @@ Everything is declared through the DataFrame API so Catalyst picks the
 physical plan: broadcast hash joins for the small mapping dimensions,
 whole-stage-codegen column expressions for the row transforms, window
 functions for last-writer-wins, and Structured Streaming (watermark +
-dropDuplicatesWithinWatermark / transformWithState) for the stateful
+dropDuplicatesWithinWatermark / applyInPandasWithState) for the stateful
 loop-guard. No row-at-a-time Python UDFs are used in any hot path; the
 only Python-side kernels are Arrow-batched pandas UDFs (Debezium decimal
 decode, multimodal byte decode).

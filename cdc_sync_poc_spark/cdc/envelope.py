@@ -73,11 +73,11 @@ classified AS (
 """
 
 
-def cdc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Spark twin of CDC_CTE."""
-    from cdc_sync_poc_spark.sources.loader import spread_small_input
-
-    ev = spread_small_input(load_table(spark, sf_dir, "events"))
+def cdc_from_events(events: DataFrame) -> DataFrame:
+    """The Spark twin of CDC_CTE over an ``events``-shaped frame. Every
+    expression is an ordinary Column, so the one derivation serves the
+    batch fixture (``cdc_view``) and an unbounded event stream
+    (``streaming.source.stream_cdc_view``) alike."""
     et = F.col("event_type")
     op = (
         F.when(et == "signup", "c")
@@ -91,7 +91,7 @@ def cdc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("DELETE")
     )
     pk = F.col("user_id") * 11
-    return ev.select(
+    return events.select(
         F.col("event_id").alias("cdc_seq"),
         pk.alias("pk"),
         op.alias("op"),
@@ -106,9 +106,16 @@ def cdc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def cdc_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CDC_CTE over the sf fixture's ``events`` table."""
+    from cdc_sync_poc_spark.sources.loader import spread_small_input
+
+    return cdc_from_events(spread_small_input(load_table(spark, sf_dir, "events")))
+
+
 def classified_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of CLASSIFIED_CTE (loop-walk + validation + existence)."""
-    from cdc_sync_poc_spark.functions.loopguard import with_loop_blocked
+    from cdc_sync_poc_spark.functions.loopguard import stage1_invalid, with_loop_blocked
 
     walk = with_loop_blocked(cdc_view(spark, sf_dir))
     base_keys = (
@@ -120,7 +127,7 @@ def classified_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = walk.join(base_keys, walk.pk == base_keys.c_custkey, "left")
     status = (
         F.when(F.col("loop_blocked"), "LOOP_BLOCKED")
-        .when((F.col("prop_k") > 95) | (F.col("val") < 0.05), "FAILED")
+        .when(stage1_invalid(joined), "FAILED")
         .when(
             F.col("operation").isin("UPDATE", "DELETE")
             & F.col("c_custkey").isNull(),

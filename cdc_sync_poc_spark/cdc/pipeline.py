@@ -8,8 +8,8 @@ mapping-compiler showcase.
     quarantine split (st06) -> last-wins per key (s01) ->
     MERGE apply against the base table (ap01) -> final state
 
-Streaming twin: streaming/pipeline.py (readStream -> watermark ->
-dropDuplicatesWithinWatermark -> foreachBatch MERGE, 5 s trigger).
+Streaming twin: streaming/writer.py::run_stream_pipeline (readStream ->
+loop dedup -> foreachBatch MERGE, 5 s trigger in production).
 """
 
 from __future__ import annotations
@@ -59,17 +59,10 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TARGET_NOT_FOUND classification (a join against base keys) is an
     # apply-time outcome, so the merge join below already decides it;
     # skipping classified_view avoids one broadcast join + distinct.
-    from cdc_sync_poc_spark.functions.loopguard import with_loop_blocked
+    from cdc_sync_poc_spark.functions.loopguard import stage1_invalid, with_loop_blocked
 
     walk = with_loop_blocked(cdc_view(spark, sf_dir))
-    # null-safe: a NULL prop_k row is NOT FAILED (the classified CASE
-    # falls through), so it must stay eligible — coalesce keeps it
-    eligible = walk.filter(
-        ~F.col("loop_blocked")
-        & ~F.coalesce(
-            (F.col("prop_k") > 95) | (F.col("val") < 0.05), F.lit(False)
-        )
-    )
+    eligible = walk.filter(~F.col("loop_blocked") & ~stage1_invalid(walk))
     w = Window.partitionBy("pk").orderBy(F.desc("cdc_seq"))
     last = (
         eligible.select("cdc_seq", "pk", "operation", "val")

@@ -14,32 +14,79 @@ events refresh the state.
 
 This is genuinely beyond SQL window functions (state depends on prior
 *decisions*, not prior rows), so the batch form uses ``applyInPandas``
-keyed by change_hash — the exact sharding a Structured Streaming
-``transformWithState`` operator would use (streaming twin:
-cdc_sync_poc_spark/streaming/dedup.py). Scale: state per key is one
-timestamp; groups are tiny (hash collisions are rare); the shuffle is on
-the high-cardinality hash key so it distributes evenly at 100 TB — no
-skew, no driver involvement.
+keyed by change_hash — the same sharding as its streaming twin,
+``streaming/dedup.stateful_dedup`` (``applyInPandasWithState``). Both
+run the one walk kernel below (``walk_kernel``) on rows flagged by the
+one validity predicate (``stage1_invalid``); only the initial
+last-applied timestamp differs (none in batch, the state store's in a
+stream). Scale: state per key is one timestamp; groups are tiny (hash
+collisions are rare); the shuffle is on the high-cardinality hash key
+so it distributes evenly at 100 TB — no skew, no driver involvement.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 WINDOW_US = 5 * 60 * 1_000_000  # 5 minutes (FN_IS_LOOP interval, :40)
+
+
+def stage1_invalid(df: DataFrame) -> Column:
+    """Stage-1 validation failure (the st06 predicate ``prop_k > 95 OR
+    val < 0.05``), null-safe: a NULL comparison is NOT a failure, the
+    way the oracle's CASE falls through. A frame without ``prop_k`` and
+    ``val`` reads as all-valid."""
+    if not {"prop_k", "val"}.issubset(df.columns):
+        return F.lit(False)
+    return F.coalesce((F.col("prop_k") > 95) | (F.col("val") < 0.05), F.lit(False))
+
+
+def walk_kernel() -> Callable:
+    """The sequential FN_IS_LOOP walk over one hash's rows.
+
+    ``walk(rows, last_applied_us)`` takes the rows (with ``ts``,
+    ``cdc_seq`` and the ``__invalid`` flag) and the last applied time
+    in epoch microseconds (None if the hash was never applied); it
+    returns the rows sorted by (ts, cdc_seq) with ``loop_blocked``
+    added, and the new last applied time. A row is blocked iff it lies
+    strictly within the window of the last applied row; only unblocked
+    valid rows become the last applied row.
+
+    Built per call so that the function is a ``<locals>`` closure:
+    cloudpickle ships it BY VALUE, while a module-level function goes
+    by reference and needs this package importable on every Python
+    worker — not true for a driver session started from an arbitrary
+    working directory."""
+
+    def walk(rows: pd.DataFrame, last_applied_us: int | None):
+        rows = rows.sort_values(["ts", "cdc_seq"])
+        blocked = []
+        for ts, invalid in zip(rows["ts"], rows["__invalid"]):
+            us = ts.value // 1000  # pandas ns -> us
+            if last_applied_us is not None and us - last_applied_us < WINDOW_US:
+                blocked.append(True)
+            else:
+                blocked.append(False)
+                if not invalid:  # stage-1 failures never record the hash
+                    last_applied_us = us
+        rows["loop_blocked"] = blocked
+        return rows, last_applied_us
+
+    return walk
 
 
 def with_loop_blocked(cdc: DataFrame) -> DataFrame:
     """Add boolean ``loop_blocked`` per the sequential greedy semantics.
 
     Input needs columns: change_hash, ts (timestamp), cdc_seq. Output =
-    input columns + loop_blocked, same rows. If ``prop_k`` and ``val``
-    are present, validation-failed rows (prop_k > 95 OR val < 0.05,
-    null-safe — the st06 predicate) can be blocked but never refresh
-    the window (SP_RECORD_HASH is skipped for stage-1 failures);
-    without those columns every row counts as valid.
+    input columns + loop_blocked, same rows. Validation-failed rows
+    (``stage1_invalid``) can be blocked but never refresh the window
+    (SP_RECORD_HASH is skipped for stage-1 failures).
 
     Fast paths: a hash that occurs once can never be blocked, and with a
     high-cardinality content hash that is almost every row — those rows
@@ -56,40 +103,17 @@ def with_loop_blocked(cdc: DataFrame) -> DataFrame:
     state flat vs the pairs-through-pandas version) — the win is at
     scale, where pairs are the dominant duplicate class and keeping
     them JVM-side removes almost all Arrow transfer and Python-worker
-    occupancy from the operator. This mirrors how a transformWithState
-    operator would behave: state only materializes for keys that
-    repeat.
+    occupancy from the operator.
     """
-    from pyspark.sql import functions as F
-
     in_cols = [f.name for f in cdc.schema.fields]
-    has_validity = {"prop_k", "val"}.issubset(cdc.columns)
-    invalid_col = (
-        F.coalesce(
-            (F.col("prop_k") > 95) | (F.col("val") < 0.05), F.lit(False)
-        )
-        if has_validity
-        else F.lit(False)
-    )
-    cdc = cdc.withColumn("__invalid", invalid_col)
+    cdc = cdc.withColumn("__invalid", stage1_invalid(cdc))
     schema = T.StructType(
         list(cdc.schema.fields) + [T.StructField("loop_blocked", T.BooleanType())]
     )
+    kernel = walk_kernel()
 
     def walk(group: pd.DataFrame) -> pd.DataFrame:
-        group = group.sort_values(["ts", "cdc_seq"]).copy()
-        blocked = []
-        last_applied_us = None
-        for ts, invalid in zip(group["ts"], group["__invalid"]):
-            us = ts.value // 1000  # pandas ns -> us
-            if last_applied_us is not None and us - last_applied_us < WINDOW_US:
-                blocked.append(True)
-            else:
-                blocked.append(False)
-                if not invalid:  # stage-1 failures never record the hash
-                    last_applied_us = us
-        group["loop_blocked"] = blocked
-        return group
+        return kernel(group, None)[0]
 
     # The three branches below (dup-set agg, anti join, semi join) each
     # recompute the sha256 change-hash from the raw events during the ONE
@@ -111,7 +135,7 @@ def with_loop_blocked(cdc: DataFrame) -> DataFrame:
     # window; only 3+ chains reach the pandas walk.
     counts = cdc.groupBy("change_hash").agg(F.count("*").alias("__n"))
     # The REPEATED-hash set persists (138 rows at sf0.1 — O(duplicate
-    # keys), exactly the state a transformWithState operator holds):
+    # keys)):
     # the three class filters below would otherwise each re-evaluate
     # the counts agg — three extra scan+hash+shuffle passes over the
     # raw events during the one materialization (measured ~2 s each at

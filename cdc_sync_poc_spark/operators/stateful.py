@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_sync_poc_spark.cdc.envelope import CDC_CTE, _with_walk, cdc_view
-from cdc_sync_poc_spark.functions.loopguard import with_loop_blocked
+from cdc_sync_poc_spark.functions.loopguard import stage1_invalid, with_loop_blocked
 from cdc_sync_poc_spark.registry import register
 
 
@@ -27,7 +27,7 @@ def st01_loop_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (FN_IS_LOOP, poc/asis-oracle/init/04_create_procedures.sql:31-44;
     rationale docs/02-설계/02_무한루프_방지.md:105-194): blocked events do
     not refresh the window. applyInPandas keyed by change_hash — the
-    batch twin of transformWithState (streaming/dedup.py)."""
+    batch twin of streaming/dedup.stateful_dedup."""
     walk = with_loop_blocked(cdc_view(spark, sf_dir))
     return walk.select("cdc_seq", "pk", "change_hash", "loop_blocked")
 
@@ -207,7 +207,7 @@ def st06_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     validates-then-splits: OK rows continue, bad rows route to a
     dead-letter table with SUBSTR(msg,1,500) parity."""
     cdc = cdc_view(spark, sf_dir)
-    invalid = (F.col("prop_k") > 95) | (F.col("val") < 0.05)
+    invalid = stage1_invalid(cdc)
     msg = F.substring(
         F.concat(
             F.lit("VALIDATION: k="),
@@ -282,7 +282,7 @@ def st08_quarantine_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, replay-idempotent by construction (clamping is a fixed
     function of the row)."""
     cdc = cdc_view(spark, sf_dir)
-    q = cdc.filter((F.col("prop_k") > 95) | (F.col("val") < 0.05))
+    q = cdc.filter(stage1_invalid(cdc))
     poison = F.col("prop_k") > 95
     return q.select(
         "cdc_seq",

@@ -1,35 +1,38 @@
 """Streaming loop-prevention (SURVEY §2.6 st01-st03, streaming twins).
 
-Three implementations, by fidelity/need:
+Two tiers, by fidelity:
 
 * ``watermark_dedup`` — built-in ``dropDuplicatesWithinWatermark`` on
   change_hash with a 5-minute watermark: drops any event whose hash was
   seen within the watermark window. State eviction (st03's 10-minute
   SP_CLEANUP_HASH job) is automatic watermark GC — no cleanup job at
   all. This is the production default: fully JVM-side, RocksDB-backed
-  state at scale. (First-seen-wins within the window — NOT the exact
-  sequential semantics; use a stateful variant for that.)
-* ``stateful_dedup`` — ``applyInPandasWithState`` keyed by change_hash:
-  the reference's exact sequential semantics (blocked events do NOT
-  refresh the window — FN_IS_LOOP + SP_RECORD_HASH,
-  poc/asis-oracle/init/04_create_procedures.sql:31-44) AND emits blocked
-  rows (PROCESSED_YN='S' audit parity), with per-hash state carried
-  across micro-batches in the checkpointed store. The working choice in
-  this environment; tested cross-batch in tests/test_tws_dedup.py.
-* ``transform_with_state_dedup`` — the ``transformWithStateInPandas``
-  forward path (adds TTL config); requires the protobuf state server,
-  absent here, so it is HAVE_TWS-gated.
+  state at scale. First-seen-wins within the window — NOT the exact
+  sequential semantics.
+* ``stateful_dedup`` — the reference's exact sequential semantics
+  (blocked and validation-failed events do NOT refresh the window —
+  FN_IS_LOOP + SP_RECORD_HASH,
+  poc/asis-oracle/init/04_create_procedures.sql:31-44), emitting
+  blocked rows for PROCESSED_YN='S' audit parity. Each event's block
+  decision depends on earlier DECISIONS for its hash, so it needs
+  arbitrary per-key state carried across micro-batches; it is
+  ``applyInPandasWithState`` rather than ``transformWithStateInPandas``
+  because the latter's state server needs ``google.protobuf``, which
+  this package does not depend on. The update function
+  runs ``functions/loopguard.walk_kernel`` — the same walk as the batch
+  ``with_loop_blocked`` — seeded with the checkpointed last-applied
+  time.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from cdc_sync_poc_spark.functions.loopguard import stage1_invalid, walk_kernel
 
 LOOP_WINDOW = "5 minutes"  # FN_IS_LOOP interval (:40)
-STATE_TTL_MS = 10 * 60 * 1000  # SP_CLEANUP_HASH retention (:71)
 
 
 def watermark_dedup(cdc: DataFrame, watermark: str = LOOP_WINDOW) -> DataFrame:
@@ -40,166 +43,37 @@ def watermark_dedup(cdc: DataFrame, watermark: str = LOOP_WINDOW) -> DataFrame:
     )
 
 
-try:  # transformWithStateInPandas requires Spark >= 4.0 AND protobuf
-    # (the state-server wire protocol); both absent -> fall back to the
-    # watermark dedup / batch applyInPandas twin
-    import google.protobuf.descriptor  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class LoopGuardProcessor(StatefulProcessor):
-        """Sequential loop-guard with blocked-row emission: per hash key,
-        keep last_applied_us; an event within 5 min of it is emitted with
-        loop_blocked=true and does NOT refresh the state."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            import pyspark.sql.types as T
-
-            self._state = handle.getValueState(
-                "last_applied_us",
-                T.StructType([T.StructField("us", T.LongType())]),
-                ttlDurationMs=STATE_TTL_MS,
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            window_us = 5 * 60 * 1_000_000
-            last = self._state.get()
-            last_us = last[0] if last is not None else None
-            for pdf in rows:
-                pdf = pdf.sort_values(["ts", "cdc_seq"])
-                blocked = []
-                for ts, invalid in zip(pdf["ts"], _invalid_series(pdf)):
-                    us = ts.value // 1000
-                    if last_us is not None and us - last_us < window_us:
-                        blocked.append(True)
-                    else:
-                        blocked.append(False)
-                        if not invalid:
-                            last_us = us
-                out = pdf.copy()
-                out["loop_blocked"] = blocked
-                yield out[_OUT_COLS]
-            if last_us is not None:
-                self._state.update((last_us,))
-
-        def close(self) -> None:
-            pass
-
-    HAVE_TWS = True
-except ImportError:  # pragma: no cover
-    HAVE_TWS = False
-
-
-def transform_with_state_dedup(cdc: DataFrame) -> DataFrame:
-    """Apply LoopGuardProcessor keyed by change_hash (emits every row
-    with a loop_blocked flag — the streaming equivalent of
-    functions/loopguard.with_loop_blocked)."""
-    if not HAVE_TWS:  # pragma: no cover
-        raise NotImplementedError("transformWithStateInPandas needs Spark >= 4.0")
-    out_schema = (
-        "cdc_seq long, pk long, op string, operation string, ts timestamp,"
-        " val double, change_hash string, loop_blocked boolean"
-    )
-    return (
-        cdc.groupBy("change_hash")
-        .transformWithStateInPandas(
-            LoopGuardProcessor(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# applyInPandasWithState variant — the stateful API that works in this
-# environment (transformWithState needs a protobuf-based state server,
-# see HAVE_TWS). Same sequential semantics, state persisted in the
-# checkpoint across micro-batches.
-# ---------------------------------------------------------------------------
-
-_GUARD_STATE_SCHEMA = "last_applied_us LONG"
-_GUARD_OUT_SCHEMA = (
-    "cdc_seq long, pk long, op string, operation string, ts timestamp,"
-    " val double, change_hash string, loop_blocked boolean"
-)
-_OUT_COLS = [
-    "cdc_seq", "pk", "op", "operation", "ts", "val", "change_hash",
-    "loop_blocked",
-]
-
-
-def _invalid_series(pdf: pd.DataFrame) -> pd.Series:
-    """Validation flag per row (st06 predicate, null-safe) — used by the
-    gated Spark-4 LoopGuardProcessor path only; the
-    applyInPandasWithState closure carries its own by-value copy."""
-    if "prop_k" in pdf.columns and "val" in pdf.columns:
-        return (
-            (pdf["prop_k"] > 95) | (pdf["val"] < 0.05)
-        ).fillna(False).astype(bool)
-    return pd.Series(False, index=pdf.index)
-
-
-def _make_guard_fn():
-    """Build the applyInPandasWithState update function as a
-    ``<locals>`` closure so cloudpickle ships it (and its helper) BY
-    VALUE — a module-level function is pickled by reference and would
-    require this package importable on every executor, which is not
-    true for a driver session built from an arbitrary cwd."""
-
-    def invalid_series(pdf: pd.DataFrame) -> pd.Series:
-        # validation flag per row (st06 predicate, null-safe): rows
-        # failing stage-1 validation never record their hash, so they
-        # must not refresh the guard window; streams without
-        # prop_k/val treat all rows valid
-        if "prop_k" in pdf.columns and "val" in pdf.columns:
-            return (
-                (pdf["prop_k"] > 95) | (pdf["val"] < 0.05)
-            ).fillna(False).astype(bool)
-        return pd.Series(False, index=pdf.index)
-
-    out_cols = list(_OUT_COLS)
-
-    def guard_fn(key, pdfs, state):
-        # greedy loop-guard with persistent per-hash state: blocked
-        # events do NOT refresh the window, and neither do
-        # validation-failed events (FN_IS_LOOP + SP_RECORD_HASH
-        # semantics; strictly-within boundary)
-        window_us = 5 * 60 * 1_000_000
-        last = state.get[0] if state.exists else None
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "cdc_seq"])
-        blocked = []
-        for ts, invalid in zip(rows["ts"], invalid_series(rows)):
-            us = ts.value // 1000
-            if last is not None and us - last < window_us:
-                blocked.append(True)
-            else:
-                blocked.append(False)
-                if not invalid:
-                    last = us
-        if last is not None:
-            state.update((int(last),))
-        out = rows.copy()
-        out["loop_blocked"] = blocked
-        yield out[out_cols]
-
-    return guard_fn
-
-
 def stateful_dedup(cdc: DataFrame) -> DataFrame:
     """Streaming loop-guard via applyInPandasWithState keyed by
     change_hash: emits every row with a loop_blocked flag, carrying
     last-applied state across micro-batches through the checkpointed
-    state store. This is the working streaming twin of
-    functions/loopguard.with_loop_blocked in this environment."""
+    state store. The streaming twin of
+    functions/loopguard.with_loop_blocked: same validity flag, same
+    walk kernel."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return cdc.groupBy("change_hash").applyInPandasWithState(
-        _make_guard_fn(),
-        outputStructType=_GUARD_OUT_SCHEMA,
-        stateStructType=_GUARD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    kernel = walk_kernel()
+
+    def guard_fn(key, pdfs, state):
+        rows, last = kernel(
+            pd.concat(list(pdfs)), state.get[0] if state.exists else None
+        )
+        if last is not None:
+            state.update((int(last),))
+        yield rows
+
+    flagged = cdc.withColumn("__invalid", stage1_invalid(cdc))
+    schema = T.StructType(
+        list(flagged.schema.fields) + [T.StructField("loop_blocked", T.BooleanType())]
+    )
+    return (
+        flagged.groupBy("change_hash")
+        .applyInPandasWithState(
+            guard_fn,
+            outputStructType=schema,
+            stateStructType="last_applied_us LONG",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        .drop("__invalid")
     )

@@ -206,7 +206,7 @@ class Scd2StreamWriter:
             "cdc_seq",
             "pk",
             "operation",
-            F.expr("unix_micros(ts) div 1000").alias("ts_ms"),
+            "ts_ms",
             "val",
         )
         batch_pks = rows.select("pk").distinct()

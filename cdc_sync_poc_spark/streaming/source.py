@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdc_sync_poc_spark.cdc.envelope import cdc_from_events
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -92,36 +94,9 @@ def kafka_event_stream(
     return reader.load()
 
 
-def stream_cdc_view(events: DataFrame) -> DataFrame:
-    """The streaming twin of cdc.envelope.cdc_view — same expressions,
-    applied to an unbounded DataFrame (they are ordinary Column exprs, so
-    they work identically on batch and stream)."""
-    from cdc_sync_poc_spark.functions.hashing import change_hash
-
-    et = F.col("event_type")
-    op = (
-        F.when(et == "signup", "c")
-        .when(et == "view", "r")
-        .when(et.isin("click", "purchase"), "u")
-        .otherwise("d")
-    )
-    operation = (
-        F.when(et.isin("signup", "view"), "INSERT")
-        .when(et.isin("click", "purchase"), "UPDATE")
-        .otherwise("DELETE")
-    )
-    pk = F.col("user_id") * 11
-    return events.select(
-        F.col("event_id").alias("cdc_seq"),
-        pk.alias("pk"),
-        op.alias("op"),
-        operation.alias("operation"),
-        F.col("ts"),
-        F.col("value").alias("val"),
-        change_hash(
-            "customer", pk, operation, F.format_string("%.2f", F.col("value"))
-        ).alias("change_hash"),
-    )
+# The CDC column derivation of cdc.envelope.cdc_view, applied to an
+# unbounded events frame: one definition for batch and stream.
+stream_cdc_view = cdc_from_events
 
 
 def parse_envelopes_permissive(raw: DataFrame, json_col: str = "json"):

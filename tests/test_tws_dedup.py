@@ -1,59 +1,98 @@
-"""transformWithStateInPandas loop-guard: the streaming operator that
-reproduces the reference's sequential dedup semantics AND emits blocked
-rows (batch twin: functions/loopguard.with_loop_blocked)."""
+"""Streaming loop-guard (streaming/dedup.stateful_dedup): the reference's
+sequential dedup semantics with blocked rows emitted and per-hash state
+carried across micro-batches (batch twin:
+functions/loopguard.with_loop_blocked)."""
 
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 
 
-@pytest.mark.skipif(
-    not __import__(
-        "cdc_sync_poc_spark.streaming.dedup", fromlist=["HAVE_TWS"]
-    ).HAVE_TWS,
-    reason="transformWithStateInPandas unavailable",
-)
-def test_tws_loopguard_matches_batch_semantics(spark, tmp_path):
-    from cdc_sync_poc_spark.streaming.dedup import transform_with_state_dedup
-    from cdc_sync_poc_spark.streaming.source import file_event_stream, stream_cdc_view
+def test_stateful_dedup_matches_batch_walk_and_oracle_across_files(spark, tmp_path):
+    """Three files -> three micro-batches through stateful_dedup. The
+    stream flags equal the batch with_loop_blocked over the same rows
+    and the DuckDB WALK_CTES oracle:
 
-    # one user repeating the same payload -> same hash; gaps 3/6/20 min
-    pdf = pd.DataFrame(
-        {
-            "event_id": [0, 1, 2, 3, 4],
-            "ts": pd.to_datetime(
-                [
-                    "2024-01-01 00:00:00",
-                    "2024-01-01 00:03:00",  # within 5 min of applied e0 -> blocked
-                    "2024-01-01 00:06:00",  # >5 min after e0 (e1 blocked) -> applied
-                    "2024-01-01 00:26:00",  # far out -> applied
-                    "2024-01-01 00:26:30",  # different payload -> applied
-                ]
-            ).astype("datetime64[us]"),
-            "user_id": [1, 1, 1, 1, 1],
-            "event_type": ["click"] * 5,
-            "value": [10.0, 10.0, 10.0, 10.0, 42.0],
-            "props": ['{"k": 1}'] * 5,
-        }
+    * hash A (user 1): gaps 3/6/20 min, a 4-chain across all three
+      files — the blocked +3 min event does not refresh the window, so
+      +6 min is applied;
+    * hash B (user 2): an invalid first event (k=99) never records the
+      hash, so its valid repeat 3 min later, in the next file, is
+      applied; +3 min after that is blocked;
+    * hash C (user 3): a gap of exactly 5 min is NOT blocked (strictly
+      within), 4:59 after that is."""
+    import os
+
+    import duckdb
+
+    from cdc_sync_poc_spark.cdc.envelope import CDC_CTE
+    from cdc_sync_poc_spark.functions.loopguard import WALK_CTES, with_loop_blocked
+    from cdc_sync_poc_spark.streaming.dedup import stateful_dedup
+    from cdc_sync_poc_spark.streaming.source import (
+        EVENT_SCHEMA,
+        file_event_stream,
+        stream_cdc_view,
     )
-    in_dir = tmp_path / "tws_in"
-    in_dir.mkdir()
-    pdf.to_parquet(in_dir / "part-0.parquet")
 
-    cdc = stream_cdc_view(file_event_stream(spark, str(in_dir)))
-    guarded = transform_with_state_dedup(cdc)
-    rows = []
+    def events(rows):
+        ids, ts, users, values, ks = zip(*rows)
+        return pd.DataFrame(
+            {
+                "event_id": list(ids),
+                "ts": pd.to_datetime(["2024-01-01 " + t for t in ts]).astype(
+                    "datetime64[us]"
+                ),
+                "user_id": list(users),
+                "event_type": ["click"] * len(ids),
+                "value": list(values),
+                "props": [f'{{"k": {k}}}' for k in ks],
+            }
+        )
+
+    files = [
+        [(0, "00:00:00", 1, 10.0, 1), (10, "01:00:00", 2, 20.0, 99),
+         (20, "02:00:00", 3, 30.0, 1)],
+        [(1, "00:03:00", 1, 10.0, 1), (2, "00:06:00", 1, 10.0, 1),
+         (11, "01:03:00", 2, 20.0, 1), (21, "02:05:00", 3, 30.0, 1)],
+        [(3, "00:26:00", 1, 10.0, 1), (4, "00:26:30", 1, 42.0, 1),
+         (12, "01:06:00", 2, 20.0, 1), (22, "02:09:59", 3, 30.0, 1)],
+    ]
+    in_dir = tmp_path / "chain_in"
+    in_dir.mkdir()
+    for i, rows in enumerate(files):
+        path = in_dir / f"part-{i}.parquet"
+        events(rows).to_parquet(path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))  # file order
+
+    got = []
     q = (
-        guarded.writeStream.foreachBatch(lambda df, _b: rows.extend(df.collect()))
+        stateful_dedup(stream_cdc_view(file_event_stream(spark, str(in_dir))))
+        .writeStream.foreachBatch(lambda df, _b: got.extend(df.collect()))
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
+    stream = {r.cdc_seq: r.loop_blocked for r in got}
 
-    got = {r.cdc_seq: r.loop_blocked for r in rows}
-    assert got == {0: False, 1: True, 2: False, 3: False, 4: False}
+    batch_cdc = stream_cdc_view(spark.read.schema(EVENT_SCHEMA).parquet(str(in_dir)))
+    batch = {r.cdc_seq: r.loop_blocked for r in with_loop_blocked(batch_cdc).collect()}
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{in_dir}/*.parquet'")
+    oracle = dict(
+        con.sql(
+            f"WITH RECURSIVE {CDC_CTE}, {WALK_CTES} SELECT cdc_seq, loop_blocked FROM walk"
+        ).fetchall()
+    )
+    con.close()
+
+    assert stream == {
+        0: False, 1: True, 2: False, 3: False, 4: False,
+        10: False, 11: False, 12: True,
+        20: False, 21: False, 22: True,
+    }
+    assert stream == batch == oracle
 
 
 def test_stateful_dedup_carries_state_across_microbatches(spark, tmp_path):
