@@ -9,7 +9,7 @@ population is worse than the target (more files than ``ceil(bytes /
 target_bytes)``) into exactly that many files, via coalesce — a
 map-only rewrite, no shuffle — and swaps the directory atomically
 (write to a sibling temp dir, rename old out, rename new in; the same
-crash-recoverable two-phase swap as the CDC writer's state buckets).
+crash-recoverable two-phase swap as streaming/swapstore.py::SwapStore).
 Partitions already at or under the target file count are NOT touched —
 compaction cost is proportional to the debris, not the lake.
 

@@ -260,8 +260,8 @@ class StreamingIVFIndex:
         as the corpus grows (emb_index_growth's ``needs_split`` is the
         trigger; this is the action).
 
-        Protocol (journal-first, the scd2 marker idiom — every step
-        idempotent, any crash healed by heal_splits() / a re-run):
+        Protocol (journal-first — every step idempotent, any crash
+        healed by heal_splits() / a re-run):
 
         1. compact() everything, so the cell's rows live in ONE base;
         2. derive the sub-quantizer deterministically from the cell's

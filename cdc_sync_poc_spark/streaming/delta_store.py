@@ -37,9 +37,10 @@ Four fold disciplines share that skeleton:
   (``base_partition_by``) keeps key-pruned probes — e.g. the IVF
   cell_id layout — pruning at planning time after compaction too.
 * :class:`LastWinsDeltaStore` — keyed last-writer-wins rows with
-  tombstones (the MERGE target of streaming/writer.py): each delta row
-  is a resolved decision for its key, the newest row per key by
-  ``batch_id`` decides, folding keeps that row and drops tombstones.
+  tombstones (the MERGE target of streaming/writer.py and the open
+  versions of streaming/scd2.py): each delta row is a resolved
+  decision for its key, the newest row per key by ``batch_id``
+  decides, folding keeps that row and drops tombstones.
 """
 
 from __future__ import annotations
@@ -405,6 +406,12 @@ class AppendDeltaStore(_DeltaStoreBase):
         return rows
 
 
+def pk_bucket_col(col: F.Column, n_buckets: int) -> F.Column:
+    """Deterministic key bucket (stable across batches, retries and
+    engines): the one definition of the bucketed base layout."""
+    return F.pmod(F.xxhash64(col.cast("long")), F.lit(n_buckets))
+
+
 class LastWinsDeltaStore(_DeltaStoreBase):
     """Keyed last-writer-wins state with tombstones — MERGE as
     merge-on-read. A delta row is a resolved decision for its key: a
@@ -419,9 +426,10 @@ class LastWinsDeltaStore(_DeltaStoreBase):
     Newest-row-wins is idempotent, so a replayed batch that re-derives
     its partition from the same snapshot changes nothing.
 
-    The base is laid out as ``upto=U/<base_partition_by>/``: the
-    watermark is one directory listing (:meth:`watermark`), not a
-    Spark job, because the MERGE writer needs it every micro-batch.
+    The base is laid out as ``upto=U/bucket=K/`` (``n_buckets`` hash
+    buckets of the key): the watermark is one directory listing
+    (:meth:`watermark`), not a Spark job, because a writer needs it
+    every micro-batch, and a probe of few keys opens few buckets.
     ``ddl`` types the key and value columns, so no read infers a schema.
     """
 
@@ -429,24 +437,28 @@ class LastWinsDeltaStore(_DeltaStoreBase):
         self,
         spark: SparkSession,
         root: str,
-        key_cols: list[str],
+        key: str,
         ddl: str,
-        base_partition_by: list[str] | None = None,
+        n_buckets: int = 16,
         deltas_name: str = "deltas",
         base_name: str = "base",
     ) -> None:
         schema = spark.createDataFrame(
-            [], f"{ddl}, deleted boolean, batch_id long"
+            [], f"{ddl}, bucket long, deleted boolean, batch_id long"
         ).schema
         super().__init__(
             spark, root, schema.fieldNames(), deltas_name, base_name
         )
-        self.key_cols = list(key_cols)
-        self.base_partition_by = ["upto", *(base_partition_by or [])]
+        self.key = key
+        self.n_buckets = n_buckets
+        self.base_partition_by = ["upto", "bucket"]
         self.delta_schema = schema
         self.base_schema = StructType(
             [*schema.fields, StructField("upto", LongType())]
         )
+
+    def _bucket(self) -> F.Column:
+        return pk_bucket_col(F.col(self.key), self.n_buckets)
 
     def watermark(self) -> int | None:
         """The base's ``upto`` (None before the first base exists)."""
@@ -476,8 +488,11 @@ class LastWinsDeltaStore(_DeltaStoreBase):
         never an old delta outranking the new base."""
         if os.path.isdir(self.deltas_dir):
             shutil.rmtree(self.deltas_dir)
-        base = rows.withColumn("deleted", F.lit(False)).withColumn(
-            "batch_id", F.lit(-1).cast("long")
+        base = rows.select(
+            "*",
+            self._bucket().alias("bucket"),
+            F.lit(False).alias("deleted"),
+            F.lit(-1).cast("long").alias("batch_id"),
         )
         self.base.swap(
             self._with_watermark_row(base).withColumn(
@@ -489,11 +504,11 @@ class LastWinsDeltaStore(_DeltaStoreBase):
     def write_delta(self, df: DataFrame, batch_id: int) -> None:
         """Persist one batch's decisions (key + value columns and
         ``deleted``, one row per key) under its own partition."""
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.deltas_dir, f"batch_id={batch_id}")
-        )
+        df.withColumn("bucket", self._bucket()).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.deltas_dir, f"batch_id={batch_id}"))
 
-    def rows(self, upto: int | None, before: int | None = None) -> DataFrame | None:
+    def rows(self, upto: int | None, before: int | None = None) -> DataFrame:
         """Base rows plus the live deltas ``upto < batch_id < before``
         (``upto`` as returned by :meth:`watermark`; no upper bound when
         ``before`` is None), unreduced — several rows per key."""
@@ -505,27 +520,81 @@ class LastWinsDeltaStore(_DeltaStoreBase):
                 live &= F.col("batch_id") < before
             deltas = deltas.filter(live).select(*self.cols)
         if base is None:
+            if deltas is None:
+                return self.spark.createDataFrame([], self.delta_schema)
             return deltas
         base = base.select(*self.cols)
         return base if deltas is None else base.unionByName(deltas)
 
-    def _newest(self, rows: DataFrame) -> DataFrame:
+    def begin_batch(
+        self, keys: DataFrame, batch_id: int, compact_at: int
+    ) -> DataFrame | None:
+        """The batch-start step of a writer over this store: the rows of
+        the pre-batch snapshot (base plus deltas ``upto < batch_id <
+        N``, unreduced) for the batch's ``keys`` (a frame of the key
+        column). None when there is nothing to write: the batch is at
+        or below the watermark (it was applied in full before it was
+        folded, so its replay is a no-op), or ``keys`` is empty.
+
+        Once ``compact_at`` delta partitions older than the batch are
+        live it first compacts them (``batch_id <= N-1``; the running
+        batch is never folded, so a replay sees the same snapshot). The
+        probe opens only the base buckets holding batch keys, never the
+        watermark row's, so its cost is set by the number of changed
+        keys."""
+        upto = self.watermark()
+        if upto is not None and batch_id <= upto:
+            return None
+        pending = [b for b in self.newer_deltas(upto) if b < batch_id]
+        if len(pending) >= compact_at:
+            self.compact(batch_id - 1)
+            upto = batch_id - 1
+        buckets = {r[0] for r in keys.select(self._bucket()).collect()}
+        if not buckets:
+            return None
+        return (
+            self.rows(upto, before=batch_id)
+            .filter(F.col("bucket").isin(sorted(buckets)))
+            .join(F.broadcast(keys), self.key, "left_semi")
+        )
+
+    def newest(self, rows: DataFrame) -> DataFrame:
         """Each key's newest row (tombstones included): one hash
         aggregate, no sort."""
-        rest = [c for c in self.cols if c not in self.key_cols]
-        return rows.groupBy(*self.key_cols).agg(
+        rest = [c for c in self.cols if c != self.key]
+        return rows.groupBy(self.key).agg(
             F.max_by(F.struct(*rest), "batch_id").alias("r")
-        ).select(*self.key_cols, *[F.col(f"r.{c}").alias(c) for c in rest])
+        ).select(self.key, *[F.col(f"r.{c}").alias(c) for c in rest])
 
     def _fold(self, rows: DataFrame) -> DataFrame:
         return self._with_watermark_row(
-            self._newest(rows).filter(~F.col("deleted"))
+            self.newest(rows).filter(~F.col("deleted"))
         )
 
-    def live(self) -> DataFrame | None:
+    def live(self) -> DataFrame:
         """Current state: each key's newest row over base + live
-        deltas, tombstones dropped (None for a never-reset store)."""
-        rows = self.rows(self.watermark())
-        if rows is None:
-            return None
-        return self._newest(rows).filter(~F.col("deleted"))
+        deltas, tombstones dropped."""
+        return self.newest(self.rows(self.watermark())).filter(
+            ~F.col("deleted")
+        )
+
+
+class LastWinsWriter:
+    """Base of the foreachBatch writers kept in a
+    :class:`LastWinsDeltaStore` (``self.store``): the MERGE writer and
+    the SCD2 history writer. Each batch starts with
+    ``self.store.begin_batch(keys, batch_id, self._compact_at())``."""
+
+    spark: SparkSession
+    store: LastWinsDeltaStore
+
+    def _compact_at(self) -> int:
+        """Live delta partitions that trigger a compaction: Spark's
+        serial-listing limit. Past it every read of the deltas lists
+        them with a distributed Spark job, so a batch would pay a job
+        of listing before it reads a row."""
+        return int(
+            self.spark.conf.get(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+            )
+        )

@@ -33,9 +33,10 @@ exactly-once):
   of it, and compaction never folds the running batch. A replay
   therefore overwrites both of N's partitions with the same rows,
   audit statuses included.
-* compaction (``LastWinsDeltaStore.compact``, at the start of a batch
-  N once ``_compact_at`` delta partitions are live, folding batches
-  <= N-1) swaps the base atomically through
+* compaction (``LastWinsDeltaStore.begin_batch``, the batch-start
+  step this writer shares with the SCD2 writer: at the start of a
+  batch N once ``_compact_at`` delta partitions are live, folding
+  batches <= N-1) swaps the base atomically through
   SwapStore with the watermark inside it; a crash between its renames
   is healed before the next read, and folded-but-not-yet-deleted
   partitions are ignored by the watermark. A batch at or below the
@@ -50,7 +51,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cdc_sync_poc_spark.streaming.delta_store import LastWinsDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import (
+    LastWinsDeltaStore,
+    LastWinsWriter,
+)
 
 
 def reduce_batch(changes: DataFrame, strategy: str) -> DataFrame:
@@ -92,15 +96,7 @@ def reduce_batch(changes: DataFrame, strategy: str) -> DataFrame:
     )
 
 
-def pk_bucket_col(col: F.Column, n_buckets: int) -> F.Column:
-    """Deterministic pk bucket (stable across batches/retries/engines)
-    — the ONE definition of the bucketed-state layout, shared by
-    ParquetMergeWriter and the SCD2 writer's bucketed open store so
-    the two can never drift apart."""
-    return F.pmod(F.xxhash64(col.cast("long")), F.lit(n_buckets))
-
-
-class ParquetMergeWriter:
+class ParquetMergeWriter(LastWinsWriter):
     """MERGE-into-parquet state maintainer for foreachBatch: one delta
     partition per micro-batch over a pk-hash-bucketed compacted base."""
 
@@ -129,14 +125,9 @@ class ParquetMergeWriter:
         #   create-or-update, exactly how INSERT is treated).
         self.strategy = strategy
         self.store = LastWinsDeltaStore(
-            spark, state_dir, ["pk"],
-            "pk long, name string, acctbal double, bucket long",
-            base_partition_by=["bucket"],
+            spark, state_dir, "pk", "pk long, name string, acctbal double",
+            n_buckets,
         )
-
-    def _bucket(self, col: F.Column) -> F.Column:
-        """Deterministic bucket for a pk (stable across batches/retries)."""
-        return pk_bucket_col(col, self.n_buckets)
 
     def init_state(self, base: DataFrame) -> None:
         self.store.reset(
@@ -144,35 +135,18 @@ class ParquetMergeWriter:
                 F.col("c_custkey").cast("long").alias("pk"),
                 F.col("c_name").cast("string").alias("name"),
                 F.col("c_acctbal").cast("double").alias("acctbal"),
-            ).withColumn("bucket", self._bucket(F.col("pk")))
+            )
         )
 
     def current_state(self) -> DataFrame:
         return self.store.live().select("pk", "name", "acctbal")
 
-    def _compact_at(self) -> int:
-        """Live delta partitions that trigger a compaction: Spark's
-        serial-listing limit. Past it every read of the deltas lists
-        them with a distributed Spark job, so a batch would pay a job
-        of listing before it reads a row."""
-        return int(
-            self.spark.conf.get(
-                "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
-            )
-        )
-
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        """The foreachBatch body: compact if due -> reduce -> probe the
-        pre-batch snapshot -> delta partition + audit partition."""
+        """The foreachBatch body: reduce -> the store's batch-start step
+        (compact if due, probe the pre-batch snapshot) -> decide ->
+        delta partition + audit partition."""
         from cdc_sync_poc_spark.streaming.util import persisted
 
-        upto = self.store.watermark()
-        if upto is not None and batch_id <= upto:
-            return  # folded into the base, so applied in full already
-        pending = [b for b in self.store.newer_deltas(upto) if b < batch_id]
-        if len(pending) >= self._compact_at():
-            self.store.compact(batch_id - 1)
-            upto = batch_id - 1
         # ``last`` and ``decided`` hold one row per changed key, a count
         # the source's per-trigger cap bounds, so each is cached as ONE
         # partition: cached plans keep their shuffle partitioning (AQE
@@ -180,16 +154,11 @@ class ParquetMergeWriter:
         # would cost every job over them that many tasks and every
         # delta/audit partition that many files
         with persisted(reduce_batch(changes, self.strategy).coalesce(1)) as last:
-            buckets = {r[0] for r in last.select(self._bucket(F.col("pk"))).collect()}
-            if not buckets:
-                return
-            # partition pruning: the probe opens only the base buckets
-            # holding batch keys (and never the watermark row's)
-            snap = (
-                self.store.rows(upto, before=batch_id)
-                .filter(F.col("bucket").isin(sorted(buckets)))
-                .join(F.broadcast(last.select("pk")), "pk", "left_semi")
+            snap = self.store.begin_batch(
+                last.select("pk"), batch_id, self._compact_at()
             )
+            if snap is None:
+                return
             with persisted(self._decide(last, snap).coalesce(1)) as decided:
                 self._write(decided, batch_id)
 
@@ -240,7 +209,6 @@ class ParquetMergeWriter:
                     "name"
                 ),
                 F.when(~deleted, F.col("val")).alias("acctbal"),
-                self._bucket(pk).alias("bucket"),
                 deleted.alias("deleted"),
             ),
             batch_id,

@@ -1175,6 +1175,83 @@ def test_merge_writer_state_matches_per_batch_merge_fold(
     assert got == want
 
 
+def _scd2_reference(events):
+    """Straight-line ap07: per pk in cdc_seq order, every non-DELETE
+    event opens a version that the pk's next event closes."""
+    by_pk: dict[int, list] = {}
+    for seq, pk, op, ts, val in sorted(events):
+        by_pk.setdefault(pk, []).append((seq, op, ts, val))
+    out = set()
+    for pk, evs in by_pk.items():
+        for i, (seq, op, ts, val) in enumerate(evs):
+            if op == "DELETE":
+                continue
+            nxt = evs[i + 1][2] if i + 1 < len(evs) else None
+            out.add((seq, pk, val, ts, nxt, nxt is None))
+    return out
+
+
+@given(
+    batches=st.lists(
+        st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=5),  # pk
+                st.sampled_from(["INSERT", "UPDATE", "DELETE"]),
+                st.integers(min_value=0, max_value=99),  # val
+            ),
+            min_size=0,
+            max_size=5,
+        ),
+        min_size=1,
+        max_size=4,
+    ),
+    compact_after=st.integers(min_value=-1, max_value=3),
+    replay=st.integers(min_value=0, max_value=3),
+)
+# a fold that deletes every key, then a replay of the folded batch
+@example(
+    batches=[[(0, "INSERT", 1)], [(0, "DELETE", 0)]], compact_after=1, replay=1
+)
+@settings(**_SETTINGS)
+def test_scd2_writer_history_matches_lead_reference(
+    spark, tmp_path_factory, batches, compact_after, replay
+):
+    """Scd2StreamWriter (merge-on-read over LastWinsDeltaStore): for ANY
+    batch split, compaction point and replayed batch, history() equals
+    a plain-Python lead() over the concatenated events — compaction
+    and replays must be observationally invisible, including folds
+    that delete every key."""
+    from cdc_sync_poc_spark.streaming.scd2 import Scd2StreamWriter
+
+    writer = Scd2StreamWriter(spark, str(tmp_path_factory.mktemp("scd2_prop")))
+    events, frames = [], []
+    for rows in batches:
+        batch = [
+            (len(events) + i, pk, op, 1000 * (len(events) + i), float(v))
+            for i, (pk, op, v) in enumerate(rows)
+        ]
+        events += batch
+        frames.append(
+            spark.createDataFrame(
+                batch,
+                "cdc_seq long, pk long, operation string, ts_ms long, val double",
+            )
+        )
+    for bid, frame in enumerate(frames):
+        writer.apply_batch(frame, bid)
+        if bid == compact_after:
+            writer.store.compact(bid)
+    if replay < len(frames):
+        # at-least-once: the batch may already be folded into the base
+        writer.apply_batch(frames[replay], replay)
+
+    got = {
+        (r.version_seq, r.pk, r.val, r.valid_from_ms, r.valid_to_ms, r.is_current)
+        for r in writer.history().collect()
+    }
+    assert got == _scd2_reference(events)
+
+
 @pytest.mark.slow
 @given(
     owners=st.lists(

@@ -846,256 +846,98 @@ def test_scd2_stream_matches_batch_ap07(spark, chunked_events, tmp_path):
     assert any(not r[5] for r in got)   # and closed ones
 
 
-@pytest.mark.slow
-def test_scd2_replay_and_crash_windows_are_idempotent(spark, tmp_path):
-    """Exactly-once under foreachBatch at-least-once: (a) a fully
-    committed batch replayed verbatim is a no-op (commit marker), and
-    (b) a crash AFTER the closed-partition write but BEFORE the open
-    swap (simulated by restoring the pre-batch open store) replays to
-    the identical history."""
-    import shutil as sh
+def _scd2_chunks(spark, n):
+    """The sf0.001 CDC view split into ``n`` batches by cdc_seq, so each
+    key's events stay ordered across batches."""
+    from pyspark.sql import functions as F
 
     from cdc_sync_poc_spark.cdc.envelope import cdc_view
-    from cdc_sync_poc_spark.operators.scd import ap07_scd2_history
-    from cdc_sync_poc_spark.streaming.scd2 import Scd2StreamWriter
 
-    out = tmp_path / "scd2_crash"
-    writer = Scd2StreamWriter(spark, str(out))
     cdc = cdc_view(spark, SF_DIR)
-    n = cdc.count()
-    chunks = [
-        cdc.orderBy("cdc_seq").limit((i + 1) * n // 3).subtract(
-            cdc.orderBy("cdc_seq").limit(i * n // 3)
-        )
-        for i in range(3)
+    seqs = sorted(r[0] for r in cdc.select("cdc_seq").collect())
+    cuts = [seqs[i * len(seqs) // n] for i in range(n)] + [seqs[-1] + 1]
+    return [
+        cdc.filter((F.col("cdc_seq") >= lo) & (F.col("cdc_seq") < hi))
+        for lo, hi in zip(cuts, cuts[1:])
     ]
-    writer.apply_batch(chunks[0], 0)
-    writer.apply_batch(chunks[1], 1)
-
-    # snapshot the pre-batch-2 open store, then run batch 2 fully
-    open_dir = writer.open_store.cur_dir
-    sh.copytree(open_dir, str(tmp_path / "open_snapshot"))
-    writer.apply_batch(chunks[2], 2)
-    want = _hist_set(writer.history())
-
-    # (a) replay of a committed batch is a no-op
-    writer.apply_batch(chunks[2], 2)
-    assert _hist_set(writer.history()) == want
-
-    # (b) crash window: closed/batch_id=2 written, open swap lost
-    sh.rmtree(open_dir)
-    sh.copytree(str(tmp_path / "open_snapshot"), open_dir)
-    writer.apply_batch(chunks[2], 2)
-    assert _hist_set(writer.history()) == want
-
-    # and the final history is the batch ap07 answer
-    assert want == _hist_set(ap07_scd2_history(spark, SF_DIR))
 
 
-@pytest.mark.slow
-def test_scd2_bucketed_matches_whole_swap(spark, chunked_events, tmp_path):
-    """VERDICT r8 #8: the bucketed MVCC open store produces the exact
-    whole-swap history (== batch ap07), while touching only changed
-    buckets per batch and keeping one committed version per bucket."""
+@pytest.mark.parametrize(
+    "case",
+    ["closed_written_delta_lost", "delta_written_closed_lost",
+     "compaction_rename_crash", "empty_first_batch"],
+)
+def test_scd2_crash_windows_converge_to_ap07(spark, tmp_path, monkeypatch, case):
+    """Exactly-once under foreachBatch at-least-once: batch N owns its
+    delta and closed partitions and re-derives both from the pre-batch
+    snapshot, so a restarted writer that replays N lands on batch ap07
+    whichever write a crash lost, and a crash between the compaction
+    swap's two renames is healed by the replayed batch."""
     import os
 
     from cdc_sync_poc_spark.operators.scd import ap07_scd2_history
-    from cdc_sync_poc_spark.streaming.scd2 import run_scd2_stream
-
-    q, writer = run_scd2_stream(
-        spark, chunked_events, str(tmp_path / "scd2_b"), n_buckets=8
-    )
-    q.awaitTermination(180)
-    got = _hist_set(writer.history())
-    assert got == _hist_set(ap07_scd2_history(spark, SF_DIR))
-    # post-prune: exactly one committed version per bucket remains
-    for b in os.listdir(writer.buckets_dir):
-        if b.startswith("bucket="):
-            vs = [
-                v
-                for v in os.listdir(os.path.join(writer.buckets_dir, b))
-                if v.startswith("v=")
-            ]
-            assert len(vs) == 1, (b, vs)
-
-
-@pytest.mark.slow
-def test_scd2_bucketed_crash_windows_are_idempotent(spark, tmp_path):
-    """Bucketed-mode exactly-once: (a) replay of a committed batch is a
-    no-op (marker), and (b) a crash AFTER some bucket version dirs are
-    written but BEFORE the marker swap leaves them invisible — the
-    replay reads the pre-batch state and commits identical history."""
-    from unittest import mock
-
-    from cdc_sync_poc_spark.cdc.envelope import cdc_view
-    from cdc_sync_poc_spark.operators.scd import ap07_scd2_history
+    from cdc_sync_poc_spark.streaming import swapstore
+    from cdc_sync_poc_spark.streaming.delta_store import LastWinsDeltaStore
     from cdc_sync_poc_spark.streaming.scd2 import Scd2StreamWriter
 
-    writer = Scd2StreamWriter(
-        spark, str(tmp_path / "scd2_bc"), n_buckets=8
-    )
-    cdc = cdc_view(spark, SF_DIR)
-    n = cdc.count()
-    chunks = [
-        cdc.orderBy("cdc_seq").limit((i + 1) * n // 3).subtract(
-            cdc.orderBy("cdc_seq").limit(i * n // 3)
-        )
-        for i in range(3)
-    ]
-    writer.apply_batch(chunks[0], 0)
-    writer.apply_batch(chunks[1], 1)
+    out = str(tmp_path / "scd2")
+    writer = Scd2StreamWriter(spark, out)
+    part = "batch_id=2"
+    if case == "closed_written_delta_lost":
+        chunks = _scd2_chunks(spark, 3)
+        writer.apply_batch(chunks[0], 0)
+        writer.apply_batch(chunks[1], 1)
 
-    # (b) crash: bucket v=2 dirs written, marker swap suppressed
-    with mock.patch.object(
-        type(writer.marker_store), "swap", lambda self, df: None
-    ):
-        writer.apply_batch(chunks[2], 2)
-    # the uncommitted v=2 dirs are invisible: state is still batch-1
-    _, committed = writer._open_state()
-    assert committed == 1
-    # replay commits for real and lands on the batch answer
-    writer.apply_batch(chunks[2], 2)
-    want = _hist_set(ap07_scd2_history(spark, SF_DIR))
-    assert _hist_set(writer.history()) == want
+        def lost(self, df, batch_id):
+            raise OSError("simulated crash")
 
-    # (a) replay of the committed batch is a no-op
-    writer.apply_batch(chunks[2], 2)
-    assert _hist_set(writer.history()) == want
+        with monkeypatch.context() as m:
+            m.setattr(LastWinsDeltaStore, "write_delta", lost)
+            with pytest.raises(OSError, match="simulated crash"):
+                writer.apply_batch(chunks[2], 2)
+        assert os.path.isdir(os.path.join(writer.closed_dir, part))
+        assert not os.path.isdir(os.path.join(writer.store.deltas_dir, part))
+        replay = chunks[2], 2
+    elif case == "delta_written_closed_lost":
+        chunks = _scd2_chunks(spark, 3)
+        for bid, chunk in enumerate(chunks):
+            writer.apply_batch(chunk, bid)
+        shutil.rmtree(os.path.join(writer.closed_dir, part))
+        replay = chunks[2], 2
+    elif case == "compaction_rename_crash":
+        # batch 2 folds 0-1 into a first base; batch 4 folds 2-3 and
+        # swaps that base out: live -> old lands, next -> live crashes
+        monkeypatch.setattr(Scd2StreamWriter, "_compact_at", lambda self: 2)
+        chunks = _scd2_chunks(spark, 5)
+        for bid, chunk in enumerate(chunks[:4]):
+            writer.apply_batch(chunk, bid)
+        assert writer.store.watermark() == 1
+        rename = os.rename
 
+        def crashing_rename(a, b):
+            if a == writer.store.base.tmp_dir:
+                raise OSError("simulated crash")
+            rename(a, b)
 
-def test_scd2_bucketed_partial_rename_crash(spark, tmp_path):
-    """The nastiest bucketed window: crash AFTER some (but not all)
-    touched buckets renamed their v=B version in. Those dirs are
-    uncommitted (marker still at B-1), so the replay must see pure
-    pre-batch state, overwrite the orphan versions, and commit the
-    identical history."""
-    import os as _os
-    from unittest import mock
+        with monkeypatch.context() as m:
+            m.setattr(swapstore.os, "rename", crashing_rename)
+            with pytest.raises(OSError, match="simulated crash"):
+                writer.apply_batch(chunks[4], 4)
+        assert not os.path.isdir(writer.store.base.cur_dir)
+        replay = chunks[4], 4
+    else:
+        chunks = _scd2_chunks(spark, 1)
+        writer.apply_batch(chunks[0].limit(0), 0)
+        assert writer.history().count() == 0
+        replay = chunks[0], 1
 
-    from cdc_sync_poc_spark.cdc.envelope import cdc_view
-    from cdc_sync_poc_spark.operators.scd import ap07_scd2_history
-    from cdc_sync_poc_spark.streaming.scd2 import Scd2StreamWriter
-
-    writer = Scd2StreamWriter(
-        spark, str(tmp_path / "scd2_pr"), n_buckets=8
-    )
-    cdc = cdc_view(spark, SF_DIR)
-    n = cdc.count()
-    chunks = [
-        cdc.orderBy("cdc_seq").limit((i + 1) * n // 2).subtract(
-            cdc.orderBy("cdc_seq").limit(i * n // 2)
-        )
-        for i in range(2)
-    ]
-    writer.apply_batch(chunks[0], 0)
-
-    real_rename = _os.rename
-    calls = {"n": 0}
-
-    def failing_rename(src, dst):
-        # let the first bucket land, then crash the process mid-commit
-        if "scd2_open_buckets" in dst:
-            calls["n"] += 1
-            if calls["n"] > 1:
-                raise OSError("simulated crash mid bucket renames")
-        return real_rename(src, dst)
-
-    import pytest as _pytest
-
-    with mock.patch("os.rename", side_effect=failing_rename):
-        with _pytest.raises(Exception, match="simulated crash"):
-            writer.apply_batch(chunks[1], 1)
-    assert calls["n"] > 1  # the crash actually hit a later rename
-    # marker never advanced: the orphan v=1 dirs are invisible
-    _, committed = writer._open_state()
-    assert committed == 0
-    # replay completes and lands on the batch answer
-    writer.apply_batch(chunks[1], 1)
-    want = _hist_set(ap07_scd2_history(spark, SF_DIR))
-    assert _hist_set(writer.history()) == want
-
-
-def test_scd2_bucketed_empty_first_batch_and_bad_n_buckets(spark, tmp_path):
-    """Review findings: (a) an all-empty FIRST batch (touched = [])
-    never creates the buckets dir — the post-commit prune must no-op,
-    not FileNotFoundError after the marker already advanced; (b)
-    n_buckets < 1 fails loudly at construction."""
-    import pytest as _pytest
-
-    from cdc_sync_poc_spark.cdc.envelope import cdc_view
-    from cdc_sync_poc_spark.operators.scd import ap07_scd2_history
-    from cdc_sync_poc_spark.streaming.scd2 import Scd2StreamWriter
-
-    with _pytest.raises(ValueError, match="n_buckets"):
-        Scd2StreamWriter(spark, str(tmp_path / "bad"), n_buckets=0)
-
-    writer = Scd2StreamWriter(spark, str(tmp_path / "scd2_e"), n_buckets=4)
-    cdc = cdc_view(spark, SF_DIR)
-    writer.apply_batch(cdc.limit(0), 0)  # empty first batch
-    _, committed = writer._open_state()
-    assert committed == 0 and writer.history().count() == 0
-    writer.apply_batch(cdc, 1)  # then the whole changelog
+    writer = Scd2StreamWriter(spark, out)  # restart
+    writer.apply_batch(*replay)
+    if case == "compaction_rename_crash":
+        assert writer.store.watermark() == 3
     assert _hist_set(writer.history()) == _hist_set(
         ap07_scd2_history(spark, SF_DIR)
     )
-
-
-def test_scd2_bucketed_replay_behind_committed_marker(spark, tmp_path):
-    """Checkpoint loss can replay a batch the marker already proves
-    FULLY committed (committed > batch_id, not just ==): the
-    `committed >= batch_id` early-return must make it a pure no-op —
-    no bucket version dir from the replayed OR any future batch may be
-    re-created, overwritten, or double-counted, and current()/history()
-    must be byte-identical (VERDICT r9 #7)."""
-    import os as _os
-
-    from cdc_sync_poc_spark.cdc.envelope import cdc_view
-    from cdc_sync_poc_spark.streaming.scd2 import Scd2StreamWriter
-
-    out = tmp_path / "scd2_behind"
-    writer = Scd2StreamWriter(spark, str(out), n_buckets=8)
-    cdc = cdc_view(spark, SF_DIR)
-    n = cdc.count()
-    chunks = [
-        cdc.orderBy("cdc_seq").limit((i + 1) * n // 3).subtract(
-            cdc.orderBy("cdc_seq").limit(i * n // 3)
-        )
-        for i in range(3)
-    ]
-    for i, ch in enumerate(chunks):
-        writer.apply_batch(ch, i)
-    _, committed = writer._open_state()
-    assert committed == 2
-
-    def tree_snapshot(root):
-        """Every file path + size + mtime under the store."""
-        snap = {}
-        for dirpath, _dirs, files in _os.walk(root):
-            for f in files:
-                p = _os.path.join(dirpath, f)
-                st = _os.stat(p)
-                snap[_os.path.relpath(p, root)] = (st.st_size, st.st_mtime_ns)
-        return snap
-
-    before_tree = tree_snapshot(str(out))
-    before_hist = _hist_set(writer.history())
-    before_open = {
-        tuple(r) for r in writer._open_state()[0].collect()
-    }
-
-    # a FRESH writer (post-checkpoint-loss process) replays batches 0
-    # and 1 — both strictly behind the committed marker
-    replayer = Scd2StreamWriter(spark, str(out), n_buckets=8)
-    replayer.apply_batch(chunks[0], 0)
-    replayer.apply_batch(chunks[1], 1)
-
-    assert tree_snapshot(str(out)) == before_tree  # not one byte moved
-    assert _hist_set(replayer.history()) == before_hist
-    assert {
-        tuple(r) for r in replayer._open_state()[0].collect()
-    } == before_open
-    _, committed = replayer._open_state()
-    assert committed == 2
 
 
 def test_streaming_cluster_sampler_matches_batch(spark, tmp_path):
