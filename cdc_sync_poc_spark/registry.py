@@ -13,6 +13,7 @@ driver's compare sorts columns by name before hashing values.
 from __future__ import annotations
 
 import functools
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,160 +90,68 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# The driver samples the FIRST 50 registered queries (dict insertion
-# order) for its CORRECTNESS gate; the sample rotates per round so every
-# query eventually carries fresh driver evidence.
-#
-# WINDOW_STAGED_FOR anchors the ratchet (VERDICT r10 "What's wrong" #1):
-# the window below is staged FOR that driver round, so the ratchet tests
-# compare it against CORRECTNESS_r{WINDOW_STAGED_FOR-1} (zero overlap)
-# and compute staleness from evidence files with round <
-# WINDOW_STAGED_FOR only — green at every lifecycle point, including
-# after the driver writes this round's own evidence file.
-#
-# Round 15 stages TAINT OVER STALENESS (VERDICT r14 "Next round" #3,
-# the touched-oracle-taint principle): every query REWRITTEN in the
-# r14/r15 optimization rounds whose newest driver evidence predates
-# the rewrite goes in first, because changed code outranks stale
-# evidence. 33 forced ids: the 6 r9-evidence stragglers displaced in
-# r14 (ann_recall_*, sim_ann_topk_all, sim_topk_bruteforce — the
-# oldest-tail obligation), 8 rewritten ids whose r10 evidence was the
-# oldest tail anyway, and 19 rewritten ids with NEWER (r11-r14)
-# evidence — those 19 are listed in WINDOW_TAINTED below because they
-# jump the staleness queue (and one, bench_q20_dominant, even repeats
-# from the r14 sample: its r14 rewrite landed after the driver
-# capture). The remaining 17 slots fill from the r10-evidence tail in
-# tools/next_window.py order.
-WINDOW_STAGED_FOR = 15
-
-# Rewritten-after-evidence ids staged OUT of staleness order (the
-# taint exemption the ratchet tests honor): each was rewritten in
-# r14 (commits 2651f6d..fa58066) or r15 (this round) AFTER its newest
-# CORRECTNESS_r*.json evidence was captured. Derived with
-# tools/touched_oracle.py module->id mapping over the two rounds'
-# diffs; every id also passed the local sf0.01 exact-oracle gate
-# after its rewrite.
-WINDOW_TAINTED = {
-    # r14 rewrites, evidence r11-r13 (VERDICT r14 "What's wrong" #3)
-    "text_bm25_rank", "corpus_decontam_incremental",
-    "dedup_recall_minhash", "emb_covariance_topk",
-    "corpus_divergence_chi2", "dedup_span_intervals", "mm_dedup_phash",
-    "ann_recall_ivf_stream", "graph_pagerank_dist",
-    "clf_calibration_by_length", "emb_ivf_resplit",
-    # r14 rewrite that landed AFTER the r14 driver capture (evidence
-    # r14 but post-snapshot commit fa58066 — re-confirmation ordered
-    # by VERDICT r14 #3)
-    "bench_q20_dominant",
-    # r15 rewrites, evidence r11-r13
-    "dedup_winnowing_pairs", "text_winnowing_overlap",
-    "dedup_line_global", "ap09_reconciliation", "events_kmv_distinct",
-    "corpus_contamination_by_source", "maint_zorder_layout",
-}
-
-# Exact 50-id window (exact match, not prefix — prefix staging risked
-# a new id silently colliding into the window, e.g. sample_fixed_n /
-# sample_fixed_n_by_lang share a prefix).
-DRIVER_WINDOW = [
-    # ---- the r15 driver window ----
-    # the 6 r9-evidence stragglers displaced by r14's new operators
-    "ann_recall_ivf", "ann_recall_ivfpq", "ann_recall_lsh",
-    "ann_recall_truncated", "sim_ann_topk_all", "sim_topk_bruteforce",
-    # r14/r15 rewrites whose r10 evidence is the oldest tail anyway
-    "events_funnel", "text_cooccur_lift", "text_lm_score",
-    "text_ngram_novelty", "emb_hard_negatives", "dedup_lsh_curve",
-    "corpus_contamination", "bench_q21_waiting",
-    # the 19 tainted ids (WINDOW_TAINTED above)
-    "text_bm25_rank", "corpus_decontam_incremental",
-    "dedup_recall_minhash", "emb_covariance_topk",
-    "corpus_divergence_chi2", "dedup_span_intervals", "mm_dedup_phash",
-    "ann_recall_ivf_stream", "graph_pagerank_dist",
-    "clf_calibration_by_length", "emb_ivf_resplit", "bench_q20_dominant",
-    "dedup_winnowing_pairs", "text_winnowing_overlap",
-    "dedup_line_global", "ap09_reconciliation", "events_kmv_distinct",
-    "corpus_contamination_by_source", "maint_zorder_layout",
-    # r10-evidence tail fill (tools/next_window.py order)
-    "bench_q10_returned", "bench_q11_important", "bench_q12_latemix",
-    "bench_q13_custdist", "bench_q14_promo", "bench_q15_top_supplier",
-    "bench_q19_disjunctive", "bench_q22_idle_balance",
-    "bench_q4_priority", "bench_q6_forecast", "bench_q7_volume",
-    "bench_q8_mktshare", "bench_q9_profit",
-    "corpus_dedup_rate_by_source", "corpus_mix_weights",
-    "corpus_train_split", "events_concurrency",
-    # ---- 50-query driver window ends here ----
-]
-
-# Tail ordering behind the cutoff — staging order only, not evidence.
-# Prefix match, first hit wins; unmatched ids keep relative order at
-# the end. Next in line for r16: the rest of the r10-evidence tail
-# (dedup_minhash_* / dedup_ngram / events_* cohort) — recompute
-# exactly from CORRECTNESS_r*.json with tools/next_window.py before
-# staging.
-_PRIORITY_PREFIXES = [
-    "a0", "a1", "ap0", "ap1", "pipeline_", "bench_q1", "bench_q2",
-    "cf0", "j0",
-    "corpus_", "sample_", "emb_", "events_", "text_",
-    "dedup_", "dup_", "bench_",
-    "graph_pagerank", "mm_", "sim_",
-    "source_",
-    "r0", "r1", "s0", "src_",
-    "st0",
-    "sink_",
-    "retrieval_", "slice_",
-    "sem_", "llm_", "dsir_",
-    "plan_", "gopher_", "bpe_", "dq_", "maint_",
-    "pii_", "doc_", "seq_", "pack_", "train_",
-]
+# Registry order is a pure function of REGISTERING_MODULES: the round
+# driver samples the FIRST 50 registered queries (dict insertion order)
+# for its correctness gate, so the CDC sync path of SURVEY.md §2 (change
+# events -> loop guard -> per-key reduce -> MERGE -> audit) comes first
+# and every other module follows in tuple order. Within a module, ids
+# keep their source order (the order their decorators run). This tuple
+# is the one list of modules that register queries.
+REGISTERING_MODULES = (
+    # CDC core: these register 51 ids, so the driver sample is the §2 path
+    "cdc.envelope",
+    "cdc.pipeline",
+    "operators.apply",
+    "operators.scd",
+    "operators.stateful",
+    "operators.conflict",
+    "operators.rowops",
+    # everything else, in module order
+    "llm.classifier",
+    "llm.cleaning",
+    "llm.curation",
+    "llm.dedup",
+    "llm.hygiene",
+    "llm.lm_quality",
+    "llm.multimodal",
+    "llm.preprocess",
+    "llm.retrieval",
+    "llm.segment_stats",
+    "llm.similarity",
+    "llm.text",
+    "llm.text_stats",
+    "llm.tokenizer",
+    "operators.aggregates",
+    "operators.anomaly",
+    "operators.bench_relational",
+    "operators.events_analytics",
+    "operators.graph",
+    "operators.joins",
+    "operators.quality",
+    "operators.sketches",
+    "operators.sorts",
+    "sources.csvsrc",
+    "sources.jsonl",
+    "sources.orcsrc",
+    "sources.layout",
+)
 
 
-def _priority(name: str) -> tuple[int, int]:
-    if name in DRIVER_WINDOW:
-        return (0, DRIVER_WINDOW.index(name))
-    for i, p in enumerate(_PRIORITY_PREFIXES):
-        if name.startswith(p):
-            return (1, i)
-    return (2, 0)
+def _order_key(name: str) -> tuple[int, int]:
+    fn = QUERIES[name]
+    mod = fn.__module__.removeprefix("cdc_sync_poc_spark.")
+    line = getattr(fn, "__wrapped__", fn).__code__.co_firstlineno
+    return REGISTERING_MODULES.index(mod), line
 
 
 def load_all_queries() -> None:
-    """Import every module that registers queries, then order the
-    registry so the driver's 50-query sample covers the §2 core and
-    everything changed this round (idempotent)."""
-    import cdc_sync_poc_spark.cdc.envelope  # noqa: F401
-    import cdc_sync_poc_spark.cdc.pipeline  # noqa: F401
-    import cdc_sync_poc_spark.llm.classifier  # noqa: F401
-    import cdc_sync_poc_spark.llm.cleaning  # noqa: F401
-    import cdc_sync_poc_spark.llm.curation  # noqa: F401
-    import cdc_sync_poc_spark.llm.dedup  # noqa: F401
-    import cdc_sync_poc_spark.llm.hygiene  # noqa: F401
-    import cdc_sync_poc_spark.llm.lm_quality  # noqa: F401
-    import cdc_sync_poc_spark.llm.multimodal  # noqa: F401
-    import cdc_sync_poc_spark.llm.preprocess  # noqa: F401
-    import cdc_sync_poc_spark.llm.retrieval  # noqa: F401
-    import cdc_sync_poc_spark.llm.segment_stats  # noqa: F401
-    import cdc_sync_poc_spark.llm.similarity  # noqa: F401
-    import cdc_sync_poc_spark.llm.text  # noqa: F401
-    import cdc_sync_poc_spark.llm.text_stats  # noqa: F401
-    import cdc_sync_poc_spark.llm.tokenizer  # noqa: F401
-    import cdc_sync_poc_spark.operators.aggregates  # noqa: F401
-    import cdc_sync_poc_spark.operators.anomaly  # noqa: F401
-    import cdc_sync_poc_spark.operators.apply  # noqa: F401
-    import cdc_sync_poc_spark.operators.bench_relational  # noqa: F401
-    import cdc_sync_poc_spark.operators.conflict  # noqa: F401
-    import cdc_sync_poc_spark.operators.events_analytics  # noqa: F401
-    import cdc_sync_poc_spark.operators.graph  # noqa: F401
-    import cdc_sync_poc_spark.operators.joins  # noqa: F401
-    import cdc_sync_poc_spark.operators.quality  # noqa: F401
-    import cdc_sync_poc_spark.operators.rowops  # noqa: F401
-    import cdc_sync_poc_spark.operators.sketches  # noqa: F401
-    import cdc_sync_poc_spark.operators.sorts  # noqa: F401
-    import cdc_sync_poc_spark.operators.scd  # noqa: F401
-    import cdc_sync_poc_spark.operators.stateful  # noqa: F401
-    import cdc_sync_poc_spark.sources.csvsrc  # noqa: F401
-    import cdc_sync_poc_spark.sources.jsonl  # noqa: F401
-    import cdc_sync_poc_spark.sources.orcsrc  # noqa: F401
-    import cdc_sync_poc_spark.sources.layout  # noqa: F401
-
-    ordered = sorted(QUERIES, key=_priority)
+    """Import every module in REGISTERING_MODULES, then order QUERIES and
+    ORACLES by (module rank, source line). The order does not depend on
+    import order or on the dicts' current order; calling this again is a
+    no-op."""
+    for mod in REGISTERING_MODULES:
+        importlib.import_module(f"cdc_sync_poc_spark.{mod}")
+    ordered = sorted(QUERIES, key=_order_key)
     for d in (QUERIES, ORACLES):
         snapshot = {n: d[n] for n in ordered if n in d}
         d.clear()

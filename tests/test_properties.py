@@ -1715,11 +1715,11 @@ def test_span_intervals_matches_reference(spark, docs):
 
 # ---- degenerate-corpus engine-parity sweep (VERDICT r12 #5) ----
 # The r12 lesson generalized: engine divergence hides in degenerate
-# inputs (0/0 divisions, empty aggregates, int64 overflow), so every
-# document-driven text_*/dedup_*/corpus_* query in the CURRENT driver
-# window must produce bit-identical Spark and DuckDB results over
-# three degenerate corpora. The id list is COMPUTED from the window so
-# rotating the window rotates the sweep.
+# inputs (0/0 divisions, empty aggregates, int64 overflow), so each
+# document-driven text_*/dedup_*/corpus_* query below must produce
+# bit-identical Spark and DuckDB results over three degenerate corpora.
+# The ids are pinned (the r15 correctness-sample cohort) so the sweep's
+# coverage and cost do not move with registry order.
 _DEGENERATE_CORPORA = {
     "empty": [],
     "single_one_char_doc": [(0, "x", "en", "src0", 1)],
@@ -1732,19 +1732,24 @@ _DEGENERATE_CORPORA = {
 _DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-def _window_doc_queries() -> list[str]:
-    from cdc_sync_poc_spark.registry import (
-        DRIVER_WINDOW,
-        ORACLES,
-        load_all_queries,
-    )
+_DEGENERATE_DOC_QUERIES = (
+    "text_cooccur_lift", "text_lm_score", "text_ngram_novelty",
+    "dedup_lsh_curve", "corpus_contamination", "text_bm25_rank",
+    "corpus_decontam_incremental", "dedup_recall_minhash",
+    "corpus_divergence_chi2", "dedup_span_intervals",
+    "dedup_winnowing_pairs", "text_winnowing_overlap", "dedup_line_global",
+    "corpus_contamination_by_source", "corpus_dedup_rate_by_source",
+    "corpus_mix_weights", "corpus_train_split",
+)
+
+
+def _pinned_with_oracles(names: tuple[str, ...]) -> tuple[str, ...]:
+    from cdc_sync_poc_spark.registry import ORACLES, QUERIES, load_all_queries
 
     load_all_queries()
-    return [
-        q
-        for q in DRIVER_WINDOW
-        if q.startswith(("text_", "dedup_", "corpus_")) and q in ORACLES
-    ]
+    missing = [q for q in names if q not in QUERIES or q not in ORACLES]
+    assert not missing, f"pinned sweep ids unregistered or oracle-less: {missing}"
+    return names
 
 
 @pytest.mark.parametrize("fixture", sorted(_DEGENERATE_CORPORA))
@@ -1767,13 +1772,11 @@ def test_degenerate_corpus_engine_parity(spark, fixture):
     )
     con = duckdb.connect()
     con.register("documents", pdf)
-    names = _window_doc_queries()
-    assert names, "window rotation left no document-driven sweep ids"
+    names = _pinned_with_oracles(_DEGENERATE_DOC_QUERIES)
     # patch EVERY llm module that imported load_table, discovered from
-    # the loaded module graph — a hardcoded module list silently missed
-    # newly rotated-in ids whose module wasn't on it (r14: the window
-    # brought in segment_stats' dedup_segment_boilerplate and the list
-    # didn't know the module)
+    # the loaded module graph — a hardcoded module list silently misses
+    # an id whose module is not on it (r14: dedup_segment_boilerplate
+    # lives in segment_stats, which such a list did not know)
     import sys as _sys
 
     llm_mods = [
@@ -1809,7 +1812,7 @@ def test_degenerate_corpus_engine_parity(spark, fixture):
 
 
 # ---- degenerate-EMBEDDINGS engine parity (r13 extension of the sweep
-# above): the window's embedding-driven ops must agree with DuckDB on
+# above): the pinned embedding-driven ops must agree with DuckDB on
 # degenerate vector corpora too. all_identical exercises
 # emb_ivf_resplit's drop-on-empty sub path (every cosine ties, sub 0
 # wins everything, sub 1 empties identically in both engines) and
@@ -1827,35 +1830,28 @@ _DEGENERATE_EMBS = {
 }
 
 
+_DEGENERATE_EMB_QUERIES = ("emb_hard_negatives", "emb_ivf_resplit")
+
+
 @pytest.mark.parametrize("fixture", sorted(_DEGENERATE_EMBS))
 def test_degenerate_embeddings_engine_parity(spark, fixture):
     import unittest.mock as mock
 
     import duckdb
 
-    from cdc_sync_poc_spark.registry import (
-        DRIVER_WINDOW,
-        ORACLES,
-        QUERIES,
-        load_all_queries,
-    )
+    from cdc_sync_poc_spark.registry import ORACLES, QUERIES
     from tests.compare import compare_frames
 
-    load_all_queries()
-    # embeddings-only ids from the similarity module: the sweep mocks
-    # similarity.load_table with a lone embeddings frame, so a window
-    # id living elsewhere (e.g. emb_covariance_topk in curation.py) or
-    # needing other tables cannot run under this harness (r15 window
-    # rotation surfaced exactly that)
-    names = [
-        q
-        for q in DRIVER_WINDOW
-        if q.startswith(("sem_dedup", "emb_"))
-        and q in ORACLES
-        and getattr(QUERIES[q], "__wrapped__", QUERIES[q]).__module__
+    names = _pinned_with_oracles(_DEGENERATE_EMB_QUERIES)
+    # the sweep mocks similarity.load_table with a lone embeddings
+    # frame, so every id must live in the similarity module and read
+    # embeddings only (emb_covariance_topk in curation.py cannot run
+    # under this harness)
+    assert all(
+        getattr(QUERIES[q], "__wrapped__", QUERIES[q]).__module__
         == "cdc_sync_poc_spark.llm.similarity"
-    ]
-    assert names, "window rotation left no embedding-driven sweep ids"
+        for q in names
+    ), names
 
     rows = _DEGENERATE_EMBS[fixture]
     df = spark.createDataFrame(

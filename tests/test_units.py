@@ -167,29 +167,34 @@ def test_ap06_vs_ap01_divergence_is_principled(spark):
     assert isinstance(only_replay, set) and isinstance(only_merge, set)
 
 
-def test_driver_sample_window_invariants():
-    """The round driver samples the FIRST 50 registered queries; this
-    pins the round-4 curation so a registry edit that silently grows or
-    reorders the window (a new query sharing an in-window prefix) fails
-    here instead of in the next round's verdict."""
+def test_registry_order_is_core_modules_first():
+    """The round driver samples the FIRST 50 registered queries. The
+    registry orders ids by their module's rank in REGISTERING_MODULES
+    (CDC core first), then by source line, so those 50 are the §2 sync
+    path whatever the import order, and the order is a pure function:
+    scrambling the dicts and reloading restores it."""
     from cdc_sync_poc_spark.registry import ORACLES, QUERIES, load_all_queries
 
-    import json
-    import pathlib
-
     load_all_queries()
-    names = list(QUERIES)
-    window = set(names[:50])
-    # standing contract (generated form lives in
-    # tests/test_registry_window.py): every query with NO driver row in
-    # ANY CORRECTNESS file sits inside the window — a mid-round
-    # registration that misses the window would stay never-sampled.
-    root = pathlib.Path(__file__).resolve().parents[1]
-    sampled = set()
-    for f in root.glob("CORRECTNESS_r*.json"):
-        sampled |= set(json.loads(f.read_text()))
-    never_sampled = set(names) - sampled
-    assert never_sampled <= window, sorted(never_sampled - window)
+    core = [
+        f"cdc_sync_poc_spark.{m}"
+        for m in (
+            "cdc.envelope", "cdc.pipeline", "operators.apply",
+            "operators.scd", "operators.stateful", "operators.conflict",
+            "operators.rowops",
+        )
+    ]
+    order = list(QUERIES)
+    mods = [QUERIES[q].__module__ for q in order[:50]]
+    assert set(mods) <= set(core), sorted(set(mods) - set(core))
+    assert mods == sorted(mods, key=core.index)
+    for d in (QUERIES, ORACLES):
+        scrambled = dict(reversed(list(d.items())))
+        d.clear()
+        d.update(scrambled)
+    load_all_queries()
+    assert list(QUERIES) == order
+    assert list(ORACLES) == [q for q in order if q in ORACLES]
     # every registered query has an exact oracle (no rows-only checks)
     assert set(QUERIES) == set(ORACLES)
 
@@ -255,47 +260,6 @@ def test_prefix_bucket_invariant_holds_on_fixture(spark):
     docs = load_table(spark, SF_DIR, "documents")
     min_len = docs.agg(F.min(F.length("text"))).collect()[0][0]
     assert min_len >= PREFIX_BUCKET_CHARS, min_len
-
-
-def test_priority_prefixes_all_reachable():
-    """Since r11 the 50-id window is an EXACT list (registry.DRIVER_WINDOW
-    — prefix staging risked silent window collisions), and
-    _PRIORITY_PREFIXES only orders the tail behind the cutoff. Pin the
-    staging invariants: the window has no duplicates and every id is a
-    registered query; every tail prefix matches at least one registered
-    query and WINS for at least one (first-hit semantics) — a dead or
-    shadowed prefix means the tail ordering the comments describe
-    silently isn't happening; and no registered query falls through to
-    the unmatched bucket."""
-    from cdc_sync_poc_spark.registry import (
-        DRIVER_WINDOW,
-        QUERIES,
-        _PRIORITY_PREFIXES,
-        _priority,
-        load_all_queries,
-    )
-
-    load_all_queries()
-    assert len(DRIVER_WINDOW) == len(set(DRIVER_WINDOW)), "dup window id"
-    missing = [q for q in DRIVER_WINDOW if q not in QUERIES]
-    assert not missing, f"window ids not registered: {missing}"
-    assert len(_PRIORITY_PREFIXES) == len(set(_PRIORITY_PREFIXES)), "dup prefix"
-    tail = [q for q in QUERIES if q not in DRIVER_WINDOW]
-    winners = {_priority(q)[1] for q in tail if _priority(q)[0] == 1}
-    dead = [
-        p
-        for i, p in enumerate(_PRIORITY_PREFIXES)
-        if i not in winners and not any(q.startswith(p) for q in tail)
-    ]
-    assert not dead, f"prefixes matching no tail query: {dead}"
-    shadowed = [
-        p
-        for i, p in enumerate(_PRIORITY_PREFIXES)
-        if i not in winners and any(q.startswith(p) for q in tail)
-    ]
-    assert not shadowed, f"prefixes always beaten by an earlier entry: {shadowed}"
-    unmatched = [q for q in tail if _priority(q)[0] == 2]
-    assert not unmatched, f"tail queries with no ordering prefix: {unmatched}"
 
 
 def test_interarrival_cv_null_on_degenerate_types(spark):

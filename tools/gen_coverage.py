@@ -147,22 +147,14 @@ def main() -> None:
     missing = sorted(set(QUERIES) - seen)
     if missing:
         lines += ["## Unlisted", ""] + [f"- `{q}`" for q in missing]
-    from cdc_sync_poc_spark.registry import WINDOW_STAGED_FOR
-
     window = list(QUERIES)[:50]
     lines += [
         "## Driver correctness-sample window (first 50 registered)",
         "",
-        "The round driver samples these 50 for CORRECTNESS_r{N}; the",
-        "exact list is `registry.DRIVER_WINDOW`, anchored by",
-        f"`registry.WINDOW_STAGED_FOR = {WINDOW_STAGED_FOR}` (the round "
-        "it is staged FOR —",
-        "the ratchet tests in tests/test_registry_window.py compare",
-        "against CORRECTNESS_r{STAGED_FOR-1} and fold only pre-staging",
-        "evidence, so the suite stays green after the driver writes this",
-        "round's file). The window is the generated staleness tail plus",
-        "first-ever evidence for the round's new operators (see the",
-        "registry comments for this round's rationale).",
+        "The registry orders ids by their module's rank in",
+        "`registry.REGISTERING_MODULES` (CDC core modules first), then",
+        "by source line, so the driver's 50-query sample is the CDC sync",
+        "path.",
         "",
     ] + [f"{i + 1}. `{q}`" for i, q in enumerate(window)]
     lines.append(

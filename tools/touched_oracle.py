@@ -1,19 +1,17 @@
 #!/usr/bin/env python
-"""Touched-operators oracle pass (ADVICE r12 #4): when a round rewrites
-an operator's plan OUTSIDE the current driver window, the windowed
-CORRECTNESS gate produces no fresh evidence for it. This tool closes
-that gap as a one-command habit: diff the working tree against a base
-ref, map changed source modules to the query ids they register, and run
-the exact driver-style Spark-vs-DuckDB comparison for those ids at
-sf0.01.
+"""Touched-operators oracle pass (ADVICE r12 #4): the driver's
+correctness gate samples only the first 50 registered queries, which
+are the CDC core modules, so a rewrite of any other operator gets no
+fresh gate evidence. This tool closes that gap as a one-command habit:
+diff the working tree against a base ref, map changed source modules to
+the query ids they register, and run the exact driver-style
+Spark-vs-DuckDB comparison for those ids at sf0.01.
 
 Usage:
     python tools/touched_oracle.py [BASE_REF] [--base REF] [--sf DIR]
                                    [extra ids...]
 
-BASE_REF defaults to the last end-of-round snapshot reachable from
-HEAD (the most recent commit whose subject contains "end-of-round"),
-falling back to HEAD~1. Ids may also be passed explicitly to force
+BASE_REF defaults to HEAD~1. Ids may also be passed explicitly to force
 queries into the pass regardless of the diff. A positional arg only
 counts as BASE_REF when ``git rev-parse --verify`` accepts it
 (ADVICE r13 #3: a query id that merely LOOKS like a sha, e.g. the
@@ -57,18 +55,6 @@ def _is_ref(candidate: str) -> bool:
     )
 
 
-def default_base() -> str:
-    out = subprocess.run(
-        ["git", "log", "--format=%H %s", "-n", "200"],
-        cwd=REPO, capture_output=True, text=True, check=True,
-    ).stdout
-    for line in out.splitlines():
-        sha, _, subject = line.partition(" ")
-        if "end-of-round" in subject:
-            return sha
-    return "HEAD~1"
-
-
 def changed_modules(base: str) -> list[str]:
     """Changed .py files under the package, as import paths."""
     files = _git("diff", "--name-only", base, "--", "cdc_sync_poc_spark")
@@ -88,8 +74,7 @@ def _importers_of(changed: set[str]) -> set[str]:
     # the registry is the aggregator: load_all_queries imports every
     # registering module (registration side-effects, not data
     # dependencies) and every module imports register() back — leaving
-    # it in the edge set makes the closure all-of-everything. Its own
-    # changes are window/ordering config, carried by the ratchet tests.
+    # it in the edge set makes the closure all-of-everything.
     hub = "cdc_sync_poc_spark.registry"
     pkg_root = REPO / "cdc_sync_poc_spark"
     imports: dict[str, set[str]] = {}
@@ -201,7 +186,7 @@ def main(argv: list[str]) -> int:
         else:
             extra.append(a)
     if base is None:
-        base = default_base()
+        base = "HEAD~1"
     mods = changed_modules(base)
     ids = queries_for_modules(mods)
     for x in extra:
