@@ -31,8 +31,8 @@ emb_index_growth's ``needs_split`` flag.
 ``compact()`` bounds both small-file pressure and probe fan-in: it
 re-lays accumulated batch partitions into ONE base partitioned by
 cell_id (file count O(cells), not O(batches x cells)). Delta
-bookkeeping, watermark-inside-the-frame compaction and the crash
-analysis all live in the shared AppendDeltaStore
+bookkeeping, watermark-directory compaction and the crash analysis
+all live in the shared AppendDeltaStore
 (streaming/delta_store.py) — this module owns only what is
 IVF-specific: the frozen quantizer and the probe math.
 
@@ -61,7 +61,6 @@ from cdc_sync_poc_spark.llm.similarity import (
 )
 from cdc_sync_poc_spark.streaming.delta_store import AppendDeltaStore
 
-_IDX_COLS = ["vec_id", "label", "v", "nrm", "cell_id", "batch_id"]
 _IDX_DDL = (
     "vec_id long, label int, v array<double>, nrm double,"
     " cell_id bigint, batch_id long"
@@ -75,15 +74,13 @@ class StreamingIVFIndex:
         self.quant_dir = os.path.join(root, "quantizer")
         self.journal_path = os.path.join(root, "split_journal.json")
         # per-batch partitions sub-partitioned by cell; compact() re-lays
-        # them into ONE base with cell_id as the TOP-level partition key,
-        # so probe pruning survives folding (shared store recipe)
+        # them into ONE base partitioned by cell_id, so probe pruning
+        # survives folding (shared store recipe)
         self.store = AppendDeltaStore(
             spark,
             root,
-            cols=_IDX_COLS,
             ddl=_IDX_DDL,
-            delta_partition_by=["cell_id"],
-            base_partition_by=["cell_id"],
+            partition_by=["cell_id"],
             deltas_name="index",
         )
         # Heal a crash-interrupted quantizer SWAP before any completeness
@@ -176,7 +173,7 @@ class StreamingIVFIndex:
         folded-then-replayed batch partitions are excluded by the
         watermark, never double-read — the shared AppendDeltaStore
         read path."""
-        return self.store.rows_or_empty()
+        return self.store.rows()
 
     def compact(self, upto_batch_id: int) -> None:
         """Re-layout: fold batch partitions with batch_id <=
@@ -302,19 +299,15 @@ class StreamingIVFIndex:
                 "unfinished split journal present — run heal_splits() first"
             )
         # 1. fold every delta so the membership is one base
-        if os.path.isdir(self.store.deltas_dir):
-            bids = [
-                int(d.split("=", 1)[1])
-                for d in os.listdir(self.store.deltas_dir)
-                if d.startswith("batch_id=")
-            ]
-            if bids:
-                self.store.compact(max(bids))
-        base = self.store.base.read()
-        if base is None:
+        bids = self.store.newer_deltas(None)
+        if bids:
+            self.store.compact(max(bids))
+        if self.store.watermark() is None:
             raise ValueError("empty index; nothing to split")
-        members = base.filter(F.col("cell_id") == int(cell_id)).select(
-            "vec_id", "v", "nrm"
+        members = (
+            self.store.rows()
+            .filter(F.col("cell_id") == int(cell_id))
+            .select("vec_id", "v", "nrm")
         )
         new_ids = [int(cell_id)] + [
             max(by_id) + 1 + i for i in range(n_sub - 1)
@@ -380,15 +373,14 @@ class StreamingIVFIndex:
         self._cents = None  # re-read on next use
         # 5. base swap: rows of the split family re-assigned among the
         # subs (idempotent — sub rows re-assign onto themselves), every
-        # other cell untouched, watermark column carried through
-        base = self.store.base.read()
-        if base is not None:
-            fam = F.col("cell_id").isin([cell_id, *sub_ids])
-            relaid = base.withColumn(
+        # other cell untouched, watermark carried through
+        fam = F.col("cell_id").isin([cell_id, *sub_ids])
+        self.store.map_base(
+            lambda base: base.withColumn(
                 "cell_id",
                 F.when(fam, _assign_col(subs)).otherwise(F.col("cell_id")),
             )
-            self.store.base.swap(relaid, partition_by=["cell_id"])
+        )
         # 6. the journal is the last thing to go
         os.remove(self.journal_path)
 

@@ -15,10 +15,10 @@ What Okapi BM25 needs, and why it streams cleanly:
 
 Both halves of the state live on the shared delta-store recipes
 (streaming/delta_store.py): the per-term stats delta (one row per
-query term + the two scalars, a bounded literal_frame) in an
-AdditiveDeltaStore, the postings in an AppendDeltaStore — so replay
-safety is partition ownership, compaction is the shared
-watermark-inside-the-frame fold, and this module owns only the BM25
+query term + the two scalars, a bounded literal_frame) in a
+sum-folded KeyedDeltaStore, the postings in an AppendDeltaStore — so
+replay safety is partition ownership, compaction is the shared
+watermark-directory fold, and this module owns only the BM25
 math.
 
 ``score()`` folds the stats deltas (a bounded batches x |terms| read),
@@ -51,8 +51,8 @@ from cdc_sync_poc_spark.llm.lm_quality import (
 )
 from cdc_sync_poc_spark.sources.loader import literal_frame
 from cdc_sync_poc_spark.streaming.delta_store import (
-    AdditiveDeltaStore,
     AppendDeltaStore,
+    KeyedDeltaStore,
 )
 
 
@@ -60,11 +60,10 @@ class StreamingBM25Stats:
     def __init__(self, spark: SparkSession, root: str, terms=BM25_TERMS) -> None:
         self.spark = spark
         self.terms = tuple(terms)
-        self.stats = AdditiveDeltaStore(
+        self.stats = KeyedDeltaStore(
             spark,
             root,
             key_cols=["term"],
-            sum_cols=["df", "n_docs", "sum_len"],
             ddl="term string, df bigint, n_docs bigint, sum_len bigint",
             deltas_name="stats",
             base_name="stats_base",
@@ -72,7 +71,6 @@ class StreamingBM25Stats:
         self.postings = AppendDeltaStore(
             spark,
             root,
-            cols=["doc_id", "term", "tf", "dl", "batch_id"],
             ddl="doc_id bigint, term string, tf bigint, dl bigint,"
             " batch_id bigint",
             deltas_name="postings",
@@ -163,7 +161,7 @@ class StreamingBM25Stats:
             )
         )
         scored = (
-            self.postings.rows_or_empty()
+            self.postings.rows()
             .join(dfs, "term")
             .crossJoin(stats)
             .groupBy("doc_id")

@@ -6,7 +6,7 @@ The batch BPE family (llm/tokenizer.py) touches the corpus exactly once
 merge step after that is vocab-sized. At 100 TB the right production
 shape is therefore: maintain the word-frequency vocabulary
 INCREMENTALLY as documents arrive (this module — per batch one
-map-side-combined count agg into an AdditiveDeltaStore, zero reads of
+map-side-combined count agg into a sum-folded KeyedDeltaStore, zero reads of
 prior state on the write path), and learn/refresh the merge table
 OFFLINE from the stored vocabulary whenever the tokenizer is re-cut —
 re-scanning the corpus for a tokenizer refresh is the anti-pattern
@@ -18,10 +18,10 @@ tie-breaks are identical whether the vocabulary was built by stream or
 by backfill — pinned by the equals-batch test in
 tests/test_streaming_docs.py.
 
-Replay safety: the shared AdditiveDeltaStore contract — per-batch
+Replay safety: the shared delta-store contract — per-batch
 delta partitions owned by batch_id (a replayed batch overwrites its
 own partition byte-identically), compaction crash-safe via the
-watermark inside the base (streaming/delta_store.py).
+base's watermark directory (streaming/delta_store.py).
 
 Reference parity: the reference ships no tokenizer; this is part of
 the M6 training-data surface (SURVEY §2 extension).
@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
 
 def word_counts(docs: DataFrame) -> DataFrame:
@@ -53,11 +53,10 @@ class StreamingBPEVocab:
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
-        self.store = AdditiveDeltaStore(
+        self.store = KeyedDeltaStore(
             spark,
             root,
             key_cols=["word"],
-            sum_cols=["n"],
             ddl="word string, n bigint",
             deltas_name="word_counts",
         )

@@ -13,9 +13,9 @@ keeps both live:
   clamped to [-10, 9]; the normalized score lives in [-1, 1]) — the
   drift curve a dashboard alerts on.
 
-Both are AdditiveDeltaStores: per batch ONE map-only scoring pass
-(the shared ``scored_frame`` expression — bit-identical scores to the
-batch queries) feeding two map-side-combined count aggs; zero reads
+Both are sum-folded KeyedDeltaStores: per batch ONE map-only scoring
+pass (the shared ``scored_frame`` expression — bit-identical scores to
+the batch queries) feeding two map-side-combined count aggs; zero reads
 of prior state on the write path; replay-safe by partition ownership
 + the compaction watermark (streaming/delta_store.py).
 
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_sync_poc_spark.llm.classifier import CLF_WOFF, scored_frame
-from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
 
 def confusion_counts(docs: DataFrame) -> DataFrame:
@@ -86,19 +86,17 @@ class StreamingClfStats:
         self.spark = spark
         import os
 
-        self.confusion_store = AdditiveDeltaStore(
+        self.confusion_store = KeyedDeltaStore(
             spark,
             os.path.join(root, "confusion"),
             key_cols=["clf_label", "ref_label"],
-            sum_cols=["n"],
             ddl="clf_label string, ref_label string, n bigint",
             deltas_name="counts",
         )
-        self.hist_store = AdditiveDeltaStore(
+        self.hist_store = KeyedDeltaStore(
             spark,
             os.path.join(root, "hist"),
             key_cols=["band"],
-            sum_cols=["n"],
             ddl="band bigint, n bigint",
             deltas_name="counts",
         )

@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 
 from cdc_sync_poc_spark.llm.dedup import _shingles
 from cdc_sync_poc_spark.llm.hygiene import BENCH_MOD
-from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
 _BENCH_SCHEMA = T.StructType([T.StructField("shingle", T.StringType())])
 _CORPUS_SCHEMA = T.StructType(
@@ -65,19 +65,17 @@ class StreamingDecontam:
         self.spark = spark
         self.bench_dir = os.path.join(root, "bench_idx")
         self.corpus_dir = os.path.join(root, "corpus_idx")
-        self.hits = AdditiveDeltaStore(
+        self.hits = KeyedDeltaStore(
             spark,
             root,
             key_cols=["doc_id"],
-            sum_cols=["n_hits"],
             ddl="doc_id bigint, n_hits bigint",
             deltas_name="hits",
         )
-        self.nsh = AdditiveDeltaStore(
+        self.nsh = KeyedDeltaStore(
             spark,
             root,
             key_cols=["doc_id"],
-            sum_cols=["n_shingles"],
             ddl="doc_id bigint, n_shingles bigint",
             deltas_name="nsh",
             base_name="nsh_base",

@@ -6,8 +6,9 @@ Two tiers, by fidelity:
   change_hash with a 5-minute watermark: drops any event whose hash was
   seen within the watermark window. State eviction (st03's 10-minute
   SP_CLEANUP_HASH job) is automatic watermark GC — no cleanup job at
-  all. This is the production default: fully JVM-side, RocksDB-backed
-  state at scale. First-seen-wins within the window — NOT the exact
+  all. This is the production default: fully JVM-side, in Spark's
+  default HDFS-backed state store (no provider is configured).
+  First-seen-wins within the window — NOT the exact
   sequential semantics.
 * ``stateful_dedup`` — the reference's exact sequential semantics
   (blocked and validation-failed events do NOT refresh the window —

@@ -1,9 +1,9 @@
 """Streaming DSIR term statistics — the continuous form of the
 frequency-ratio table behind dsir_importance (llm/lm_quality.py): the
 per-term raw/target counts DSIR needs are VOCABULARY-sized additive
-state, maintained through the generalized AdditiveDeltaStore
+state, maintained through the sum-folded KeyedDeltaStore
 (streaming/delta_store.py) — per-batch delta partitions replay-safe by
-ownership, compaction crash-safe by the watermark-inside-the-frame.
+ownership, compaction crash-safe by the watermark directory.
 
 Unlike the BM25 maintainer (whose per-query-term state is bounded by
 the query), the DSIR ratio table covers EVERY term, so this is the
@@ -26,17 +26,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_sync_poc_spark.llm.lm_quality import DSIR_FIX
-from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
 
 class StreamingDSIRStats:
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
-        self.store = AdditiveDeltaStore(
+        self.store = KeyedDeltaStore(
             spark,
             root,
             key_cols=["term"],
-            sum_cols=["c_r", "c_t"],
             ddl="term string, c_r bigint, c_t bigint",
         )
 

@@ -5,8 +5,8 @@ candidate-generation exchange rate CURRENT as the corpus grows, so the
 band-size decision can be re-read from a dashboard instead of re-run.
 
 What it tracks, exactly: per (band_size, band_id, band_key) the number
-of documents ever landed in that bucket, as an AdditiveDeltaStore
-(sum-mergeable, replay-safe by partition ownership + watermark).
+of documents ever landed in that bucket, as a KeyedDeltaStore
+(sum-folded, replay-safe by partition ownership + watermark).
 ``curve()`` folds that into the per-band-size **candidate-slot count**
 sum over buckets of C(n, 2) — the number of co-bucket pairs the banded
 self-join would EMIT. That is the join's true fan-out cost (the number
@@ -46,7 +46,7 @@ from cdc_sync_poc_spark.llm.dedup import (
     _minhash_sig,
     _shingles,
 )
-from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
 
 def tagged_band_counts(docs: DataFrame) -> DataFrame:
@@ -77,11 +77,10 @@ class StreamingLSHCurve:
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
-        self.store = AdditiveDeltaStore(
+        self.store = KeyedDeltaStore(
             spark,
             root,
             key_cols=["band_size", "band_id", "band_key"],
-            sum_cols=["n"],
             ddl="band_size bigint, band_id int, band_key string, n bigint",
             deltas_name="bucket_counts",
         )

@@ -57,33 +57,18 @@ class StreamingMediaIndex:
         self.store = AppendDeltaStore(
             spark,
             root,
-            cols=["doc_id", "phash", "band_id", "band_key", "batch_id"],
+            ddl="doc_id bigint, phash bigint, band_id int, band_key bigint,"
+            " batch_id bigint",
             deltas_name="bands",
         )
-
-    @property
-    def bands_dir(self) -> str:
-        return self.store.deltas_dir
-
-    def _bands_frame(self) -> DataFrame | None:
-        """All stored fingerprints: compacted base + per-batch
-        partitions newer than the base watermark (folded-then-replayed
-        partitions excluded — the shared AppendDeltaStore read path)."""
-        return self.store.rows()
 
     def compact(self, upto_batch_id: int) -> None:
         """Fold fingerprint partitions with batch_id <= ``upto_batch_id``
         into one base — bounds the stored-index file count at O(1) dirs
         instead of O(batches); crash windows analyzed in
         streaming/delta_store.py, replay-invisible because screening
-        reads through _bands_frame()."""
+        reads through the store."""
         self.store.compact(upto_batch_id)
-
-    def _stored_before(self, batch_id: int) -> DataFrame | None:
-        stored = self._bands_frame()
-        if stored is None:
-            return None
-        return stored.filter(F.col("batch_id") < batch_id).drop("batch_id")
 
     def screen_batch(self, docs: DataFrame, batch_id: int) -> None:
         """Fingerprint one micro-batch of documents' media payloads,
@@ -97,31 +82,34 @@ class StreamingMediaIndex:
             # only), normalized to the batch operator's (lower id, higher
             # id) orientation — hamming is symmetric, so only the ids need
             # the least/greatest swap
-            stored = self._stored_before(batch_id)
-            if stored is not None:
-                s = stored.alias("s")
-                n = bd.alias("n")
-                cross = (
-                    s.join(
-                        n,
-                        (F.col("s.band_id") == F.col("n.band_id"))
-                        & (F.col("s.band_key") == F.col("n.band_key"))
-                        & (F.col("s.doc_id") != F.col("n.doc_id")),
-                    )
-                    .select(
-                        F.least("s.doc_id", "n.doc_id").alias("doc_a"),
-                        F.greatest("s.doc_id", "n.doc_id").alias("doc_b"),
-                        F.col("s.phash").alias("pa"),
-                        F.col("n.phash").alias("pb"),
-                    )
-                    .distinct()
-                    .withColumn(
-                        "hamming", F.expr("bit_count(pa ^ pb)").cast("bigint")
-                    )
-                    .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-                    .select("doc_a", "doc_b", "hamming")
+            s = (
+                self.store.rows()
+                .filter(F.col("batch_id") < batch_id)
+                .drop("batch_id")
+                .alias("s")
+            )
+            n = bd.alias("n")
+            cross = (
+                s.join(
+                    n,
+                    (F.col("s.band_id") == F.col("n.band_id"))
+                    & (F.col("s.band_key") == F.col("n.band_key"))
+                    & (F.col("s.doc_id") != F.col("n.doc_id")),
                 )
-                pairs = pairs.unionByName(cross).distinct()
+                .select(
+                    F.least("s.doc_id", "n.doc_id").alias("doc_a"),
+                    F.greatest("s.doc_id", "n.doc_id").alias("doc_b"),
+                    F.col("s.phash").alias("pa"),
+                    F.col("n.phash").alias("pb"),
+                )
+                .distinct()
+                .withColumn(
+                    "hamming", F.expr("bit_count(pa ^ pb)").cast("bigint")
+                )
+                .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
+                .select("doc_a", "doc_b", "hamming")
+            )
+            pairs = pairs.unionByName(cross).distinct()
 
             pairs.write.mode("overwrite").parquet(
                 os.path.join(self.pairs_dir, f"batch_id={batch_id}")

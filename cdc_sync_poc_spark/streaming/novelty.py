@@ -6,9 +6,9 @@ point WITHOUT ever rescanning document text.
 
 State, on the shared delta-store recipes (streaming/delta_store.py):
 
-* gram ownership in a :class:`MinDeltaStore` keyed by the 128-bit gram
-  hash: per batch ONE per-gram min(doc_id) hash agg -> one delta
-  partition; reads/compaction re-fold with min, so ownership follows
+* gram ownership in a min-folded :class:`KeyedDeltaStore` keyed by the
+  128-bit gram hash: per batch ONE per-gram min(doc_id) hash agg -> one
+  delta partition; reads/compaction re-fold with min, so ownership follows
   the BATCH operator's min-doc_id definition — a later batch carrying
   a smaller doc_id legitimately steals grams, and arrival order never
   matters (min is associative, commutative, idempotent).
@@ -39,26 +39,25 @@ from cdc_sync_poc_spark.streaming.util import persisted
 from cdc_sync_poc_spark.llm.preprocess import DUP_N
 from cdc_sync_poc_spark.streaming.delta_store import (
     AppendDeltaStore,
-    MinDeltaStore,
+    KeyedDeltaStore,
 )
 
 
 class StreamingNovelty:
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
-        self.owners = MinDeltaStore(
+        self.owners = KeyedDeltaStore(
             spark,
             root,
             key_cols=["gh"],
-            min_cols=["owner"],
             ddl="gh string, owner bigint",
+            agg="min",
             deltas_name="owners",
             base_name="owners_base",
         )
         self.doc_counts = AppendDeltaStore(
             spark,
             root,
-            cols=["doc_id", "n_distinct", "batch_id"],
             ddl="doc_id bigint, n_distinct bigint, batch_id bigint",
             deltas_name="docs",
             base_name="docs_base",
@@ -110,7 +109,7 @@ class StreamingNovelty:
         )
         novel = F.coalesce(F.col("n_novel"), F.lit(0)).cast("bigint")
         return (
-            self.doc_counts.rows_or_empty()
+            self.doc_counts.rows()
             .select("doc_id", "n_distinct")
             .join(owned, "doc_id", "left")
             .select(

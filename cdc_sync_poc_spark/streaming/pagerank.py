@@ -24,14 +24,14 @@ Two pieces of cross-batch state, both replay-safe:
   documented cost of dropping the ONE boundary transition across an
   idle gap for a user that later returns; ``None`` keeps tails
   forever for exact batch parity.
-* **compacted base** (``base`` SwapStore): ``compact()`` folds the
+* **compacted base** (the store's SwapStore): ``compact()`` folds the
   delta partitions up to a watermark into one summed table so the
   per-batch read amplification of ``ranks()`` stays bounded. The
-  watermark rides INSIDE the swapped frame (an ``upto`` column on
-  every row), so base and watermark move in one atomic rename —
-  ``ranks()`` reads base + deltas with ``batch_id > upto`` and a crash
-  between the swap and the delta cleanup merely leaves already-folded
-  partitions on disk, EXCLUDED by the watermark, never double-counted.
+  watermark is the base's ``upto=U`` directory, so base and watermark
+  move in one atomic rename — ``ranks()`` reads base + deltas with
+  ``batch_id > upto`` and a crash between the swap and the delta
+  cleanup merely leaves already-folded partitions on disk, EXCLUDED by
+  the watermark, never double-counted.
 
 Ordering contract (same as StreamingPacker): transitions form in
 ARRIVAL order — batch sequence first, then (ts, event_id) within a
@@ -57,7 +57,7 @@ from cdc_sync_poc_spark.streaming.util import persisted
 from pyspark.sql import Window
 
 from cdc_sync_poc_spark.operators.graph import pr_fixed_point_frames
-from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
 _EV_COLS = ["user_id", "ts", "event_id", "event_type"]
 
@@ -92,20 +92,17 @@ class StreamingPageRank:
                 f"ttl_batches must be >= 1, got {ttl_batches}"
             )
         self.spark = spark
-        # edge counts live in the generalized additive store (this
+        # edge counts live in the shared sum-folded store (this
         # module is where its delta/compaction recipe was first built;
         # the mechanics now live in streaming/delta_store.py)
-        self.edge_store = AdditiveDeltaStore(
+        self.edge_store = KeyedDeltaStore(
             spark,
             root,
             key_cols=["src", "dst"],
-            sum_cols=["n"],
             ddl="src string, dst string, n long",
             deltas_name="edges",
         )
-        self.edges_dir = self.edge_store.deltas_dir
         self.tails_dir = os.path.join(root, "tails")
-        self.base = self.edge_store.base
         self.ttl_batches = ttl_batches
 
     def _tails_before(self, batch_id: int) -> DataFrame | None:
@@ -196,15 +193,15 @@ class StreamingPageRank:
 
     def _edge_counts(self) -> DataFrame:
         """Accumulated (src, dst, n): compacted base + deltas newer
-        than the base watermark (AdditiveDeltaStore.totals —
+        than the base watermark (KeyedDeltaStore.totals —
         folded-but-not-yet-deleted or replay-recreated partitions are
         excluded by the watermark, never double-counted)."""
         return self.edge_store.totals()
 
     def compact(self, upto_batch_id: int) -> None:
         """Fold delta partitions with batch_id <= ``upto_batch_id``
-        into the summed base (AdditiveDeltaStore.compact): the
-        watermark travels inside the swapped frame, cleanup only
+        into the summed base (KeyedDeltaStore.compact): the
+        watermark is the base's upto= directory, cleanup only
         removes partitions the NEW watermark already excludes, and
         calling before any absorb_batch is a clean no-op (ADVICE r8) —
         re-running compact() or crashing mid-cleanup changes nothing

@@ -64,7 +64,6 @@ from cdc_sync_poc_spark.llm.similarity import (
 )
 from cdc_sync_poc_spark.streaming.delta_store import AppendDeltaStore
 
-_COLS = ["vec_id", "cell_id", "proto", "batch_id"]
 _DDL = "vec_id long, cell_id bigint, proto double, batch_id long"
 
 
@@ -79,7 +78,6 @@ class StreamingProtoPrune:
         self.store = AppendDeltaStore(
             spark,
             root,
-            cols=_COLS,
             ddl=_DDL,
             deltas_name="scores",
         )
@@ -106,7 +104,7 @@ class StreamingProtoPrune:
     def scored(self) -> DataFrame:
         """(vec_id, cell_id, proto) for everything ingested — identical
         rows to the batch argmax map stage under the same quantizer."""
-        return self.store.rows_or_empty().select("vec_id", "cell_id", "proto")
+        return self.store.rows().select("vec_id", "cell_id", "proto")
 
     def prune(self) -> DataFrame:
         """Current prune verdicts — same columns and values as the
@@ -144,15 +142,7 @@ class StreamingProtoPrune:
         replace_base_rows (delta_store.py)."""
         from cdc_sync_poc_spark.sources.loader import literal_frame
 
-        self.store.compact(upto_batch_id)
-        newer = self.store.newer_deltas(upto_batch_id)
-        if newer:
-            raise RuntimeError(
-                "rederive_cells requires quiesced ingest: score delta "
-                f"partitions {sorted(newer)} are newer than "
-                f"upto_batch_id={upto_batch_id} — pass the last "
-                "absorbed batch id"
-            )
+        self.store.quiesce(upto_batch_id)
         rescored = members.select(
             "vec_id",
             _assign_struct_col(sub_cents).alias("mx"),

@@ -15,8 +15,8 @@ per micro-batch with persisted stores:
   ``kept`` verdict — can flip after the fact (delta 3; decontam's
   retro-screen, embedding-side).
 
-The per-vector running max lives in a MaxDeltaStore; max is
-associative, commutative AND idempotent, so a replayed batch's
+The per-vector running max lives in a max-folded KeyedDeltaStore; max
+is associative, commutative AND idempotent, so a replayed batch's
 overwritten delta (or even a double-counted pair) cannot corrupt the
 state, and ``semdedup()`` converges to the batch sem_dedup output for
 ANY arrival order — pinned in tests/test_streaming_semdedup.py with
@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 
 from cdc_sync_poc_spark.llm.similarity import SEM_TAU
 from cdc_sync_poc_spark.streaming.ann_index import StreamingIVFIndex
-from cdc_sync_poc_spark.streaming.delta_store import MaxDeltaStore
+from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 from cdc_sync_poc_spark.streaming.util import persisted
 
 _PAIR_COS = (
@@ -106,12 +106,12 @@ class StreamingSemDedup:
         self.idx = StreamingIVFIndex(
             spark, os.path.join(root, "ivf"), cents_rows=cents_rows
         )
-        self.maxcos = MaxDeltaStore(
+        self.maxcos = KeyedDeltaStore(
             spark,
             root,
             key_cols=["vec_id"],
-            max_cols=["max_cos"],
             ddl="vec_id bigint, max_cos double",
+            agg="max",
             deltas_name="maxcos",
             base_name="maxcos_base",
         )
@@ -207,16 +207,8 @@ class StreamingSemDedup:
 
         # pre-gate BEFORE the index mutates (replace_base_rows guards
         # again at replacement time, but by then the split would have
-        # happened): fold, then refuse on any newer live delta
-        self.maxcos.compact(upto_batch_id)
-        newer = self.maxcos.newer_deltas(upto_batch_id)
-        if newer:
-            raise RuntimeError(
-                "split_cell requires quiesced ingest: max-cos delta "
-                f"partitions {sorted(newer)} are newer than "
-                f"upto_batch_id={upto_batch_id} and would re-raise "
-                "replaced keys — pass the last absorbed batch id"
-            )
+        # happened)
+        self.maxcos.quiesce(upto_batch_id)
 
         def _journal_intent(new_ids: list[int]) -> None:
             tmp = self.rederive_journal_path + ".tmp"

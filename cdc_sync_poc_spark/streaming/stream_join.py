@@ -13,8 +13,9 @@ without bound, which is exactly why Spark REQUIRES the time bound on
 an append-mode stream-stream join.
 
 At scale this is the same shuffle as the batch join (both sides hash
-on user_id) plus a RocksDB state store per partition holding only the
-in-window tail of each stream. Batch equivalence (same rows as the
+on user_id) plus a state store per partition (Spark's default
+HDFS-backed provider; none is configured) holding only the in-window
+tail of each stream. Batch equivalence (same rows as the
 static interval join over the union of all micro-batches) is pinned in
 tests/test_streaming.py.
 """

@@ -1046,8 +1046,9 @@ def test_pack_padding_waste_invariants(spark, tmp_path):
 
 
 @pytest.mark.slow
+@pytest.mark.parametrize("agg", ["sum", "min", "max"])
 @given(
-    counts=st.lists(
+    batches=st.lists(
         st.lists(
             st.tuples(
                 st.sampled_from(["a", "b", "c", "d"]),
@@ -1063,42 +1064,44 @@ def test_pack_padding_waste_invariants(spark, tmp_path):
     replay=st.integers(min_value=0, max_value=3),
 )
 @settings(**_SETTINGS)
-def test_additive_delta_store_totals_invariant(
-    spark, tmp_path_factory, counts, compact_at, replay
+def test_keyed_delta_store_totals_invariant(
+    spark, tmp_path_factory, agg, batches, compact_at, replay
 ):
-    """AdditiveDeltaStore (streaming/delta_store.py): for ANY batch
-    split, compaction point, and replayed batch, totals() equals the
-    straight-line per-key sum over all batches — compaction and
-    replays must be observationally invisible."""
-    from collections import defaultdict
+    """KeyedDeltaStore (streaming/delta_store.py), for each aggregate:
+    for ANY batch split, compaction point, and replayed batch,
+    totals() equals the straight-line per-key fold over all batches —
+    compaction and replays must be observationally invisible (min and
+    max are idempotent as well, so arrival order cannot matter)."""
+    from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
-    from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
-
-    root = tmp_path_factory.mktemp("ads_prop")
-    store = AdditiveDeltaStore(
-        spark, str(root), ["k"], ["n"], "k string, n bigint"
+    fold = {"sum": lambda a, b: a + b, "min": min, "max": max}[agg]
+    root = tmp_path_factory.mktemp("kds_prop")
+    store = KeyedDeltaStore(
+        spark, str(root), ["k"], "k string, n bigint", agg=agg
     )
 
-    def agg_frame(batch):
-        sums = defaultdict(int)
-        for k, n in batch:
-            sums[k] += n
-        return spark.createDataFrame(list(sums.items()), "k string, n bigint")
+    def folded(rows, acc):
+        for k, n in rows:
+            acc[k] = fold(acc[k], n) if k in acc else n
+        return acc
 
-    want: dict[str, int] = defaultdict(int)
-    for bid, batch in enumerate(counts):
+    def agg_frame(batch):
+        return spark.createDataFrame(
+            list(folded(batch, {}).items()), "k string, n bigint"
+        )
+
+    want: dict[str, int] = {}
+    for bid, batch in enumerate(batches):
         store.write_delta(agg_frame(batch), bid)
-        for k, n in batch:
-            want[k] += n
+        folded(batch, want)
 
     store.compact(compact_at)
-    if replay < len(counts):
+    if replay < len(batches):
         # at-least-once: a batch replays AFTER compaction may have
         # folded it — partition ownership + watermark must absorb it
-        store.write_delta(agg_frame(counts[replay]), replay)
+        store.write_delta(agg_frame(batches[replay]), replay)
 
-    got = {r.k: r.n for r in store.totals().collect()}
-    assert got == {k: v for k, v in want.items() if v}
+    assert {r.k: r.n for r in store.totals().collect()} == want
 
 
 @given(
@@ -1250,61 +1253,6 @@ def test_scd2_writer_history_matches_lead_reference(
         for r in writer.history().collect()
     }
     assert got == _scd2_reference(events)
-
-
-@pytest.mark.slow
-@given(
-    owners=st.lists(
-        st.lists(
-            st.tuples(
-                st.sampled_from(["g1", "g2", "g3", "g4"]),
-                st.integers(min_value=1, max_value=50),
-            ),
-            min_size=0,
-            max_size=4,
-        ),
-        min_size=1,
-        max_size=4,
-    ),
-    compact_at=st.integers(min_value=-1, max_value=3),
-    replay=st.integers(min_value=0, max_value=3),
-)
-@settings(**_SETTINGS)
-def test_min_delta_store_totals_invariant(
-    spark, tmp_path_factory, owners, compact_at, replay
-):
-    """MinDeltaStore (streaming/delta_store.py): for ANY batch split,
-    compaction point, and replayed batch, totals() equals the
-    straight-line per-key min over all batches — the min fold is
-    associative, commutative AND idempotent, so compaction, replays
-    and arrival order must all be observationally invisible."""
-    from cdc_sync_poc_spark.streaming.delta_store import MinDeltaStore
-
-    root = tmp_path_factory.mktemp("mds_prop")
-    store = MinDeltaStore(
-        spark, str(root), ["k"], ["owner"], "k string, owner bigint"
-    )
-
-    def agg_frame(batch):
-        mins: dict[str, int] = {}
-        for k, o in batch:
-            mins[k] = min(mins.get(k, o), o)
-        return spark.createDataFrame(
-            list(mins.items()), "k string, owner bigint"
-        )
-
-    want: dict[str, int] = {}
-    for bid, batch in enumerate(owners):
-        store.write_delta(agg_frame(batch), bid)
-        for k, o in batch:
-            want[k] = min(want.get(k, o), o)
-
-    store.compact(compact_at)
-    if replay < len(owners):
-        store.write_delta(agg_frame(owners[replay]), replay)
-
-    got = {r.k: r.owner for r in store.totals().collect()}
-    assert got == want
 
 
 @given(
@@ -1540,10 +1488,7 @@ def test_append_delta_store_rows_invariant(
 
     root = tmp_path_factory.mktemp("ads_prop")
     store = AppendDeltaStore(
-        spark,
-        str(root),
-        cols=["item", "val", "batch_id"],
-        ddl="item string, val bigint, batch_id long",
+        spark, str(root), "item string, val bigint, batch_id long"
     )
 
     def frame(batch):
@@ -1565,7 +1510,7 @@ def test_append_delta_store_rows_invariant(
         store.write_delta(frame(batches[replay2]), replay2)
 
     got = Counter(
-        (r.item, r.val, r.batch_id) for r in store.rows_or_empty().collect()
+        (r.item, r.val, r.batch_id) for r in store.rows().collect()
     )
     assert got == want
 

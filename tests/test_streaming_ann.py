@@ -228,10 +228,12 @@ def test_ivf_index_compaction_relayouts_by_cell(spark, tmp_path):
         d for d in os.listdir(idx.index_dir) if d.startswith("batch_id=")
     )
     assert left == ["batch_id=2"]
+    # the base really is cell-partitioned, below its watermark level
+    upto_dir = os.path.join(idx.base.cur_dir, "upto=1")
     base_cells = sorted(
-        d for d in os.listdir(idx.base.cur_dir) if d.startswith("cell_id=")
+        d for d in os.listdir(upto_dir) if d.startswith("cell_id=")
     )
-    assert base_cells  # the base really is cell-partitioned
+    assert base_cells
 
     # probe scan only touches probe-cell directories (base + delta)
     qn = math.sqrt(sum(x * x for x in qv))

@@ -1,5 +1,5 @@
 """Streaming DSIR term statistics (streaming/dsir_stats.py) on the
-generalized AdditiveDeltaStore: stored-state ratio table bit-identical
+sum-folded KeyedDeltaStore: stored-state ratio table bit-identical
 to the batch dsir_ratio_frame over the union; compaction changes
 nothing; a replay recreating an already-folded delta partition is
 excluded by the watermark, never double-counted."""
@@ -104,10 +104,10 @@ def test_additive_delta_store_compaction_is_idempotent(spark, tmp_path):
     """Re-running compact() at the same or an older watermark is a
     no-op; compacting with no deltas is a clean no-op; an interrupted
     cleanup (folded partition left behind) never double-counts."""
-    from cdc_sync_poc_spark.streaming.delta_store import AdditiveDeltaStore
+    from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
 
-    store = AdditiveDeltaStore(
-        spark, str(tmp_path / "ads"), ["k"], ["n"], "k string, n bigint"
+    store = KeyedDeltaStore(
+        spark, str(tmp_path / "ads"), ["k"], "k string, n bigint"
     )
     # compact before any delta: clean no-op
     store.compact(5)

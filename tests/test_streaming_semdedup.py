@@ -294,14 +294,14 @@ def test_rederive_replaces_keys_downward(spark, tmp_path):
 
     # inflate the victim's folded state to a value the max fold could
     # never take back
-    base = body.maxcos.base.read()
-    inflated = base.withColumn(
-        "max_cos",
-        F.when(F.col("vec_id") == victim, F.lit(0.999999)).otherwise(
-            F.col("max_cos")
-        ),
+    body.maxcos.map_base(
+        lambda base: base.withColumn(
+            "max_cos",
+            F.when(F.col("vec_id") == victim, F.lit(0.999999)).otherwise(
+                F.col("max_cos")
+            ),
+        )
     )
-    body.maxcos.base.swap(inflated)
     assert {
         r.vec_id: r.max_cos for r in body.semdedup().collect()
     }[victim] == 0.999999
