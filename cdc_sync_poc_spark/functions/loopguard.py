@@ -12,16 +12,19 @@ time order; each event is blocked iff its gap from the LAST
 APPLIED-AND-VALID event is under the window, and only unblocked valid
 events refresh the state.
 
-This is genuinely beyond SQL window functions (state depends on prior
-*decisions*, not prior rows), so the batch form uses ``applyInPandas``
-keyed by change_hash — the same sharding as its streaming twin,
-``streaming/dedup.stateful_dedup`` (``applyInPandasWithState``). Both
-run the one walk kernel below (``walk_kernel``) on rows flagged by the
-one validity predicate (``stage1_invalid``); only the initial
-last-applied timestamp differs (none in batch, the state store's in a
-stream). Scale: state per key is one timestamp; groups are tiny (hash
-collisions are rare); the shuffle is on the high-cardinality hash key
-so it distributes evenly at 100 TB — no skew, no driver involvement.
+This is beyond SQL window functions (state depends on prior
+*decisions*, not prior rows), so the batch form ``with_loop_blocked``
+is a keyed fold: one group per change_hash, its events sorted by (ts,
+cdc_seq) and walked by a SQL ``aggregate`` whose state is the last
+applied time — all JVM-side, no Python worker. The stream form,
+``streaming/dedup.stateful_dedup`` (``applyInPandasWithState``), runs
+the same rule in ``walk_kernel`` below, seeded with the state store's
+last applied time; ``tests/test_tws_dedup.py`` cross-checks the two.
+Both flag invalid rows with the one validity predicate
+(``stage1_invalid``). Scale: state per key is one timestamp; groups
+are tiny (hash collisions are rare); the shuffle is on the
+high-cardinality hash key so it distributes evenly at 100 TB — no
+skew, no driver involvement.
 """
 
 from __future__ import annotations
@@ -29,9 +32,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 WINDOW_US = 5 * 60 * 1_000_000  # 5 minutes (FN_IS_LOOP interval, :40)
 
@@ -47,7 +49,8 @@ def stage1_invalid(df: DataFrame) -> Column:
 
 
 def walk_kernel() -> Callable:
-    """The sequential FN_IS_LOOP walk over one hash's rows.
+    """The sequential FN_IS_LOOP walk over one hash's rows, in pandas,
+    for the stream's ``applyInPandasWithState`` guard.
 
     ``walk(rows, last_applied_us)`` takes the rows (with ``ts``,
     ``cdc_seq`` and the ``__invalid`` flag) and the last applied time
@@ -88,88 +91,36 @@ def with_loop_blocked(cdc: DataFrame) -> DataFrame:
     (``stage1_invalid``) can be blocked but never refresh the window
     (SP_RECORD_HASH is skipped for stage-1 failures).
 
-    Fast paths: a hash that occurs once can never be blocked, and with a
-    high-cardinality content hash that is almost every row — those rows
-    bypass Python entirely (broadcast anti join + literal false). A hash
-    that occurs exactly TWICE is also closed-form (the second event is
-    blocked iff the first was valid and the gap is under the window — no
-    decision feedback yet), so pairs run as a lag() window, JVM-side.
-    Only chains of length >= 3 — where blocking depends on prior
-    DECISIONS — go through the Arrow/pandas walk, so the Python cost is
-    O(hashes repeating 3+ times), not O(events); on a content-hash
-    stream that set is typically EMPTY (the sf0.1 fixture has 138
-    pairs, zero 3+ chains) and the walk stage runs over zero rows.
-    At sf0.1 this is timing-neutral (measured: warm-up and steady
-    state flat vs the pairs-through-pandas version) — the win is at
-    scale, where pairs are the dominant duplicate class and keeping
-    them JVM-side removes almost all Arrow transfer and Python-worker
-    occupancy from the operator.
-    """
-    in_cols = [f.name for f in cdc.schema.fields]
-    cdc = cdc.withColumn("__invalid", stage1_invalid(cdc))
-    schema = T.StructType(
-        list(cdc.schema.fields) + [T.StructField("loop_blocked", T.BooleanType())]
+    One keyed fold: each hash's events are collected, sorted by (ts,
+    cdc_seq) and walked by ``aggregate`` with the state (last applied
+    time, decisions so far), then exploded back to rows. A hash seen
+    once folds one element and is never blocked, so singles need no
+    bypass. The shuffle is the one hash-keyed exchange; groups are
+    hash-collision-sized."""
+    event = F.struct(
+        F.unix_micros("ts").alias("us"),
+        F.col("cdc_seq"),
+        stage1_invalid(cdc).alias("invalid"),
+        F.struct(*cdc.columns).alias("row"),
     )
-    kernel = walk_kernel()
 
-    def walk(group: pd.DataFrame) -> pd.DataFrame:
-        return kernel(group, None)[0]
-
-    # The three branches below (dup-set agg, anti join, semi join) each
-    # recompute the sha256 change-hash from the raw events during the ONE
-    # materialization of the persisted result. That recompute is
-    # deliberate: scan+hash is cheap next to the walk, persisting the
-    # input as well doubles the memory footprint for no reuse, and
-    # persist-then-unpersist is a trap — Spark's non-cascading cache
-    # invalidation (SPARK-24596) lazily RECOMPILES the dependent result
-    # cache and drops its blocks, so every downstream consumer would
-    # silently rebuild the walk. At 100 TB the hashed view would be a
-    # persisted bronze table on storage, not an executor-memory cache.
-
-    # duplicate-hash key set: aggregates hash->count with map-side combine
-    # (only the 64-byte hash column moves, one row per distinct hash per
-    # partition), then keeps the hashes seen more than once — a tiny set
-    # for any content-hash stream, so it broadcasts. Rows with unique
-    # hashes never shuffle at all (broadcast anti join is map-only);
-    # pair hashes (exactly two occurrences) are exchanged for a lag()
-    # window; only 3+ chains reach the pandas walk.
-    counts = cdc.groupBy("change_hash").agg(F.count("*").alias("__n"))
-    # The REPEATED-hash set persists (138 rows at sf0.1 — O(duplicate
-    # keys)):
-    # the three class filters below would otherwise each re-evaluate
-    # the counts agg — three extra scan+hash+shuffle passes over the
-    # raw events during the one materialization (measured ~2 s each at
-    # sf0.1, the bulk of the st01 warmup cost). Never unpersisted — see
-    # the SPARK-24596 note above; the broadcast joins already assume
-    # this set is small, so pinning it adds no new scale assumption.
-    dups = counts.filter(F.col("__n") > 1).persist()
-    dup_hashes = dups.select("change_hash")
-    pair_hashes = dups.filter(F.col("__n") == 2).select("change_hash")
-    chain_hashes = dups.filter(F.col("__n") > 2).select("change_hash")
-    singles = cdc.join(
-        F.broadcast(dup_hashes), "change_hash", "left_anti"
-    ).withColumn("loop_blocked", F.lit(False))
-    w = Window.partitionBy("change_hash").orderBy("ts", "cdc_seq")
-    pairs = (
-        cdc.join(F.broadcast(pair_hashes), "change_hash", "left_semi")
-        .withColumn(
-            "loop_blocked",
-            F.coalesce(
-                ~F.lag("__invalid").over(w)
-                & (
-                    F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-                    < F.lit(WINDOW_US)
-                ),
-                F.lit(False),
-            ),
+    def step(acc: Column, e: Column) -> Column:
+        blocked = acc["last"].isNotNull() & (e["us"] - acc["last"] < WINDOW_US)
+        return F.struct(
+            F.when(blocked | e["invalid"], acc["last"])
+            .otherwise(e["us"])
+            .alias("last"),
+            F.array_append(acc["blocked"], blocked).alias("blocked"),
         )
-        .select(*in_cols, "loop_blocked")
+
+    start = F.struct(
+        F.lit(None).cast("long").alias("last"),
+        F.array().cast("array<boolean>").alias("blocked"),
     )
-    multis = (
-        cdc.join(F.broadcast(chain_hashes), "change_hash", "left_semi")
-        .groupBy("change_hash")
-        .applyInPandas(walk, schema=schema)
-        .select(*in_cols, "loop_blocked")
+    walked = (
+        cdc.groupBy("change_hash")
+        .agg(F.array_sort(F.collect_list(event)).alias("evs"))
+        .select("evs", F.aggregate("evs", start, step)["blocked"].alias("blocked"))
     )
     # persist the walked result: five downstream operators (st01, the
     # audit/classified family, ap05, pipeline_e2e) consume this exact
@@ -177,9 +128,8 @@ def with_loop_blocked(cdc: DataFrame) -> DataFrame:
     # one materialization. (The streaming twin needs no cache — its
     # state store IS the materialization.)
     return (
-        singles.select(*in_cols, "loop_blocked")
-        .unionByName(pairs)
-        .unionByName(multis)
+        walked.select(F.posexplode("evs").alias("i", "e"), "blocked")
+        .select("e.row.*", F.col("blocked")[F.col("i")].alias("loop_blocked"))
         .persist()
     )
 

@@ -273,69 +273,17 @@ def ap06_sequential_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     base never had), which the single-shot MERGE form (ap01) collapses
     to last-wins.
 
-    Physical shape: change rows SHUFFLE-join base state on pk (the base
-    is the 100 TB side — never broadcast; with the state table bucketed
-    by pk, as streaming/writer.py writes it, the join is co-located and
-    shuffle-free), then ONE applyInPandas keyed by pk walks each key's
-    ordered ops — the same sharding transformWithState would use;
-    Python cost is O(changes), state per key is (exists, value). The
-    untouched base remains JVM-side (anti join on the same key).
+    Each key's op sequence compacts to its replay-equal net op
+    (``net_effect``: DELETE, UPSERT or UPDATE, equal for both
+    pre-batch states of the key) and that one op per key goes through
+    the same MERGE as ap01 (``merge_final_state``; UPSERT creates or
+    updates like an INSERT). One pk hash agg plus the pk join, no
+    Python worker. The recursive-CTE oracle replays row by row.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cdc = cdc_view(spark, sf_dir).select("cdc_seq", "pk", "operation", "val")
-    base = load_table(spark, sf_dir, "customer")
-    base_state = base.select(
-        F.col("c_custkey").alias("b_pk"),
-        F.col("c_acctbal").alias("b_val"),
+    net = net_effect(cdc_view(spark, sf_dir)).select(
+        "pk", F.col("net_op").alias("operation"), F.col("net_val").alias("val")
     )
-    joined = cdc.join(base_state, cdc.pk == base_state.b_pk, "left")
-
-    out_schema = T.StructType(
-        [
-            T.StructField("pk", T.LongType()),
-            T.StructField("ex", T.BooleanType()),
-            T.StructField("acctbal", T.DoubleType()),
-        ]
-    )
-
-    def replay(group: pd.DataFrame) -> pd.DataFrame:
-        group = group.sort_values("cdc_seq")
-        pk = int(group["pk"].iloc[0])
-        ex = bool(group["b_pk"].notna().iloc[0])
-        val = group["b_val"].iloc[0]
-        for op, v in zip(group["operation"], group["val"]):
-            if op == "INSERT":
-                ex, val = True, v
-            elif op == "UPDATE":
-                if ex:
-                    val = v
-            else:  # DELETE
-                ex = False
-        return pd.DataFrame({"pk": [pk], "ex": [ex], "acctbal": [val]})
-
-    changed = (
-        joined.groupBy("pk")
-        .applyInPandas(replay, schema=out_schema)
-        .filter(F.col("ex"))
-        .select(
-            "pk",
-            F.concat(F.lit("U"), F.col("pk").cast("string")).alias("name"),
-            "acctbal",
-            F.lit("APPLIED").alias("src"),
-        )
-    )
-    untouched = (
-        base.join(cdc.select("pk").distinct(), base.c_custkey == F.col("pk"), "left_anti")
-        .select(
-            F.col("c_custkey").alias("pk"),
-            F.col("c_name").alias("name"),
-            F.col("c_acctbal").alias("acctbal"),
-            F.lit("BASE").alias("src"),
-        )
-    )
-    return changed.unionByName(untouched)
+    return merge_final_state(load_table(spark, sf_dir, "customer"), net)
 
 
 def net_effect(cdc: DataFrame) -> DataFrame:

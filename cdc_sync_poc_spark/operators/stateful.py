@@ -26,8 +26,9 @@ def st01_loop_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash dedup over a sliding 5-min window with sequential semantics
     (FN_IS_LOOP, poc/asis-oracle/init/04_create_procedures.sql:31-44;
     rationale docs/02-설계/02_무한루프_방지.md:105-194): blocked events do
-    not refresh the window. applyInPandas keyed by change_hash — the
-    batch twin of streaming/dedup.stateful_dedup."""
+    not refresh the window. One JVM-side fold keyed by change_hash
+    (``with_loop_blocked``) — the batch twin of
+    streaming/dedup.stateful_dedup."""
     walk = with_loop_blocked(cdc_view(spark, sf_dir))
     return walk.select("cdc_seq", "pk", "change_hash", "loop_blocked")
 

@@ -40,6 +40,8 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from cdc_sync_poc_spark.streaming.delta_store import batch_ids
+
 
 def _dir_stats(path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) of the parquet files in ``path``."""
@@ -206,15 +208,7 @@ def expire_old_batches(path: str, keep_latest: int) -> list[int]:
     Pure directory-listing work — no Spark job; idempotent (a second
     sweep finds nothing). Readers racing the delete see partition-level
     atomicity, same contract as compaction above."""
-    if not os.path.isdir(path):
-        return []
-    batches = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("batch_id=")
-        and os.path.isdir(os.path.join(path, d))
-        and d.split("=", 1)[1].isdigit()
-    )
+    batches = batch_ids(path)
     doomed = batches[:-keep_latest] if keep_latest > 0 else batches
     for b in doomed:
         shutil.rmtree(os.path.join(path, f"batch_id={b}"))

@@ -20,9 +20,10 @@ Two tiers, by fidelity:
   ``applyInPandasWithState`` rather than ``transformWithStateInPandas``
   because the latter's state server needs ``google.protobuf``, which
   this package does not depend on. The update function
-  runs ``functions/loopguard.walk_kernel`` — the same walk as the batch
-  ``with_loop_blocked`` — seeded with the checkpointed last-applied
-  time.
+  runs ``functions/loopguard.walk_kernel``, seeded with the
+  checkpointed last-applied time. The batch ``with_loop_blocked`` folds
+  the same rule JVM-side; ``tests/test_tws_dedup.py`` checks that both
+  flag the same rows.
 """
 
 from __future__ import annotations
@@ -50,7 +51,7 @@ def stateful_dedup(cdc: DataFrame) -> DataFrame:
     last-applied state across micro-batches through the checkpointed
     state store. The streaming twin of
     functions/loopguard.with_loop_blocked: same validity flag, same
-    walk kernel."""
+    walk rule (in pandas here, a SQL fold there)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     kernel = walk_kernel()

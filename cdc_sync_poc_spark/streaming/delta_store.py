@@ -72,6 +72,31 @@ def _typed(df: DataFrame, fields: list[StructField]) -> DataFrame:
     )
 
 
+def batch_ids(path: str) -> list[int]:
+    """The ids of the ``batch_id=N`` partition directories under
+    ``path``, ascending (empty when there is no ``path``): one
+    directory listing, no Spark job."""
+    if not os.path.isdir(path):
+        return []
+    ids = []
+    for d in os.listdir(path):
+        key, _, bid = d.partition("=")
+        if key == "batch_id" and os.path.isdir(os.path.join(path, d)):
+            try:
+                ids.append(int(bid))
+            except ValueError:
+                continue
+    return sorted(ids)
+
+
+def newest_batch_id(path: str, before: int | None = None) -> int | None:
+    """The newest ``batch_id=N`` partition under ``path`` with N <
+    ``before`` (any N when None); None when there is none. Per-batch
+    snapshot stores read their predecessor's snapshot through this."""
+    ids = [b for b in batch_ids(path) if before is None or b < before]
+    return ids[-1] if ids else None
+
+
 class _DeltaStoreBase:
     """The layout and the read, compact and repair paths of all three
     fold disciplines. ``ddl`` declares the row columns as read back
@@ -106,25 +131,13 @@ class _DeltaStoreBase:
     def _delta_dir(self, batch_id: int) -> str:
         return os.path.join(self.deltas_dir, f"batch_id={batch_id}")
 
-    def _batch_ids(self) -> list[int]:
-        """The ids of the delta partitions on disk."""
-        if not os.path.isdir(self.deltas_dir):
-            return []
-        ids = []
-        for d in os.listdir(self.deltas_dir):
-            key, _, bid = d.partition("=")
-            if key == "batch_id":
-                try:
-                    ids.append(int(bid))
-                except ValueError:
-                    continue
-        return ids
-
     def newer_deltas(self, watermark: int | None) -> list[int]:
         """Live delta partition ids newer than ``watermark`` (all of
         them when it is None)."""
         return [
-            b for b in self._batch_ids() if watermark is None or b > watermark
+            b
+            for b in batch_ids(self.deltas_dir)
+            if watermark is None or b > watermark
         ]
 
     def watermark(self) -> int | None:
@@ -161,7 +174,7 @@ class _DeltaStoreBase:
         parts = []
         if upto is not None:
             parts.append(self.base.read(self.base_schema).select(*self.cols))
-        if self._batch_ids():
+        if batch_ids(self.deltas_dir):
             deltas = self.spark.read.schema(self.delta_schema).parquet(
                 self.deltas_dir
             )
@@ -190,7 +203,7 @@ class _DeltaStoreBase:
     def compact(self, upto_batch_id: int) -> None:
         """Fold the deltas with batch_id <= ``upto_batch_id`` into the
         base; see the module docstring for the crash windows."""
-        if upto_batch_id < 0 or not self._batch_ids():
+        if upto_batch_id < 0 or not batch_ids(self.deltas_dir):
             return
         prev = self.watermark()
         if prev is not None and upto_batch_id <= prev:
@@ -200,7 +213,7 @@ class _DeltaStoreBase:
         )
         # cleanup AFTER the swap: these partitions are now <= the live
         # watermark, so the read path already ignores them
-        for bid in self._batch_ids():
+        for bid in batch_ids(self.deltas_dir):
             if bid <= upto_batch_id:
                 shutil.rmtree(self._delta_dir(bid))
 

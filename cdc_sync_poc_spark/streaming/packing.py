@@ -29,12 +29,15 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_sync_poc_spark.streaming.delta_store import newest_batch_id
 from cdc_sync_poc_spark.streaming.util import persisted
 
 from cdc_sync_poc_spark.llm.preprocess import (
     _bins_from_prev,
     packing_prev_frame,
 )
+
+_CARRY_DDL = "lang string, total long"
 
 
 class StreamingPacker:
@@ -47,18 +50,13 @@ class StreamingPacker:
         """Per-language token totals after the newest snapshot older
         than ``batch_id`` (empty on the first batch). Langs-sized
         driver collect — design-bounded."""
-        if not os.path.isdir(self.carry_dir):
-            return {}
-        snaps = self.spark.read.parquet(self.carry_dir).filter(
-            F.col("batch_id") < batch_id
-        )
-        latest = snaps.agg(F.max("batch_id").alias("b")).collect()[0].b
+        latest = newest_batch_id(self.carry_dir, before=batch_id)
         if latest is None:
             return {}
-        return {
-            r.lang: int(r.total)
-            for r in snaps.filter(F.col("batch_id") == latest).collect()
-        }
+        snap = self.spark.read.schema(_CARRY_DDL).parquet(
+            os.path.join(self.carry_dir, f"batch_id={latest}")
+        )
+        return {r.lang: int(r.total) for r in snap.collect()}
 
     def pack_batch(self, docs: DataFrame, batch_id: int) -> None:
         with persisted(docs) as docs:
@@ -92,7 +90,7 @@ class StreamingPacker:
             for lang, t in totals.items():
                 after[lang] = after.get(lang, 0) + t
             self.spark.createDataFrame(
-                list(after.items()), "lang string, total long"
+                list(after.items()), _CARRY_DDL
             ).coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.carry_dir, f"batch_id={batch_id}")
             )

@@ -57,9 +57,19 @@ from cdc_sync_poc_spark.streaming.util import persisted
 from pyspark.sql import Window
 
 from cdc_sync_poc_spark.operators.graph import pr_fixed_point_frames
-from cdc_sync_poc_spark.streaming.delta_store import KeyedDeltaStore
+from cdc_sync_poc_spark.sources.maintenance import expire_old_batches
+from cdc_sync_poc_spark.streaming.delta_store import (
+    KeyedDeltaStore,
+    newest_batch_id,
+)
 
 _EV_COLS = ["user_id", "ts", "event_id", "event_type"]
+# tail snapshots are written in these types (the batch's columns are
+# cast to them), so a snapshot is read without inferring a schema
+_TAILS_DDL = (
+    "user_id long, ts timestamp, event_id long, event_type string, "
+    "last_batch long"
+)
 
 
 class StreamingPageRank:
@@ -103,41 +113,32 @@ class StreamingPageRank:
             deltas_name="edges",
         )
         self.tails_dir = os.path.join(root, "tails")
+        self.tails_schema = spark.createDataFrame([], _TAILS_DDL).schema
         self.ttl_batches = ttl_batches
+
+    def _tails(self, batch_id: int) -> DataFrame:
+        return self.spark.read.schema(self.tails_schema).parquet(
+            os.path.join(self.tails_dir, f"batch_id={batch_id}")
+        )
 
     def _tails_before(self, batch_id: int) -> DataFrame | None:
         """The newest tails snapshot older than ``batch_id`` (None on
         the first batch) — read as a frame, never collected."""
-        if not os.path.isdir(self.tails_dir):
-            return None
-        # mergeSchema: after an upgrade the dir can hold BOTH formats
-        # (a legacy snapshot without last_batch next to a new one) and
-        # a plain read would take one arbitrary file's schema
-        snaps = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self.tails_dir)
-            .filter(F.col("batch_id") < batch_id)
-        )
-        latest = snaps.agg(F.max("batch_id").alias("b")).collect()[0].b
+        latest = newest_batch_id(self.tails_dir, before=batch_id)
         if latest is None:
             return None
-        newest = snaps.filter(F.col("batch_id") == latest)
-        # migration: rows written before last_batch existed count as
-        # last seen at their snapshot batch (the most recent
-        # information the old format holds)
-        fallback = F.lit(latest).cast("long")
-        newest = newest.withColumn(
+        # migration: a snapshot written before last_batch existed reads
+        # it as null; its rows count as last seen at their snapshot
+        # batch (the most recent information the old format holds)
+        return self._tails(latest).withColumn(
             "last_batch",
-            F.coalesce(F.col("last_batch"), fallback)
-            if "last_batch" in newest.columns
-            else fallback,
+            F.coalesce(F.col("last_batch"), F.lit(latest).cast("long")),
         )
-        return newest.select(*_EV_COLS, "last_batch")
 
     def absorb_batch(self, events: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch of events into the edge and tail state."""
-        ev = events.select(*_EV_COLS).withColumn(
-            "last_batch", F.lit(batch_id).cast("long")
+        ev = events.withColumn("last_batch", F.lit(batch_id)).select(
+            *[F.col(f.name).cast(f.dataType) for f in self.tails_schema]
         )
         prev = self._tails_before(batch_id)
         # the tail row is each user's last ALREADY-ABSORBED event: its
@@ -183,13 +184,8 @@ class StreamingPageRank:
             )
 
     def _newest_tails(self) -> DataFrame | None:
-        if not os.path.isdir(self.tails_dir):
-            return None
-        snaps = self.spark.read.parquet(self.tails_dir)
-        latest = snaps.agg(F.max("batch_id").alias("b")).collect()[0].b
-        if latest is None:
-            return None
-        return snaps.filter(F.col("batch_id") == latest)
+        latest = newest_batch_id(self.tails_dir)
+        return None if latest is None else self._tails(latest)
 
     def _edge_counts(self) -> DataFrame:
         """Accumulated (src, dst, n): compacted base + deltas newer
@@ -216,17 +212,7 @@ class StreamingPageRank:
         Deletion is crash-safe trivially (pruned snapshots have no
         reader); a replay never recreates them because it overwrites
         its OWN snapshot, not its predecessor's."""
-        import shutil
-
-        if not os.path.isdir(self.tails_dir):
-            return
-        bids = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.tails_dir)
-            if d.startswith("batch_id=")
-        )
-        for bid in bids[:-keep] if keep > 0 else bids:
-            shutil.rmtree(os.path.join(self.tails_dir, f"batch_id={bid}"))
+        expire_old_batches(self.tails_dir, keep)
 
     def ranks(self, redistribute_dangling: bool = False) -> DataFrame:
         """PageRank over everything absorbed so far — identical output

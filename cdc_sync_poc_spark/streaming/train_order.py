@@ -30,10 +30,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_sync_poc_spark.streaming.delta_store import newest_batch_id
 from cdc_sync_poc_spark.streaming.util import persisted
 
 from cdc_sync_poc_spark.llm.preprocess import train_order_frame
 from cdc_sync_poc_spark.sources.loader import literal_frame
+
+_CARRY_DDL = "shard bigint, total bigint"
 
 
 class StreamingOrderAssigner:
@@ -46,18 +49,13 @@ class StreamingOrderAssigner:
         """Per-shard position counts after the newest snapshot older
         than ``batch_id`` (empty on the first batch). TRAIN_SHARDS-row
         driver collect — design-bounded."""
-        if not os.path.isdir(self.carry_dir):
-            return {}
-        snaps = self.spark.read.parquet(self.carry_dir).filter(
-            F.col("batch_id") < batch_id
-        )
-        latest = snaps.agg(F.max("batch_id").alias("b")).collect()[0].b
+        latest = newest_batch_id(self.carry_dir, before=batch_id)
         if latest is None:
             return {}
-        return {
-            int(r.shard): int(r.total)
-            for r in snaps.filter(F.col("batch_id") == latest).collect()
-        }
+        snap = self.spark.read.schema(_CARRY_DDL).parquet(
+            os.path.join(self.carry_dir, f"batch_id={latest}")
+        )
+        return {int(r.shard): int(r.total) for r in snap.collect()}
 
     def assign_batch(self, docs: DataFrame, batch_id: int) -> None:
         with persisted(docs) as docs:
@@ -88,7 +86,7 @@ class StreamingOrderAssigner:
             for shard, n in totals.items():
                 after[shard] = after.get(shard, 0) + n
             literal_frame(
-                self.spark, list(after.items()), "shard bigint, total bigint"
+                self.spark, list(after.items()), _CARRY_DDL
             ).coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.carry_dir, f"batch_id={batch_id}")
             )

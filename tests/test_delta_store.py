@@ -112,3 +112,57 @@ def test_last_wins_store_on_a_string_key(spark, tmp_path):
     assert sorted((r.k, r.v) for r in store.live().collect()) == [
         ("abc", 10), ("new", 3), ("zzz", 5)
     ]
+
+
+def test_snapshot_lookups_start_at_most_their_collect(spark, tmp_path):
+    """Per-batch snapshot stores find their predecessor by listing the
+    ``batch_id=`` directories and read it with its DDL: building
+    pagerank's tails frames starts no Spark job, and a carry lookup
+    starts at most its one langs- or shards-sized collect."""
+    import datetime as dtm
+
+    from cdc_sync_poc_spark.streaming.packing import StreamingPacker
+    from cdc_sync_poc_spark.streaming.pagerank import StreamingPageRank
+    from cdc_sync_poc_spark.streaming.train_order import (
+        StreamingOrderAssigner,
+    )
+
+    packer = StreamingPacker(spark, str(tmp_path / "pack"))
+    assigner = StreamingOrderAssigner(spark, str(tmp_path / "order"))
+    pr = StreamingPageRank(spark, str(tmp_path / "pr"))
+    t0 = dtm.datetime(2024, 1, 1)
+    tails = (
+        "user_id long, ts timestamp, event_id long, event_type string, "
+        "last_batch long"
+    )
+    for bid, n, event_type in ((0, 3, "a"), (2, 5, "b")):
+        for path, ddl, row in (
+            (packer.carry_dir, "lang string, total long", ("en", n)),
+            (assigner.carry_dir, "shard bigint, total bigint", (0, n)),
+            (pr.tails_dir, tails, (1, t0, n, event_type, bid)),
+        ):
+            spark.createDataFrame([row], ddl).write.parquet(
+                f"{path}/batch_id={bid}"
+            )
+
+    frames = {}
+    assert _jobs_started(spark, lambda: frames.update(prev=pr._tails_before(2))) == 0
+    assert _jobs_started(spark, lambda: frames.update(new=pr._newest_tails())) == 0
+    assert [(r.event_type, r.last_batch) for r in frames["prev"].collect()] == [
+        ("a", 0)
+    ]
+    assert [r.event_type for r in frames["new"].collect()] == ["b"]
+
+    carries = {}
+    for name, lookup in (
+        ("pack", packer._carry_before),
+        ("order", assigner._carry_before),
+    ):
+        for before in (0, 1, 3):
+            assert _jobs_started(
+                spark, lambda: carries.update({(name, before): lookup(before)})
+            ) <= 1, (name, before)
+    assert carries == {
+        ("pack", 0): {}, ("pack", 1): {"en": 3}, ("pack", 3): {"en": 5},
+        ("order", 0): {}, ("order", 1): {0: 3}, ("order", 3): {0: 5},
+    }

@@ -9,13 +9,12 @@ against the anti-patterns the round reviews check by hand —
 * no row-at-a-time Python UDF (``BatchEvalPython``) anywhere;
 * Arrow-batched pandas UDFs (``ArrowEvalPython``) only at the ONE
   sanctioned site — the r07 Debezium decimal decode;
-* keyed pandas (``FlatMapGroupsInPandas``) only in the queries that
-  consume the loop-guard 3+-chain walk (functions/loopguard.py), whose
-  fast paths keep singletons and pairs JVM-side.
+* no keyed pandas (``FlatMapGroupsInPandas``) anywhere: the batch
+  loop guard (functions/loopguard.py) and the ap06 replay are
+  JVM-side folds.
 
 Adding a query that trips one of these is a deliberate decision: extend
-the allowlist here WITH the scale argument, the way loopguard documents
-its pandas branch.
+the allowlist here WITH the scale argument.
 """
 
 from __future__ import annotations
@@ -24,20 +23,6 @@ import pytest
 
 SF = "/root/testdata/sf0.001"
 
-# the queries that share the persisted loop-guard walk (stateful dedup
-# family + its audit/apply/pipeline consumers)
-LOOPGUARD_CONSUMERS = {
-    "sink_audit_log",
-    "a01_global_counters",
-    "a02_group_by_topic",
-    "a03_group_by_status",
-    "a04_max_last_ts",
-    "pipeline_e2e",
-    "ap05_exactly_once_mark",
-    "ap06_sequential_replay",
-    "s04_union_merge_sort",
-    "st01_loop_dedup",
-}
 ARROW_SANCTIONED = {"r07_decimal_decode"}
 
 
@@ -67,9 +52,9 @@ def test_arrow_pandas_udf_only_at_sanctioned_site(plans):
     assert got <= ARROW_SANCTIONED, sorted(got - ARROW_SANCTIONED)
 
 
-def test_keyed_pandas_only_for_loopguard_chains(plans):
-    got = {n for n, p in plans.items() if "FlatMapGroupsInPandas" in p}
-    assert got <= LOOPGUARD_CONSUMERS, sorted(got - LOOPGUARD_CONSUMERS)
+def test_no_keyed_pandas_anywhere(plans):
+    bad = [n for n, p in plans.items() if "FlatMapGroupsInPandas" in p]
+    assert bad == [], bad
 
 
 # ---- broadcast boundedness (VERDICT r10 "What's wrong" #2) ----

@@ -80,8 +80,7 @@ def _greedy_reference_validity(events, window_s=300):
 @settings(**_SETTINGS)
 def test_loopguard_validity_matches_reference(spark, gaps, hashes, invalid):
     """Random mixes of multiplicity (1, 2, 3+) per hash AND stage-1
-    validity exercise all three loopguard routes — singleton bypass,
-    closed-form pair lag(), pandas chain walk — against the sequential
+    validity run through the one keyed fold against the sequential
     reference, including the pair case where an INVALID first event
     must not block the second."""
     from cdc_sync_poc_spark.functions.loopguard import with_loop_blocked

@@ -517,16 +517,18 @@ def test_streaming_kmv_sketch_merge_is_lossless(spark, tmp_path):
         assert got == want_est, (et, got, want_est)
 
 
-def test_writer_net_strategy_matches_sequential_replay(spark, tmp_path):
+def test_writer_net_strategy_matches_sequential_replay(spark, duck, tmp_path):
     """The MERGE writer's 'net' strategy (ap08 compaction per batch)
     must land the exact sequential-replay state (ap06) — the
     reference's row-at-a-time worker semantics, reproduced by writing
     each key ONCE per batch through the bucket-swap machinery. The
-    default last_wins strategy intentionally differs on in-batch
-    chains (the documented ap01 deviation); this test pins that the
-    opt-in strategy closes that gap."""
+    reference here is ap06's DuckDB oracle, a recursive-CTE replay row
+    by row, independent of the net_effect algebra both Spark sides
+    share. The default last_wins strategy intentionally differs on
+    in-batch chains (the documented ap01 deviation); this test pins
+    that the opt-in strategy closes that gap."""
     from cdc_sync_poc_spark.cdc.envelope import cdc_view
-    from cdc_sync_poc_spark.registry import QUERIES, load_all_queries
+    from cdc_sync_poc_spark.registry import ORACLES, load_all_queries
     from cdc_sync_poc_spark.sources.loader import load_table
     from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
 
@@ -544,12 +546,8 @@ def test_writer_net_strategy_matches_sequential_replay(spark, tmp_path):
         (r.pk, r.name, round(r.acctbal, 6))
         for r in writer.current_state().collect()
     }
-    want = {
-        (r.pk, r.name, round(r.acctbal, 6))
-        for r in QUERIES["ap06_sequential_replay"](spark, SF_DIR)
-        .select("pk", "name", "acctbal")
-        .collect()
-    }
+    oracle = duck.sql(ORACLES["ap06_sequential_replay"]).fetchall()
+    want = {(pk, name, round(acctbal, 6)) for pk, name, acctbal, _src in oracle}
     assert got == want
 
 

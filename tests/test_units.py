@@ -434,16 +434,17 @@ def test_pagerank_mass_conserves_and_degenerates(spark):
     assert p2 == m2 and len(p2) == 2
 
 
-def test_loopguard_pair_fast_path_semantics(spark):
-    """Pairs (hash seen exactly twice) run the closed-form lag() path,
-    JVM-side: second event blocked iff first was VALID and the gap is
-    strictly under 5 min; 3+ chains still take the pandas walk (covered
-    by test_loopguard_greedy_not_lag). All three pair cases:"""
+def test_loopguard_fold_semantics(spark):
+    """The keyed fold on pinned cases: a pair's second event is blocked
+    iff the first was VALID and the gap is strictly under 5 min; a
+    single is never blocked; and a 4-event chain (E) that needs the
+    fold's sort and null handling to be right."""
     import datetime as dtm
 
     from cdc_sync_poc_spark.functions.loopguard import with_loop_blocked
 
     t0 = dtm.datetime(2024, 1, 1)
+    gap = dtm.timedelta(minutes=5)
     rows = [
         # pair A: in-window, first valid -> second blocked
         (0, t0, "A", 10, 1.0),
@@ -453,16 +454,28 @@ def test_loopguard_pair_fast_path_semantics(spark):
         (3, t0 + dtm.timedelta(minutes=3), "B", 10, 1.0),
         # pair C: gap exactly 5 min (NOT strictly within) -> applied
         (4, t0, "C", 10, 1.0),
-        (5, t0 + dtm.timedelta(minutes=5), "C", 10, 1.0),
+        (5, t0 + gap, "C", 10, 1.0),
         # singleton D
         (6, t0, "D", 10, 1.0),
+        # chain E, listed out of order. 10 applies. 11 and 12 share a
+        # ts exactly 300 s later and walk in cdc_seq order: 11 is
+        # invalid, so it is not blocked and does not refresh the
+        # window; 12 (null val: valid) is then 300 s from 10, applies
+        # and refreshes; 13, 299 s after 12, is blocked. Walking 12
+        # before 11, letting 11 refresh, or reading null val as
+        # invalid each changes a flag.
+        (13, t0 + gap + dtm.timedelta(seconds=299), "E", 10, 1.0),
+        (12, t0 + gap, "E", 10, None),
+        (11, t0 + gap, "E", 99, 1.0),
+        (10, t0, "E", 10, 1.0),
     ]
     df = spark.createDataFrame(
-        rows, ["cdc_seq", "ts", "change_hash", "prop_k", "val"]
+        rows, "cdc_seq long, ts timestamp, change_hash string, prop_k int, val double"
     )
     got = {r.cdc_seq: r.loop_blocked for r in with_loop_blocked(df).collect()}
     assert got == {0: False, 1: True, 2: False, 3: False,
-                   4: False, 5: False, 6: False}
+                   4: False, 5: False, 6: False,
+                   10: False, 11: False, 12: False, 13: True}
 
 
 def test_proto_prune_invariants(spark):
