@@ -20,11 +20,12 @@ physical plan: broadcast hash joins for the small mapping dimensions,
 whole-stage-codegen column expressions for the row transforms, window
 functions for last-writer-wins, a SQL ``aggregate`` fold per change
 hash for the batch loop-guard, and Structured Streaming (watermark +
-dropDuplicatesWithinWatermark / applyInPandasWithState) for the
-streaming one. No row-at-a-time Python UDFs are used in any hot path,
-and the batch CDC path runs no Python worker; the only Python-side
+dropDuplicatesWithinWatermark, or the same ``aggregate`` fold inside
+the foreachBatch MERGE writer) for the streaming one. No row-at-a-time
+Python UDFs are used in any hot path, and neither the batch CDC path
+nor the shipped stream runs a Python worker; the only Python-side
 kernels are Arrow-batched pandas UDFs (Debezium decimal decode,
-multimodal byte decode) and the streaming loop-guard's walk.
+multimodal byte decode).
 """
 
 from cdc_sync_poc_spark.session import get_spark

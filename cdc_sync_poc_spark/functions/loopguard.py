@@ -13,22 +13,31 @@ APPLIED-AND-VALID event is under the window, and only unblocked valid
 events refresh the state.
 
 This is beyond SQL window functions (state depends on prior
-*decisions*, not prior rows), so the batch form ``with_loop_blocked``
-is a keyed fold: one group per change_hash, its events sorted by (ts,
-cdc_seq) and walked by a SQL ``aggregate`` whose state is the last
-applied time — all JVM-side, no Python worker. The stream form,
-``streaming/dedup.stateful_dedup`` (``applyInPandasWithState``), runs
-the same rule in ``walk_kernel`` below, seeded with the state store's
-last applied time; ``tests/test_tws_dedup.py`` cross-checks the two.
+*decisions*, not prior rows), so the guard is a keyed fold: one group
+per change_hash, its events sorted by (ts, cdc_seq) and walked by
+``loop_walk``, a SQL ``aggregate`` whose state is the last applied
+time — all JVM-side, no Python worker. Two callers share that one
+walk:
+
+* the batch form, ``with_loop_blocked``, seeds it with null;
+* the stream form, the guard of ``streaming/writer.ParquetMergeWriter``
+  (``streaming/dedup.guard_walk``), seeds it with each hash's last
+  applied time from its guard store, inside the same one-partition
+  plan as the MERGE.
+
 Both flag invalid rows with the one validity predicate
-(``stage1_invalid``). Scale: state per key is one timestamp; groups
-are tiny (hash collisions are rare); the shuffle is on the
-high-cardinality hash key so it distributes evenly at 100 TB — no
-skew, no driver involvement.
+(``stage1_invalid``); ``tests/test_tws_dedup.py`` cross-checks the
+stream guard against the batch fold and the DuckDB ``WALK_CTES``.
+``walk_kernel`` (the same rule in pandas) is left only for the
+benchmark's traced stream composition. Scale: state per key is one
+timestamp; groups are tiny (hash collisions are rare); the batch
+shuffle is on the high-cardinality hash key so it distributes evenly at
+100 TB — no skew, no driver involvement.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 import pandas as pd
@@ -36,6 +45,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WINDOW_US = 5 * 60 * 1_000_000  # 5 minutes (FN_IS_LOOP interval, :40)
+# The stream guard's state TTL (SP_CLEANUP_HASH, st03: hashes older than
+# 10 minutes are deleted). Compaction evicts a hash whose last applied
+# time is more than this behind the newest one it folds. A very late
+# event — more than TTL - WINDOW (5 minutes) behind the newest folded
+# event time — whose hash was evicted is therefore applied where the
+# unbounded walk would block it; the reference's cleanup job has the
+# same gap. Later events are unaffected: an evicted hash's window had
+# closed long before them.
+HASH_TTL_US = 10 * 60 * 1_000_000
 
 
 def stage1_invalid(df: DataFrame) -> Column:
@@ -50,7 +68,12 @@ def stage1_invalid(df: DataFrame) -> Column:
 
 def walk_kernel() -> Callable:
     """The sequential FN_IS_LOOP walk over one hash's rows, in pandas,
-    for the stream's ``applyInPandasWithState`` guard.
+    for ``streaming/dedup.stateful_dedup``. Neither is on the shipped
+    stream, whose guard folds with ``loop_walk``; both stay only while
+    the benchmark's traced stream composition
+    (``perfbench/streams.py::start_pipeline``) imports
+    ``stateful_dedup``, and go with the benchmark change that re-points
+    it.
 
     ``walk(rows, last_applied_us)`` takes the rows (with ``ts``,
     ``cdc_seq`` and the ``__invalid`` flag) and the last applied time
@@ -83,26 +106,15 @@ def walk_kernel() -> Callable:
     return walk
 
 
-def with_loop_blocked(cdc: DataFrame) -> DataFrame:
-    """Add boolean ``loop_blocked`` per the sequential greedy semantics.
-
-    Input needs columns: change_hash, ts (timestamp), cdc_seq. Output =
-    input columns + loop_blocked, same rows. Validation-failed rows
-    (``stage1_invalid``) can be blocked but never refresh the window
-    (SP_RECORD_HASH is skipped for stage-1 failures).
-
-    One keyed fold: each hash's events are collected, sorted by (ts,
-    cdc_seq) and walked by ``aggregate`` with the state (last applied
-    time, decisions so far), then exploded back to rows. A hash seen
-    once folds one element and is never blocked, so singles need no
-    bypass. The shuffle is the one hash-keyed exchange; groups are
-    hash-collision-sized."""
-    event = F.struct(
-        F.unix_micros("ts").alias("us"),
-        F.col("cdc_seq"),
-        stage1_invalid(cdc).alias("invalid"),
-        F.struct(*cdc.columns).alias("row"),
-    )
+def loop_walk(evs: Column, last: Column) -> Column:
+    """The one FN_IS_LOOP walk: ``aggregate`` over ``evs``, one hash's
+    events as structs (``us`` epoch microseconds, ``cdc_seq``,
+    ``invalid``, ...) sorted by (us, cdc_seq), from ``last``, the
+    hash's last applied time (null if never applied). Returns
+    struct(``last``: the new last applied time, ``blocked``: one flag
+    per event). An event is blocked iff it lies strictly within the
+    window of the last applied event; only unblocked valid events
+    become the last applied event."""
 
     def step(acc: Column, e: Column) -> Column:
         blocked = acc["last"].isNotNull() & (e["us"] - acc["last"] < WINDOW_US)
@@ -114,23 +126,61 @@ def with_loop_blocked(cdc: DataFrame) -> DataFrame:
         )
 
     start = F.struct(
-        F.lit(None).cast("long").alias("last"),
+        last.cast("long").alias("last"),
         F.array().cast("array<boolean>").alias("blocked"),
+    )
+    return F.aggregate(evs, start, step)
+
+
+def with_loop_blocked(cdc: DataFrame) -> DataFrame:
+    """Add boolean ``loop_blocked`` per the sequential greedy semantics.
+
+    Input needs columns: change_hash, ts (timestamp), cdc_seq. Output =
+    input columns + loop_blocked, same rows. Validation-failed rows
+    (``stage1_invalid``) can be blocked but never refresh the window
+    (SP_RECORD_HASH is skipped for stage-1 failures).
+
+    One keyed fold: each hash's events are collected, sorted by (ts,
+    cdc_seq) and walked by ``loop_walk`` from a null last applied
+    time, then exploded back to rows. A hash seen once folds one
+    element and is never blocked, so singles need no bypass. The
+    shuffle is the one hash-keyed exchange; groups are
+    hash-collision-sized."""
+    event = F.struct(
+        F.unix_micros("ts").alias("us"),
+        F.col("cdc_seq"),
+        stage1_invalid(cdc).alias("invalid"),
+        F.struct(*cdc.columns).alias("row"),
     )
     walked = (
         cdc.groupBy("change_hash")
         .agg(F.array_sort(F.collect_list(event)).alias("evs"))
-        .select("evs", F.aggregate("evs", start, step)["blocked"].alias("blocked"))
+        .select(
+            "evs",
+            loop_walk(F.col("evs"), F.lit(None))["blocked"].alias("blocked"),
+        )
     )
     # persist the walked result: five downstream operators (st01, the
     # audit/classified family, ap05, pipeline_e2e) consume this exact
     # plan, and Spark's cache matches on plan equality so they all share
-    # one materialization. (The streaming twin needs no cache — its
-    # state store IS the materialization.)
+    # one materialization. (The stream guard needs no cache — its
+    # guard store IS the materialization.)
+    return flagged_rows(walked).persist()
+
+
+def flagged_rows(walked: DataFrame) -> DataFrame:
+    """A walk's events back as rows: each ``evs`` element's ``row``
+    with its ``blocked`` flag as ``loop_blocked``."""
+    explode, flag = _flag_cols()
+    return walked.select(*explode).select(*flag)
+
+
+@functools.cache
+def _flag_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    # built once: the stream guard unpacks its walk this way every batch
     return (
-        walked.select(F.posexplode("evs").alias("i", "e"), "blocked")
-        .select("e.row.*", F.col("blocked")[F.col("i")].alias("loop_blocked"))
-        .persist()
+        (F.posexplode("evs").alias("i", "e"), F.col("blocked")),
+        (F.col("e.row.*"), F.col("blocked")[F.col("i")].alias("loop_blocked")),
     )
 
 

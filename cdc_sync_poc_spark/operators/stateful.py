@@ -27,8 +27,8 @@ def st01_loop_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (FN_IS_LOOP, poc/asis-oracle/init/04_create_procedures.sql:31-44;
     rationale docs/02-설계/02_무한루프_방지.md:105-194): blocked events do
     not refresh the window. One JVM-side fold keyed by change_hash
-    (``with_loop_blocked``) — the batch twin of
-    streaming/dedup.stateful_dedup."""
+    (``with_loop_blocked``) — the batch twin of the stream guard in
+    streaming/writer.py (``run_stream_pipeline(dedup="stateful")``)."""
     walk = with_loop_blocked(cdc_view(spark, sf_dir))
     return walk.select("cdc_seq", "pk", "change_hash", "loop_blocked")
 

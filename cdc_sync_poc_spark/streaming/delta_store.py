@@ -66,9 +66,24 @@ from pyspark.sql.types import LongType, StructField, StructType
 from cdc_sync_poc_spark.streaming.swapstore import SwapStore
 
 
+@functools.cache
+def named_cols(*names: str) -> tuple[F.Column, ...]:
+    """Column references by name, built once per name list. Every
+    PySpark Column call is a driver round trip to the JVM (a few each
+    for the call-site bookkeeping), so a micro-batch body reuses the
+    expressions it builds instead of rebuilding them per batch; Columns
+    are immutable and hold no session."""
+    return tuple(F.col(n) for n in names)
+
+
+@functools.cache
+def _cast_cols(fields: tuple[tuple[str, str], ...]) -> tuple[F.Column, ...]:
+    return tuple(F.col(n).cast(t).alias(n) for n, t in fields)
+
+
 def _typed(df: DataFrame, fields: list[StructField]) -> DataFrame:
     return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
+        *_cast_cols(tuple((f.name, f.dataType.simpleString()) for f in fields))
     )
 
 
@@ -173,7 +188,7 @@ class _DeltaStoreBase:
         upto = self.watermark()
         parts = []
         if upto is not None:
-            parts.append(self.base.read(self.base_schema).select(*self.cols))
+            parts.append(self.base.read(self.base_schema).select(*named_cols(*self.cols)))
         if batch_ids(self.deltas_dir):
             deltas = self.spark.read.schema(self.delta_schema).parquet(
                 self.deltas_dir
@@ -182,7 +197,7 @@ class _DeltaStoreBase:
                 deltas = deltas.filter(F.col("batch_id") > upto)
             if before is not None:
                 deltas = deltas.filter(F.col("batch_id") < before)
-            parts.append(deltas.select(*self.cols))
+            parts.append(deltas.select(*named_cols(*self.cols)))
         if not parts:
             return self.spark.createDataFrame([], self.schema)
         return functools.reduce(DataFrame.unionByName, parts)
@@ -333,6 +348,11 @@ def pk_bucket_col(col: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(col), F.lit(n_buckets))
 
 
+@functools.cache
+def _key_bucket(key: str, n_buckets: int) -> F.Column:
+    return pk_bucket_col(F.col(key), n_buckets)
+
+
 class LastWinsDeltaStore(_DeltaStoreBase):
     """Keyed last-writer-wins state with tombstones — MERGE as
     merge-on-read. A delta row is a resolved decision for its key: a
@@ -348,7 +368,8 @@ class LastWinsDeltaStore(_DeltaStoreBase):
     its partition from the same snapshot changes nothing.
 
     The base is laid out as ``upto=U/bucket=K/`` (``n_buckets`` hash
-    buckets of the key), so a probe of few keys opens few buckets.
+    buckets of the key, one file each), so a probe of few keys opens
+    few files.
     ``ddl`` types the key and value columns.
     """
 
@@ -373,8 +394,9 @@ class LastWinsDeltaStore(_DeltaStoreBase):
         self.key = key
         self.n_buckets = n_buckets
 
-    def _bucket(self) -> F.Column:
-        return pk_bucket_col(F.col(self.key), self.n_buckets)
+    def bucket(self) -> F.Column:
+        """Each row's base bucket, from the key column."""
+        return _key_bucket(self.key, self.n_buckets)
 
     def _with_watermark_row(self, rows: DataFrame) -> DataFrame:
         marker = self.spark.range(1).select(
@@ -396,50 +418,55 @@ class LastWinsDeltaStore(_DeltaStoreBase):
             shutil.rmtree(self.deltas_dir)
         base = rows.select(
             "*",
-            self._bucket().alias("bucket"),
+            self.bucket().alias("bucket"),
             F.lit(False).alias("deleted"),
             F.lit(-1).cast("long").alias("batch_id"),
         )
         self._swap_base(self._with_watermark_row(base), -1)
+
+    def _swap_base(self, rows: DataFrame, upto: int) -> None:
+        # one file per bucket, whatever the input's partitioning: the
+        # writers read a batch's buckets in a single task
+        super()._swap_base(rows.repartition("bucket"), upto)
 
     def write_delta(self, df: DataFrame, batch_id: int) -> None:
         """Persist one batch's decisions (key + value columns and
         ``deleted``, one row per key) under its own partition. Deltas
         stay unbucketed: one small file per batch."""
         self._write_delta(
-            df.withColumn("bucket", self._bucket()), batch_id, []
+            df.withColumn("bucket", self.bucket()), batch_id, []
         )
 
     def begin_batch(
-        self, keys: DataFrame, batch_id: int, compact_at: int
+        self, buckets: set[int], batch_id: int, compact_at: int
     ) -> DataFrame | None:
         """The batch-start step of a writer over this store: the rows of
         the pre-batch snapshot (base plus deltas ``upto < batch_id <
-        N``, unreduced) for the batch's ``keys`` (a frame of the key
-        column). None when there is nothing to write: the batch is at
-        or below the watermark (it was applied in full before it was
-        folded, so its replay is a no-op), or ``keys`` is empty.
+        N``, unreduced) in the base ``buckets`` that hold the batch's
+        keys (the caller collects them, so one driver round trip can
+        serve several stores). None when there is nothing to write: the
+        batch is at or below the watermark (it was applied in full
+        before it was folded, so its replay is a no-op), or ``buckets``
+        is empty.
 
         Once ``compact_at`` delta partitions older than the batch are
         live it first compacts them (``batch_id <= N-1``; the running
         batch is never folded, so a replay sees the same snapshot). The
-        probe opens only the base buckets holding batch keys, never the
-        watermark row's, so its cost is set by the number of changed
-        keys."""
+        read opens only the given buckets, never the watermark row's,
+        so its cost is set by the buckets the changed keys touch; rows
+        of other keys in those buckets are the caller's to drop."""
         upto = self.watermark()
         if upto is not None and batch_id <= upto:
             return None
         pending = [b for b in self.newer_deltas(upto) if b < batch_id]
         if len(pending) >= compact_at:
             self.compact(batch_id - 1)
-        buckets = {r[0] for r in keys.select(self._bucket()).collect()}
         if not buckets:
             return None
-        return (
-            self.rows(before=batch_id)
-            .filter(F.col("bucket").isin(sorted(buckets)))
-            .join(F.broadcast(keys), self.key, "left_semi")
-        )
+        rows = self.rows(before=batch_id)
+        if len(buckets) < self.n_buckets:
+            rows = rows.filter(F.col("bucket").isin(sorted(buckets)))
+        return rows
 
     def newest(self, rows: DataFrame) -> DataFrame:
         """Each key's newest row (tombstones included): one hash
@@ -464,7 +491,7 @@ class LastWinsWriter:
     """Base of the foreachBatch writers kept in a
     :class:`LastWinsDeltaStore` (``self.store``): the MERGE writer and
     the SCD2 history writer. Each batch starts with
-    ``self.store.begin_batch(keys, batch_id, self._compact_at())``."""
+    ``self.store.begin_batch(buckets, batch_id, self._compact_at())``."""
 
     spark: SparkSession
     store: LastWinsDeltaStore

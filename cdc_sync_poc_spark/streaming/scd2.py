@@ -102,11 +102,15 @@ class Scd2StreamWriter(LastWinsWriter):
         with persisted(
             changes.select("cdc_seq", "pk", "operation", "ts_ms", "val")
         ) as rows:
+            keys = rows.select("pk").distinct()
             snap = self.store.begin_batch(
-                rows.select("pk").distinct(), batch_id, self._compact_at()
+                {r[0] for r in keys.select(self.store.bucket()).collect()},
+                batch_id,
+                self._compact_at(),
             )
             if snap is None:
                 return
+            snap = snap.join(F.broadcast(keys), "pk", "left_semi")
             # the open version re-enters the window as a pseudo-event:
             # its version_seq slots it BEFORE every batch event of its
             # key (the cross-batch ordering assumption), so lead()

@@ -1,104 +1,228 @@
 """foreachBatch MERGE writer (SURVEY §2.7 ap01-ap05, streaming side),
 merge-on-read on the shared delta-store recipe
-(streaming/delta_store.py::LastWinsDeltaStore).
+(streaming/delta_store.py::LastWinsDeltaStore), with the stream's loop
+guard (streaming/dedup.py::LoopGuardStore) folded into the same batch.
 
 Per micro-batch N (the 5 s trigger replaces the reference's Oracle
-Scheduler job, st04):
+Scheduler job, st04), in one partition throughout — the batch is
+bounded by the source's per-trigger cap, and ``SinglePartition``
+satisfies every keyed aggregate's clustered distribution, so the plan
+has no exchange and no broadcast:
 
-1. per-key batch reduction (``reduce_batch``) — ``strategy="last_wins"``
-   (default: the newest row per key decides, s01/ap01 semantics) or
-   ``strategy="net"`` (ap08's net_effect compaction: replay-exact ap06
-   semantics at any batch granularity, each key still written once);
-2. one probe of the batch's keys against the immutable pre-batch
-   snapshot — the compacted base plus the live deltas with
-   ``upto < batch_id < N``, newest row per pk — which decides every key
-   as in operators/apply.py::merge_final_state;
-3. two outputs from that probe, each owned by batch N and written with
+1. the batch is persisted once, ``coalesce(1)``, and one driver
+   ``collect`` gives each store the base buckets its keys touch
+   (``LastWinsDeltaStore.begin_batch``: compact if due, read the
+   immutable pre-batch snapshot of those buckets);
+2. with a guard (``guard_dir``), ``dedup.guard_walk`` folds each
+   change_hash's events from its snapshot ``last_us`` with the batch
+   loop guard's walk; the hashes whose ``last_us`` moved become the
+   guard delta ``batch_id=N``, and blocked events leave the batch;
+3. one keyed aggregate over the kept rows and the MERGE snapshot rows
+   (``_decide``) is both the per-key batch reduction and the probe: the
+   deciding row per key — ``strategy="last_wins"`` (default: the newest
+   row, s01/ap01 semantics) or ``strategy="net"`` (ap08's net_effect
+   compaction first: replay-exact ap06 semantics at any batch
+   granularity, each key still written once) — beside ``exists``,
+   whether the key's newest snapshot row is live, which decides every
+   key as in operators/apply.py::merge_final_state;
+4. two more outputs, each owned by batch N and written with
    mode=overwrite: ``deltas/batch_id=N`` (an upsert row per applied
    key, a tombstone per DELETE of an existing key; an UPDATE or DELETE
    of a missing key writes nothing, ap03/ap04) and the audit partition
-   ``audit/batch_id=N`` (sink_audit_log statuses, TARGET_NOT_FOUND log).
+   ``audit/batch_id=N`` (sink_audit_log statuses: TARGET_NOT_FOUND
+   log, and LOOP_BLOCKED for each event the guard blocked).
 
-A read (``current_state``) is the newest row per pk over base ∪ live
-deltas, tombstones dropped. A batch writes O(changed keys) rows; the
-base (hash-bucketed by pk, ``n_buckets`` partitions, so a probe with
-fewer keys than buckets opens only the buckets it needs) is rewritten
-only by compaction.
+A warm guarded batch runs six Spark jobs: the collect, the three
+writes, and (AQE plans a cache as its own query stage) one job each to
+fill the batch and decided-keys caches. The guard walk is not cached:
+re-running it over the cached batch costs less than a seventh job. A
+read (``current_state``) is the newest row per pk over base ∪
+live deltas, tombstones dropped. A batch writes O(changed keys) rows;
+the base (hash-bucketed by pk, ``n_buckets`` partitions, so a batch
+with fewer keys than buckets opens only the buckets it needs) is
+rewritten only by compaction.
 
 Replay/crash semantics (at-least-once foreachBatch made effectively
 exactly-once):
 
-* a batch's outputs are a pure function of the batch and its snapshot,
-  and a replay of N sees the same snapshot: no partition >= N is part
-  of it, and compaction never folds the running batch. A replay
-  therefore overwrites both of N's partitions with the same rows,
-  audit statuses included.
+* a batch's outputs are a pure function of the batch and its
+  snapshots, and a replay of N sees the same snapshots: no partition
+  >= N is part of either, and compaction never folds the running batch.
+  A replay therefore overwrites all of N's partitions with the same
+  rows, audit statuses included — whichever write a crash interrupted
+  (the guard delta is written first, then the MERGE delta, then the
+  audit).
 * compaction (``LastWinsDeltaStore.begin_batch``, the batch-start
   step this writer shares with the SCD2 writer: at the start of a
   batch N once ``_compact_at`` delta partitions are live, folding
-  batches <= N-1) swaps the base atomically through
-  SwapStore with the watermark inside it; a crash between its renames
-  is healed before the next read, and folded-but-not-yet-deleted
-  partitions are ignored by the watermark. A batch at or below the
-  watermark was fully applied before it was folded, so its replay is a
-  no-op.
+  batches <= N-1) swaps a base atomically through SwapStore with the
+  watermark inside it; a crash between its renames is healed before the
+  next read, and folded-but-not-yet-deleted partitions are ignored by
+  the watermark. A batch at or below either store's watermark was fully
+  applied before it was folded, so its replay is a no-op.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cdc_sync_poc_spark.functions.loopguard import flagged_rows, stage1_invalid
+from cdc_sync_poc_spark.streaming.dedup import (
+    LoopGuardStore,
+    guard_walk,
+    watermark_dedup,
+)
 from cdc_sync_poc_spark.streaming.delta_store import (
     LastWinsDeltaStore,
     LastWinsWriter,
+    named_cols,
 )
+from cdc_sync_poc_spark.streaming.util import persisted
+
+OP_COLS = ["cdc_seq", "pk", "operation", "val"]
 
 
-def reduce_batch(changes: DataFrame, strategy: str) -> DataFrame:
-    """Per-key batch reduction of ParquetMergeWriter. Returns one row
-    per key: (cdc_seq, pk, operation, val, first_op).
-
-    ``last_wins``: the newest row per key decides (s01/ap01 semantics).
-    ``net``: ap08's net_effect — each key's in-batch op sequence
-    compacts to its replay-exact net op; the key's LAST real cdc_seq
-    rides along so audit rows keep a joinable sequence number (same
-    key, same shuffle — the extra agg shares the pk exchange), and
-    first_op rides along so a net DELETE of a key CREATED in the same
-    batch is not audited TARGET_NOT_FOUND."""
+def _ops(changes: DataFrame, strategy: str) -> DataFrame:
+    """The rows the decide aggregate reduces: (cdc_seq, pk, operation,
+    val, first_op). ``last_wins``: the changes as they are. ``net``:
+    ap08's net_effect — each key's in-batch op sequence compacts to its
+    replay-exact net op; the key's LAST real cdc_seq rides along so
+    audit rows keep a joinable sequence number, and first_op rides
+    along so a net DELETE of a key CREATED in the same batch is not
+    audited TARGET_NOT_FOUND."""
     if strategy == "net":
         from cdc_sync_poc_spark.operators.apply import net_effect
 
-        rows = changes.select("cdc_seq", "pk", "operation", "val")
-        last_seq = rows.groupBy("pk").agg(F.max("cdc_seq").alias("cdc_seq"))
-        return (
-            net_effect(rows)
-            .join(last_seq, "pk")
-            .select(
-                "cdc_seq",
-                "pk",
-                F.col("net_op").alias("operation"),
-                F.col("net_val").alias("val"),
-                "first_op",
-            )
+        return net_effect(
+            changes.select(*OP_COLS), F.max("cdc_seq").alias("cdc_seq")
+        ).select(
+            "cdc_seq",
+            "pk",
+            F.col("net_op").alias("operation"),
+            F.col("net_val").alias("val"),
+            "first_op",
         )
-    w = Window.partitionBy("pk").orderBy(F.desc("cdc_seq"))
-    return (
-        changes.select("cdc_seq", "pk", "operation", "val")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        # last-wins audits the literal surviving op; no net algebra,
-        # so no in-batch-creation exemption applies
-        .withColumn("first_op", F.lit(None).cast("string"))
+    # last-wins audits the literal surviving op; no net algebra, so no
+    # in-batch-creation exemption applies
+    return changes.select(*_last_wins_cols())
+
+
+# The Column expressions of the per-batch plans are built once (see
+# delta_store.named_cols): they do not depend on the batch.
+
+
+@functools.cache
+def _last_wins_cols() -> tuple[Column, ...]:
+    return (*named_cols(*OP_COLS), F.lit(None).cast("string").alias("first_op"))
+
+
+_OP = "struct<cdc_seq:bigint,operation:string,val:double,first_op:string>"
+
+
+@functools.cache
+def _decide_cols() -> dict[str, tuple[Column, ...]]:
+    op = F.struct(
+        F.col("cdc_seq").cast("bigint").alias("cdc_seq"),
+        F.col("operation").cast("string").alias("operation"),
+        F.col("val").cast("double").alias("val"),
+        F.col("first_op").cast("string").alias("first_op"),
     )
+    return {
+        "ops": (
+            F.col("pk"),
+            op.alias("op"),
+            F.col("cdc_seq").alias("seq"),
+            F.lit(None).cast("boolean").alias("deleted"),
+            F.lit(None).cast("long").alias("batch_id"),
+        ),
+        "snap": (
+            F.col("pk"),
+            F.lit(None).cast(_OP).alias("op"),
+            F.lit(None).cast("long").alias("seq"),
+            F.col("deleted"),
+            F.col("batch_id").cast("long"),
+        ),
+        "agg": (
+            F.max_by("op", "seq").alias("op"),
+            F.coalesce(~F.max_by("deleted", "batch_id"), F.lit(False)).alias(
+                "exists"
+            ),
+        ),
+        "decided": (F.col("op").isNotNull(),),
+        "out": named_cols(
+            "op.cdc_seq", "pk", "op.operation", "op.val", "op.first_op", "exists"
+        ),
+    }
+
+
+def _decide(ops: DataFrame, snap: DataFrame | None) -> DataFrame:
+    """The per-key reduce and the probe in one keyed aggregate: each key
+    of ``ops`` with its newest op (``max_by`` on cdc_seq) beside
+    ``exists`` — whether its newest ``snap`` row (by batch_id) is a live
+    row. Both sides go into one partition, so the aggregate needs no
+    exchange; snapshot-only keys carry no op and are dropped."""
+    c = _decide_cols()
+    rows = ops.select(*c["ops"])
+    if snap is not None:
+        rows = rows.unionByName(snap.select(*c["snap"]))
+    return (
+        rows.coalesce(1)
+        .groupBy(*named_cols("pk"))
+        .agg(*c["agg"])
+        .filter(*c["decided"])
+        .select(*c["out"])
+    )
+
+
+def reduce_batch(changes: DataFrame, strategy: str) -> DataFrame:
+    """The per-key batch reduction ParquetMergeWriter applies (inside
+    its probe aggregate): one row per key, (cdc_seq, pk, operation,
+    val, first_op). ``last_wins``: the newest row per key decides
+    (s01/ap01 semantics); ``net``: ap08's net op per key."""
+    return _decide(_ops(changes, strategy), None).drop("exists")
+
+
+@functools.cache
+def _guard_cols() -> tuple[Column, ...]:
+    return (F.col("change_hash"), F.unix_micros("ts").alias("us"))
+
+
+@functools.cache
+def _write_cols() -> dict[str, tuple[Column, ...]]:
+    op, exists, pk = F.col("operation"), F.col("exists"), F.col("pk")
+    deleted = op == "DELETE"
+    created_in_batch = F.coalesce(F.col("first_op") == "INSERT", F.lit(False))
+    status = (
+        F.when(
+            op.isin("UPDATE", "DELETE") & ~exists & ~created_in_batch,
+            "TARGET_NOT_FOUND",
+        )
+        .otherwise("SUCCESS")
+    )
+    audit_key = named_cols("cdc_seq", "pk", "operation")
+    return {
+        "applied": (op.isin("INSERT", "UPSERT") | exists,),
+        "delta": (
+            pk,
+            F.when(~deleted, F.concat(F.lit("U"), pk.cast("string"))).alias("name"),
+            F.when(~deleted, F.col("val")).alias("acctbal"),
+            deleted.alias("deleted"),
+        ),
+        "audit": (*audit_key, status.alias("status")),
+        "kept_row": (~F.col("loop_blocked"),),
+        "blocked_row": (F.col("loop_blocked"),),
+        "blocked": (*audit_key, F.lit("LOOP_BLOCKED").alias("status")),
+    }
 
 
 class ParquetMergeWriter(LastWinsWriter):
     """MERGE-into-parquet state maintainer for foreachBatch: one delta
-    partition per micro-batch over a pk-hash-bucketed compacted base."""
+    partition per micro-batch over a pk-hash-bucketed compacted base,
+    behind the stream loop guard when ``guard_dir`` is given."""
 
     def __init__(
         self,
@@ -107,6 +231,7 @@ class ParquetMergeWriter(LastWinsWriter):
         audit_dir: str,
         n_buckets: int = 16,
         strategy: str = "last_wins",
+        guard_dir: str | None = None,
     ):
         if strategy not in ("last_wins", "net"):
             raise ValueError(f"unknown merge strategy: {strategy}")
@@ -128,8 +253,14 @@ class ParquetMergeWriter(LastWinsWriter):
             spark, state_dir, "pk", "pk long, name string, acctbal double",
             n_buckets,
         )
+        self.guard = (
+            None if guard_dir is None
+            else LoopGuardStore(spark, guard_dir, n_buckets)
+        )
 
     def init_state(self, base: DataFrame) -> None:
+        """Reset the MERGE state to ``base`` and forget every guarded
+        hash (the guard's reset deletes its directory; no Spark job)."""
         self.store.reset(
             base.select(
                 F.col("c_custkey").cast("long").alias("pk"),
@@ -137,94 +268,71 @@ class ParquetMergeWriter(LastWinsWriter):
                 F.col("c_acctbal").cast("double").alias("acctbal"),
             )
         )
+        if self.guard is not None:
+            self.guard.clear()
 
     def current_state(self) -> DataFrame:
         return self.store.live().select("pk", "name", "acctbal")
 
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        """The foreachBatch body: reduce -> the store's batch-start step
-        (compact if due, probe the pre-batch snapshot) -> decide ->
-        delta partition + audit partition."""
-        from cdc_sync_poc_spark.streaming.util import persisted
-
-        # ``last`` and ``decided`` hold one row per changed key, a count
-        # the source's per-trigger cap bounds, so each is cached as ONE
-        # partition: cached plans keep their shuffle partitioning (AQE
-        # does not coalesce them), and 2x cores near-empty partitions
-        # would cost every job over them that many tasks and every
-        # delta/audit partition that many files
-        with persisted(reduce_batch(changes, self.strategy).coalesce(1)) as last:
-            snap = self.store.begin_batch(
-                last.select("pk"), batch_id, self._compact_at()
+        """The foreachBatch body: one partition, one collect for both
+        stores' batch-start steps, the guard walk, then one decide
+        aggregate -> guard delta, MERGE delta and audit partitions."""
+        stores = [self.store]
+        cols = named_cols(*OP_COLS)
+        if self.guard is not None:
+            stores.append(self.guard)
+            cols += (
+                *_guard_cols(),
+                stage1_invalid(changes).alias("invalid"),
             )
-            if snap is None:
+        # the batch is bounded by the source's per-trigger cap, so it is
+        # cached as ONE partition: cached plans keep their partitioning
+        # (AQE does not coalesce them), and every aggregate over it then
+        # plans without an exchange
+        with persisted(changes.select(*cols).coalesce(1)) as batch:
+            buckets = batch.select(*[s.bucket() for s in stores]).distinct().collect()
+            snaps = [
+                s.begin_batch({r[i] for r in buckets}, batch_id, self._compact_at())
+                for i, s in enumerate(stores)
+            ]
+            if any(snap is None for snap in snaps):
                 return
-            with persisted(self._decide(last, snap).coalesce(1)) as decided:
-                self._write(decided, batch_id)
+            if self.guard is None:
+                kept, blocked = batch, None
+            else:
+                walked = guard_walk(batch, snaps[1])
+                self.guard.write_walk(walked, batch_id)
+                flagged = flagged_rows(walked)
+                c = _write_cols()
+                kept = flagged.filter(*c["kept_row"])
+                blocked = flagged.filter(*c["blocked_row"])
+            with persisted(_decide(_ops(kept, self.strategy), snaps[0])) as decided:
+                self._write(decided, batch_id, blocked)
 
-    @staticmethod
-    def _decide(last: DataFrame, snap: DataFrame) -> DataFrame:
-        """The one probe: each batch key's reduced op beside ``exists``
-        — whether its newest snapshot row is a live row. A union and one
-        hash aggregate on pk instead of a join: each group holds the
-        key's one batch row (the op) and its snapshot rows (tombstone
-        flag and batch_id), so the probe costs a single small shuffle."""
-        op_cols = ["cdc_seq", "operation", "val", "first_op"]
-        types = dict(last.dtypes)
-        rows = last.select(
-            "pk", *op_cols,
-            F.lit(None).cast("boolean").alias("deleted"),
-            F.lit(None).cast("long").alias("batch_id"),
-        ).unionByName(
-            snap.select(
-                "pk", *[F.lit(None).cast(types[c]).alias(c) for c in op_cols],
-                "deleted", F.col("batch_id").cast("long"),
-            )
-        )
-        return rows.groupBy("pk").agg(
-            *[F.max(c).alias(c) for c in op_cols],
-            F.coalesce(
-                ~F.max_by("deleted", "batch_id"), F.lit(False)
-            ).alias("exists"),
-        )
-
-    def _write(self, decided: DataFrame, batch_id: int) -> None:
-        """Batch N's two partitions from the probe. Delta: the decision
-        table of operators/apply.py::merge_final_state — INSERT/UPSERT
-        writes the row, UPDATE writes it only for an existing key,
-        DELETE of an existing key writes a tombstone. Audit: each key's
-        DECIDING row gets a status — UPDATE/DELETE on a missing key ->
-        TARGET_NOT_FOUND (ap03), everything else -> SUCCESS (INSERT on
-        an existing key is the ap02 dup->update path). Under
+    def _write(
+        self, decided: DataFrame, batch_id: int, blocked: DataFrame | None
+    ) -> None:
+        """Batch N's MERGE delta and audit partitions from the probe.
+        Delta: the decision table of operators/apply.py::merge_final_state
+        — INSERT/UPSERT writes the row, UPDATE writes it only for an
+        existing key, DELETE of an existing key writes a tombstone.
+        Audit: each key's DECIDING row gets a status — UPDATE/DELETE on a
+        missing key -> TARGET_NOT_FOUND (ap03), everything else ->
+        SUCCESS (INSERT on an existing key is the ap02 dup->update path)
+        — and each ``blocked`` event is LOOP_BLOCKED. Under
         strategy='net' a net DELETE whose first op was INSERT means the
         key was created AND deleted inside this batch: the sequential
         replay it claims parity with would log INSERT=SUCCESS then
         DELETE=SUCCESS, so it is audited SUCCESS too (ADVICE r4)."""
-        op, exists, pk = F.col("operation"), F.col("exists"), F.col("pk")
-        deleted = op == "DELETE"
+        c = _write_cols()
         self.store.write_delta(
-            decided.filter(op.isin("INSERT", "UPSERT") | exists).select(
-                pk,
-                F.when(~deleted, F.concat(F.lit("U"), pk.cast("string"))).alias(
-                    "name"
-                ),
-                F.when(~deleted, F.col("val")).alias("acctbal"),
-                deleted.alias("deleted"),
-            ),
-            batch_id,
+            decided.filter(*c["applied"]).select(*c["delta"]), batch_id
         )
-        created_in_batch = F.coalesce(F.col("first_op") == "INSERT", F.lit(False))
-        decided.select(
-            "cdc_seq",
-            "pk",
-            "operation",
-            F.when(
-                op.isin("UPDATE", "DELETE") & ~exists & ~created_in_batch,
-                "TARGET_NOT_FOUND",
-            )
-            .otherwise("SUCCESS")
-            .alias("status"),
-        ).write.mode("overwrite").parquet(
+        audit = decided.select(*c["audit"])
+        if blocked is not None:
+            audit = audit.unionByName(blocked.select(*c["blocked"])).coalesce(1)
+        audit.write.mode("overwrite").parquet(
             os.path.join(self.audit_dir, f"batch_id={batch_id}")
         )
 
@@ -239,18 +347,21 @@ def run_stream_pipeline(
     strategy: str = "last_wins",
 ):
     """Wire source -> cdc view -> loop dedup -> foreachBatch merge.
-    Returns the started StreamingQuery. Default trigger availableNow for
+    Returns (StreamingQuery, writer). Default trigger availableNow for
     tests; production uses processingTime='5 seconds' (st04).
 
-    dedup: 'watermark' (built-in first-seen-wins, production default),
-    'stateful' (applyInPandasWithState, exact sequential semantics with
-    blocked rows dropped before the merge), or 'none' (no loop dedup —
-    required for strategy='net' sequential parity, since dropping
-    equal-hash rows can flip a net classification).
+    dedup: 'watermark' (built-in first-seen-wins
+    ``dropDuplicatesWithinWatermark`` in front of the writer),
+    'stateful' (the reference's exact sequential loop guard, run by the
+    writer inside its own batch over a guard store under
+    ``out_dir/guard``: the CDC view goes straight to foreachBatch, and
+    blocked events are audited LOOP_BLOCKED instead of merged), or
+    'none' (no loop dedup — required for strategy='net' sequential
+    parity, since dropping equal-hash rows can flip a net
+    classification). No mode runs a Python worker.
 
     strategy: forwarded to ParquetMergeWriter — 'last_wins' (ap01) or
     'net' (ap06-exact compaction)."""
-    from cdc_sync_poc_spark.streaming.dedup import stateful_dedup, watermark_dedup
     from cdc_sync_poc_spark.streaming.source import file_event_stream, stream_cdc_view
 
     if dedup not in ("watermark", "stateful", "none"):
@@ -260,15 +371,11 @@ def run_stream_pipeline(
         state_dir=os.path.join(out_dir, "state"),
         audit_dir=os.path.join(out_dir, "audit"),
         strategy=strategy,
+        guard_dir=os.path.join(out_dir, "guard") if dedup == "stateful" else None,
     )
     writer.init_state(base)
     cdc = stream_cdc_view(file_event_stream(spark, events_path))
-    if dedup == "stateful":
-        deduped = stateful_dedup(cdc).filter("NOT loop_blocked").drop("loop_blocked")
-    elif dedup == "none":
-        deduped = cdc
-    else:
-        deduped = watermark_dedup(cdc)
+    deduped = watermark_dedup(cdc) if dedup == "watermark" else cdc
     q = (
         deduped.writeStream.foreachBatch(writer.apply_batch)
         .option("checkpointLocation", os.path.join(out_dir, "checkpoint"))

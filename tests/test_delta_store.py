@@ -1,7 +1,8 @@
 """The shared delta-store layout (streaming/delta_store.py): every
 store kind reads its watermark from a directory and its schemas from
-its DDL, so building a read frame starts no Spark job; and a
-last-wins store works on a string key."""
+its DDL, so building a read frame starts no Spark job; a last-wins
+store works on a string key; and the guarded MERGE writer keeps its
+per-micro-batch job budget."""
 
 from __future__ import annotations
 
@@ -98,11 +99,12 @@ def test_last_wins_store_on_a_string_key(spark, tmp_path):
         0,
     )
     keys = spark.createDataFrame([("abc",), ("zzz",)], "k string")
-    snap = store.begin_batch(keys, 1, compact_at=1)  # folds batch 0
+    buckets = {r[0] for r in keys.select(store.bucket()).collect()}
+    snap = store.begin_batch(buckets, 1, compact_at=1)  # folds batch 0
     assert store.watermark() == 0
-    assert [(r.k, r.v, r.deleted) for r in snap.collect()] == [
-        ("abc", 10, False)
-    ]
+    assert [
+        (r.k, r.v, r.deleted) for r in snap.join(keys, "k", "left_semi").collect()
+    ] == [("abc", 10, False)]
     store.write_delta(
         spark.createDataFrame(
             [("zzz", 5, False)], "k string, v long, deleted boolean"
@@ -166,3 +168,51 @@ def test_snapshot_lookups_start_at_most_their_collect(spark, tmp_path):
         ("pack", 0): {}, ("pack", 1): {"en": 3}, ("pack", 3): {"en": 5},
         ("order", 0): {}, ("order", 1): {0: 3}, ("order", 3): {0: 5},
     }
+
+
+def test_guarded_merge_batch_runs_at_most_six_jobs(spark, tmp_path):
+    """A warm micro-batch of the MERGE writer behind the stream loop
+    guard runs at most 6 Spark jobs: the bucket collect and the guard
+    delta, MERGE delta and audit writes, plus filling the two caches
+    (the batch and the decided keys). The guard's init starts none: a
+    guarded writer's init_state starts as many jobs as a plain one's."""
+    import datetime as dtm
+
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
+
+    base = spark.range(0, 50).select(
+        F.col("id").alias("c_custkey"),
+        F.concat(F.lit("n"), F.col("id")).alias("c_name"),
+        F.col("id").cast("double").alias("c_acctbal"),
+    )
+    plain = ParquetMergeWriter(
+        spark, str(tmp_path / "p" / "state"), str(tmp_path / "p" / "audit"),
+        n_buckets=4,
+    )
+    out = tmp_path / "g"
+    guarded = ParquetMergeWriter(
+        spark, str(out / "state"), str(out / "audit"), n_buckets=4,
+        guard_dir=str(out / "guard"),
+    )
+    assert _jobs_started(spark, lambda: guarded.init_state(base)) == (
+        _jobs_started(spark, lambda: plain.init_state(base))
+    )
+
+    t0 = dtm.datetime(2024, 1, 1)
+
+    def batch(first, minute):
+        # every pk echoes its hash a minute later, so the guard blocks
+        return spark.createDataFrame(
+            [
+                (first + 2 * i + j, i, "UPDATE", float(i), f"h{i}",
+                 t0 + dtm.timedelta(minutes=minute + j))
+                for i in range(40) for j in range(2)
+            ],
+            "cdc_seq long, pk long, operation string, val double, "
+            "change_hash string, ts timestamp",
+        )
+
+    guarded.apply_batch(batch(0, 0), 0)
+    assert _jobs_started(spark, lambda: guarded.apply_batch(batch(80, 10), 1)) <= 6
+    audit = spark.read.parquet(str(out / "audit" / "batch_id=1")).collect()
+    assert sorted(r.status for r in audit) == ["LOOP_BLOCKED"] * 40 + ["SUCCESS"] * 40

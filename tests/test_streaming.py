@@ -34,6 +34,13 @@ def stream_dirs(tmp_path):
     return str(events_dir), str(out_dir)
 
 
+def _assert_no_python_state(q):
+    """The started stream's plan runs no pandas operator: the loop
+    guard of every dedup mode is JVM-side (no applyInPandasWithState)."""
+    plan = q._jsq.streamingQuery().logicalPlan().toString()
+    assert "InPandas" not in plan, plan
+
+
 def test_stream_pipeline_matches_batch_merge(spark, stream_dirs):
     from pyspark.sql import functions as F
 
@@ -45,6 +52,7 @@ def test_stream_pipeline_matches_batch_merge(spark, stream_dirs):
     base = load_table(spark, SF_DIR, "customer")
     q, writer = run_stream_pipeline(spark, events_path, base, out_dir)
     q.awaitTermination(120)
+    _assert_no_python_state(q)
 
     got = {
         (r.pk, r.name, round(r.acctbal, 6))
@@ -284,9 +292,9 @@ def test_replayed_delete_of_existing_key_keeps_audit(spark, tmp_path):
 
 
 def test_stream_pipeline_stateful_dedup_variant(spark, stream_dirs):
-    """The stateful (applyInPandasWithState) dedup variant produces the
-    same final merged state: blocked rows are exact-content duplicates,
-    so dropping them cannot change last-wins results."""
+    """The stateful dedup variant (the writer's JVM loop guard) produces
+    the same final merged state: blocked rows are exact-content
+    duplicates, so dropping them cannot change last-wins results."""
     from cdc_sync_poc_spark.operators.apply import apply_final_state
     from cdc_sync_poc_spark.sources.loader import load_table
     from cdc_sync_poc_spark.streaming.writer import run_stream_pipeline
@@ -297,6 +305,7 @@ def test_stream_pipeline_stateful_dedup_variant(spark, stream_dirs):
         spark, events_path, base, out_dir + "_stateful", dedup="stateful"
     )
     q.awaitTermination(120)
+    _assert_no_python_state(q)
     got = {
         (r.pk, r.name, round(r.acctbal, 6))
         for r in writer.current_state().collect()
@@ -367,6 +376,126 @@ def test_crash_between_compaction_renames_converges(
     state = {r.pk: r.acctbal for r in got[0]}
     assert state[1] == 11.0 and state[3] == 12.0
     assert 2 not in state and 100 not in state and len(state) == 19
+
+
+def _guarded_writer(spark, out):
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
+
+    return ParquetMergeWriter(
+        spark, str(out / "state"), str(out / "audit"), n_buckets=4,
+        guard_dir=str(out / "guard"),
+    )
+
+
+def _guarded_batch(spark, rows):
+    """(cdc_seq, pk, operation, val, change_hash, minute) rows -> the
+    frame a guarded writer takes (event time in minutes after t0)."""
+    import datetime as dtm
+
+    t0 = dtm.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [(*r[:5], t0 + dtm.timedelta(minutes=r[5])) for r in rows],
+        "cdc_seq long, pk long, operation string, val double, "
+        "change_hash string, ts timestamp",
+    )
+
+
+def _guard_hashes(guard, base_only=False):
+    """change_hash -> last_us over the guard's live rows, or over its
+    compacted base alone."""
+    if base_only:
+        upto = guard.watermark()
+        rows = [] if upto is None else guard.rows(before=upto + 1).collect()
+    else:
+        rows = guard.live().collect()
+    return {r.change_hash: r.last_us for r in rows if r.change_hash}
+
+
+def test_crash_between_guard_and_merge_deltas_converges(
+    spark, tmp_path, monkeypatch
+):
+    """The guarded writer writes batch N's guard delta before its MERGE
+    delta. A crash between the two must converge: the replay of N
+    walks from the pre-batch guard snapshot, which excludes its own
+    guard delta, so it lands the same state, guard store and audit as
+    a run without the crash. Reading the half-written guard delta would
+    block event 4 (its hash applied at minute 6 by the crashed attempt)."""
+    batches = [
+        [(0, 1, "UPDATE", 10.0, "a", 0), (1, 2, "INSERT", 5.0, "b", 1)],
+        # a: 3 min after its applied event -> blocked
+        [(2, 1, "UPDATE", 10.0, "a", 3), (3, 3, "UPDATE", 7.0, "c", 4)],
+        # a: 6 min after -> applied; c: 3 min after -> blocked
+        [(4, 1, "UPDATE", 10.0, "a", 6), (5, 2, "DELETE", None, "d", 6),
+         (6, 3, "UPDATE", 7.0, "c", 7)],
+    ]
+
+    def run(out, crash):
+        writer = _guarded_writer(spark, out)
+        writer.init_state(_keyed_base(spark, 20))
+        for bid, rows in enumerate(batches[:2]):
+            writer.apply_batch(_guarded_batch(spark, rows), bid)
+        last = _guarded_batch(spark, batches[2])
+        if crash:
+            def crashing_write(df, batch_id):
+                raise OSError("simulated crash")
+
+            monkeypatch.setattr(writer.store, "write_delta", crashing_write)
+            with pytest.raises(OSError, match="simulated crash"):
+                writer.apply_batch(last, 2)
+            assert (out / "guard" / "deltas" / "batch_id=2").is_dir()
+            assert not (out / "state" / "deltas" / "batch_id=2").exists()
+            writer = _guarded_writer(spark, out)  # restart
+        writer.apply_batch(last, 2)
+        audit = spark.read.parquet(str(out / "audit")).collect()
+        return (
+            sorted(writer.current_state().collect()),
+            _guard_hashes(writer.guard),
+            sorted((r.batch_id, r.cdc_seq, r.status) for r in audit),
+        )
+
+    want = run(tmp_path / "clean", crash=False)
+    assert run(tmp_path / "crash", crash=True) == want
+    assert [seq for _b, seq, st in want[2] if st == "LOOP_BLOCKED"] == [2, 6]
+    assert want[1]["a"] - want[1]["c"] == 2 * 60 * 1_000_000  # 6 min vs 4
+
+
+def test_guard_state_stays_bounded_past_the_ttl(spark, tmp_path, monkeypatch):
+    """Guard compaction evicts hashes applied more than 10 minutes
+    (SP_CLEANUP_HASH, st03) before the newest folded one, so over
+    batches spanning 19 minutes the guard's base holds at most two
+    hashes. An evicted hash's next event is applied, while a hash
+    inside the TTL still blocks its echo."""
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
+
+    monkeypatch.setattr(ParquetMergeWriter, "_compact_at", lambda self: 1)
+    writer = _guarded_writer(spark, tmp_path / "g")
+    writer.init_state(_keyed_base(spark, 10))
+    sizes = []
+    for bid, minute in enumerate((0, 6, 12, 18)):
+        writer.apply_batch(
+            _guarded_batch(spark, [(bid, bid, "UPDATE", 1.0, f"h{bid}", minute)]),
+            bid,
+        )
+        sizes.append(len(_guard_hashes(writer.guard, base_only=True)))
+    # by batch 4's fold (newest applied 18 min) h0 (0) and h1 (6) are
+    # evicted; h0 returns and is applied, h3's echo is blocked
+    writer.apply_batch(
+        _guarded_batch(
+            spark,
+            [(4, 0, "UPDATE", 2.0, "h0", 19), (5, 3, "UPDATE", 1.0, "h3", 20)],
+        ),
+        4,
+    )
+    sizes.append(len(_guard_hashes(writer.guard, base_only=True)))
+    assert sizes == [0, 1, 2, 2, 2]
+    assert set(_guard_hashes(writer.guard, base_only=True)) == {"h2", "h3"}
+    assert set(_guard_hashes(writer.guard)) == {"h0", "h2", "h3"}
+    audit = {
+        r.cdc_seq: r.status
+        for r in spark.read.parquet(str(tmp_path / "g" / "audit" / "batch_id=4")).collect()
+    }
+    assert audit == {4: "SUCCESS", 5: "LOOP_BLOCKED"}
+    assert {r.pk: r.acctbal for r in writer.current_state().collect()}[0] == 2.0
 
 
 def test_stream_final_state_matches_duckdb_oracle(spark, duck, stream_dirs):
@@ -652,6 +781,7 @@ def test_stream_net_pipeline_matches_sequential_replay(spark, stream_dirs):
         strategy="net",
     )
     q.awaitTermination(120)
+    _assert_no_python_state(q)
     got = {
         (r.pk, r.name, round(r.acctbal, 6))
         for r in writer.current_state().collect()

@@ -1,17 +1,42 @@
-"""Streaming loop-guard (streaming/dedup.stateful_dedup): the reference's
-sequential dedup semantics with blocked rows emitted and per-hash state
-carried across micro-batches (batch twin:
-functions/loopguard.with_loop_blocked)."""
+"""Streaming loop-guard (``run_stream_pipeline(dedup="stateful")``, the
+MERGE writer's guard store): the reference's sequential dedup semantics
+with blocked rows audited LOOP_BLOCKED and per-hash state carried
+across micro-batches (batch twin: functions/loopguard.with_loop_blocked).
+The first test also checks ``streaming/dedup.stateful_dedup`` while the
+benchmark's traced stream composition still uses it."""
 
 from __future__ import annotations
 
 import pandas as pd
 
 
+def _guarded_run(spark, in_dir, out_dir):
+    """Run the shipped stateful-dedup stream over ``in_dir``; return the
+    audit's LOOP_BLOCKED cdc_seqs and its other statuses by cdc_seq."""
+    from pyspark.sql import functions as F
+
+    from cdc_sync_poc_spark.streaming.writer import run_stream_pipeline
+
+    base = spark.range(1, 4).select(
+        F.col("id").alias("c_custkey"),
+        F.concat(F.lit("n"), F.col("id")).alias("c_name"),
+        F.col("id").cast("double").alias("c_acctbal"),
+    )
+    q, _writer = run_stream_pipeline(
+        spark, str(in_dir), base, str(out_dir), dedup="stateful"
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    audit = spark.read.parquet(str(out_dir / "audit")).collect()
+    blocked = {r.cdc_seq for r in audit if r.status == "LOOP_BLOCKED"}
+    return blocked, {r.cdc_seq for r in audit} - blocked
+
+
 def test_stateful_dedup_matches_batch_walk_and_oracle_across_files(spark, tmp_path):
-    """Three files -> three micro-batches through stateful_dedup. The
-    stream flags equal the batch with_loop_blocked over the same rows
-    and the DuckDB WALK_CTES oracle:
+    """Three files -> three micro-batches through the shipped stream
+    guard. The events its audit marks LOOP_BLOCKED are the ones the
+    batch with_loop_blocked over the same rows, the DuckDB WALK_CTES
+    oracle and stateful_dedup block:
 
     * hash A (user 1): gaps 3/6/20 min, a 4-chain across all three
       files — the blocked +3 min event does not refresh the window, so
@@ -94,13 +119,17 @@ def test_stateful_dedup_matches_batch_walk_and_oracle_across_files(spark, tmp_pa
     }
     assert stream == batch == oracle
 
+    blocked, applied = _guarded_run(spark, in_dir, tmp_path / "guarded")
+    assert blocked == {seq for seq, b in oracle.items() if b} == {1, 12, 22}
+    # the other audit rows are each key's deciding event per batch
+    assert applied <= {seq for seq, b in oracle.items() if not b}
+
 
 def test_stateful_dedup_carries_state_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState loop-guard: an event in micro-batch 2
-    within 5 min of an applied event from micro-batch 1 is blocked —
-    state survives in the checkpointed store between batches."""
-    from cdc_sync_poc_spark.streaming.dedup import stateful_dedup
-    from cdc_sync_poc_spark.streaming.source import file_event_stream, stream_cdc_view
+    """The guard store carries each hash's last applied time between
+    micro-batches: an event in micro-batch 2 within 5 min of an applied
+    event from micro-batch 1 is audited LOOP_BLOCKED, and one 13 min
+    later is applied."""
 
     def batch(ids, ts_list):
         return pd.DataFrame(
@@ -114,24 +143,17 @@ def test_stateful_dedup_carries_state_across_microbatches(spark, tmp_path):
             }
         )
 
+    import os
+
     in_dir = tmp_path / "st_in"
     in_dir.mkdir()
     # batch 1 (file a): applied at t0
     batch([0], ["2024-01-01 00:00:00"]).to_parquet(in_dir / "a.parquet")
-    # batch 2 (file b): +3 min -> blocked by batch-1 state; +10 min -> applied
+    # batch 2 (file b): +3 min -> blocked by batch-1 state; +13 min -> applied
     batch([1, 2], ["2024-01-01 00:03:00", "2024-01-01 00:13:00"]).to_parquet(
         in_dir / "b.parquet"
     )
-
-    cdc = stream_cdc_view(file_event_stream(spark, str(in_dir)))
-    rows = []
-    q = (
-        stateful_dedup(cdc)
-        .writeStream.foreachBatch(lambda df, _b: rows.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.cdc_seq: r.loop_blocked for r in rows}
-    assert got == {0: False, 1: True, 2: False}
+    for i, name in enumerate("ab"):  # file order
+        os.utime(in_dir / f"{name}.parquet", (1_700_000_000 + i,) * 2)
+    blocked, applied = _guarded_run(spark, in_dir, tmp_path / "out")
+    assert (blocked, applied) == ({1}, {0, 2})
