@@ -37,7 +37,6 @@ shuffle is on the high-cardinality hash key so it distributes evenly at
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Callable
 
 import pandas as pd
@@ -47,12 +46,13 @@ from pyspark.sql import functions as F
 WINDOW_US = 5 * 60 * 1_000_000  # 5 minutes (FN_IS_LOOP interval, :40)
 # The stream guard's state TTL (SP_CLEANUP_HASH, st03: hashes older than
 # 10 minutes are deleted). Compaction evicts a hash whose last applied
-# time is more than this behind the newest one it folds. A very late
-# event — more than TTL - WINDOW (5 minutes) behind the newest folded
-# event time — whose hash was evicted is therefore applied where the
-# unbounded walk would block it; the reference's cleanup job has the
-# same gap. Later events are unaffected: an evicted hash's window had
-# closed long before them.
+# time is more than this behind the second-newest one it folds (event
+# times come from outside, and one far-future event must not evict
+# every other hash). A very late event — more than TTL - WINDOW (5
+# minutes) behind that folded event time — whose hash was evicted is
+# therefore applied where the unbounded walk would block it; the
+# reference's cleanup job has the same gap. Later events are
+# unaffected: an evicted hash's window had closed long before them.
 HASH_TTL_US = 10 * 60 * 1_000_000
 
 
@@ -171,16 +171,8 @@ def with_loop_blocked(cdc: DataFrame) -> DataFrame:
 def flagged_rows(walked: DataFrame) -> DataFrame:
     """A walk's events back as rows: each ``evs`` element's ``row``
     with its ``blocked`` flag as ``loop_blocked``."""
-    explode, flag = _flag_cols()
-    return walked.select(*explode).select(*flag)
-
-
-@functools.cache
-def _flag_cols() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
-    # built once: the stream guard unpacks its walk this way every batch
-    return (
-        (F.posexplode("evs").alias("i", "e"), F.col("blocked")),
-        (F.col("e.row.*"), F.col("blocked")[F.col("i")].alias("loop_blocked")),
+    return walked.select(F.posexplode("evs").alias("i", "e"), "blocked").select(
+        "e.row.*", F.col("blocked")[F.col("i")].alias("loop_blocked")
     )
 
 

@@ -20,7 +20,7 @@ join, and AQE handles skewed keys.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_sync_poc_spark.cdc.envelope import CDC_CTE, cdc_view
@@ -286,7 +286,7 @@ def ap06_sequential_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_final_state(load_table(spark, sf_dir, "customer"), net)
 
 
-def net_effect(cdc: DataFrame, *carry: Column) -> DataFrame:
+def net_effect(cdc: DataFrame) -> DataFrame:
     """Collapse each pk's op sequence (ordered by cdc_seq) to ONE net
     op whose application is replay-equivalent to the full sequence
     under the engine's tolerant apply semantics (ap02: INSERT on an
@@ -311,10 +311,7 @@ def net_effect(cdc: DataFrame, *carry: Column) -> DataFrame:
     + filtered max fold map-side, no window, no sort) and the output
     is keys-sized, not ops-sized. At 100 TB the hot-key batches (the
     skew case for the MERGE shuffle) are exactly the ones compaction
-    shrinks hardest.
-
-    ``carry``: extra aliased per-key aggregates, returned after the net
-    columns (the streaming writer carries each key's last cdc_seq)."""
+    shrinks hardest."""
     g = cdc.groupBy("pk").agg(
         F.count("*").alias("n_ops"),
         F.expr("min_by(operation, cdc_seq)").alias("first_op"),
@@ -326,7 +323,6 @@ def net_effect(cdc: DataFrame, *carry: Column) -> DataFrame:
         F.max(
             F.when(F.col("operation") == "INSERT", F.col("cdc_seq"))
         ).alias("last_ins_seq"),
-        *carry,
     )
     ins_after_del = F.col("last_ins_seq") > F.coalesce(
         F.col("last_del_seq"), F.lit(-1)
@@ -344,7 +340,6 @@ def net_effect(cdc: DataFrame, *carry: Column) -> DataFrame:
         "last_op",
         net.alias("net_op"),
         F.when(net != "DELETE", F.col("last_val")).alias("net_val"),
-        *g.columns[len(g.columns) - len(carry):],
     )
 
 

@@ -21,10 +21,12 @@ Two tiers, by fidelity:
   the batch and the pre-batch guard snapshot. ``guard_walk`` folds each
   hash's batch events with ``functions/loopguard.loop_walk`` — the walk
   the batch ``with_loop_blocked`` runs — seeded with the snapshot's
-  last applied time, in one partition with no exchange. Compaction
-  evicts hashes more than ``HASH_TTL_US`` (10 minutes, st03) behind the
-  newest folded one, so the state stays bounded; the very-late-event
-  case this opens is documented at ``HASH_TTL_US``.
+  last applied time, in one partition with no exchange while the
+  guard snapshot it reads fits one task. Compaction evicts hashes more
+  than ``HASH_TTL_US`` (10 minutes, st03) behind the second-newest
+  folded one, so the state stays bounded and one far-future event
+  cannot empty it; the very-late-event case this opens is documented
+  at ``HASH_TTL_US``.
   ``tests/test_tws_dedup.py`` checks that the guard blocks the rows the
   batch walk and the DuckDB ``WALK_CTES`` block.
 
@@ -35,11 +37,10 @@ only while the benchmark's traced stream composition imports it.
 
 from __future__ import annotations
 
-import functools
 import shutil
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -49,7 +50,7 @@ from cdc_sync_poc_spark.functions.loopguard import (
     stage1_invalid,
     walk_kernel,
 )
-from cdc_sync_poc_spark.streaming.delta_store import LastWinsDeltaStore, named_cols
+from cdc_sync_poc_spark.streaming.delta_store import LastWinsDeltaStore
 
 LOOP_WINDOW = "5 minutes"  # FN_IS_LOOP interval (:40)
 
@@ -66,9 +67,11 @@ class LoopGuardStore(LastWinsDeltaStore):
     """The stream loop guard's state: one row per change_hash holding
     ``last_us``, its last applied event time in epoch microseconds.
     Rows are never tombstoned; compaction drops the hashes whose
-    ``last_us`` is more than ``HASH_TTL_US`` behind the newest
-    ``last_us`` it folds — a function of the folded rows, so a replay
-    cannot move the cutoff."""
+    ``last_us`` is more than ``HASH_TTL_US`` behind the clock of the
+    rows it folds. That clock is their second-newest ``last_us``, so
+    one far-future event cannot evict every other hash (it takes two),
+    and it is a function of the folded rows, so a replay cannot move
+    the cutoff."""
 
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
         super().__init__(
@@ -84,70 +87,31 @@ class LoopGuardStore(LastWinsDeltaStore):
 
     def _fold(self, rows: DataFrame) -> DataFrame:
         live = self.newest(rows).filter(~F.col("deleted"))
-        newest = F.max("last_us").over(Window.partitionBy())
+        newest_first = Window.orderBy(F.desc("last_us")).rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        clock = F.coalesce(
+            F.nth_value("last_us", 2).over(newest_first), F.col("last_us")
+        )
         return self._with_watermark_row(
-            live.withColumn("newest", newest).filter(
-                F.col("last_us") >= F.col("newest") - HASH_TTL_US
+            live.withColumn("clock", clock).filter(
+                F.col("last_us") >= F.col("clock") - HASH_TTL_US
             )
         )
 
     def write_walk(self, walked: DataFrame, batch_id: int) -> None:
         """Batch N's guard delta: the hashes whose last applied time the
         walk moved."""
-        c = _walk_cols()
-        self.write_delta(walked.filter(*c["moved"]).select(*c["delta"]), batch_id)
+        last = F.col("last")
+        self.write_delta(
+            walked.filter(last.isNotNull() & ~last.eqNullSafe(F.col("seed"))).select(
+                "change_hash", last.alias("last_us"), F.lit(False).alias("deleted")
+            ),
+            batch_id,
+        )
 
 
-# a walked event: its time, order and validity, and the MERGE writer's
-# op row it carries back out
-_EVENT = (
-    "struct<us:bigint,cdc_seq:bigint,invalid:boolean,"
-    "row:struct<cdc_seq:bigint,pk:bigint,operation:string,val:double>>"
-)
-
-
-@functools.cache
-def _walk_cols() -> dict[str, tuple[Column, ...]]:
-    """The guard's Column expressions, built once (see
-    ``delta_store.named_cols``)."""
-    ev = F.struct(
-        "us", "cdc_seq", "invalid",
-        F.struct("cdc_seq", "pk", "operation", "val").alias("row"),
-    ).cast(_EVENT)
-    last = F.col("last")
-    return {
-        "events": (
-            F.col("change_hash"),
-            ev.alias("ev"),
-            F.lit(None).cast("long").alias("last_us"),
-            F.lit(None).cast("long").alias("batch_id"),
-        ),
-        "snap": (
-            F.col("change_hash"),
-            F.lit(None).cast(_EVENT).alias("ev"),
-            F.col("last_us"),
-            F.col("batch_id").cast("long"),
-        ),
-        "agg": (
-            F.array_sort(F.collect_list("ev")).alias("evs"),
-            F.max_by("last_us", "batch_id").alias("seed"),
-        ),
-        "folded": (F.size("evs") > 0,),
-        "walk": (
-            *named_cols("change_hash", "seed", "evs"),
-            loop_walk(F.col("evs"), F.col("seed")).alias("walk"),
-        ),
-        "out": named_cols("change_hash", "seed", "evs", "walk.last", "walk.blocked"),
-        "moved": (last.isNotNull() & ~last.eqNullSafe(F.col("seed")),),
-        "delta": (
-            F.col("change_hash"),
-            last.alias("last_us"),
-            F.lit(False).alias("deleted"),
-        ),
-    }
-
-
-def guard_walk(events: DataFrame, snap: DataFrame) -> DataFrame:
+def guard_walk(events: DataFrame, snap: DataFrame, one_task: bool) -> DataFrame:
     """The stream guard's fold: one row per batch hash with ``seed``
     (its newest snapshot ``last_us``), ``evs`` (its batch events,
     sorted), and the walk's ``last`` and ``blocked``.
@@ -156,20 +120,31 @@ def guard_walk(events: DataFrame, snap: DataFrame) -> DataFrame:
     microseconds), ``invalid`` and the MERGE writer's op columns
     (``cdc_seq``, ``pk``, ``operation``, ``val``), which each event
     carries as its ``row``; ``snap`` is the guard store's pre-batch
-    snapshot rows. Both sides go into one partition and one group-by,
-    so the plan has no exchange: ``SinglePartition`` satisfies the
-    aggregate's clustered distribution. Snapshot-only hashes fold no
-    event and are dropped."""
-    c = _walk_cols()
+    snapshot rows. With ``one_task`` both sides go into one partition,
+    whose ``SinglePartition`` satisfies the group-by's clustered
+    distribution, so the plan has no exchange. Snapshot-only hashes
+    fold no event and are dropped."""
+    event = F.struct(
+        "us", "cdc_seq", "invalid",
+        F.struct("cdc_seq", "pk", "operation", "val").alias("row"),
+    )
+    rows = events.select("change_hash", event.alias("ev")).unionByName(
+        snap.select("change_hash", "last_us", "batch_id"), allowMissingColumns=True
+    )
+    if one_task:
+        rows = rows.coalesce(1)
     return (
-        events.select(*c["events"])
-        .unionByName(snap.select(*c["snap"]))
-        .coalesce(1)
-        .groupBy(*named_cols("change_hash"))
-        .agg(*c["agg"])
-        .filter(*c["folded"])
-        .select(*c["walk"])
-        .select(*c["out"])
+        rows.groupBy("change_hash")
+        .agg(
+            F.array_sort(F.collect_list("ev")).alias("evs"),
+            F.max_by("last_us", "batch_id").alias("seed"),
+        )
+        .filter(F.size("evs") > 0)
+        .select(
+            "change_hash", "seed", "evs",
+            loop_walk(F.col("evs"), F.col("seed")).alias("walk"),
+        )
+        .select("change_hash", "seed", "evs", "walk.last", "walk.blocked")
     )
 
 

@@ -66,24 +66,9 @@ from pyspark.sql.types import LongType, StructField, StructType
 from cdc_sync_poc_spark.streaming.swapstore import SwapStore
 
 
-@functools.cache
-def named_cols(*names: str) -> tuple[F.Column, ...]:
-    """Column references by name, built once per name list. Every
-    PySpark Column call is a driver round trip to the JVM (a few each
-    for the call-site bookkeeping), so a micro-batch body reuses the
-    expressions it builds instead of rebuilding them per batch; Columns
-    are immutable and hold no session."""
-    return tuple(F.col(n) for n in names)
-
-
-@functools.cache
-def _cast_cols(fields: tuple[tuple[str, str], ...]) -> tuple[F.Column, ...]:
-    return tuple(F.col(n).cast(t).alias(n) for n, t in fields)
-
-
 def _typed(df: DataFrame, fields: list[StructField]) -> DataFrame:
     return df.select(
-        *_cast_cols(tuple((f.name, f.dataType.simpleString()) for f in fields))
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
     )
 
 
@@ -188,7 +173,7 @@ class _DeltaStoreBase:
         upto = self.watermark()
         parts = []
         if upto is not None:
-            parts.append(self.base.read(self.base_schema).select(*named_cols(*self.cols)))
+            parts.append(self.base.read(self.base_schema).select(*self.cols))
         if batch_ids(self.deltas_dir):
             deltas = self.spark.read.schema(self.delta_schema).parquet(
                 self.deltas_dir
@@ -197,7 +182,7 @@ class _DeltaStoreBase:
                 deltas = deltas.filter(F.col("batch_id") > upto)
             if before is not None:
                 deltas = deltas.filter(F.col("batch_id") < before)
-            parts.append(deltas.select(*named_cols(*self.cols)))
+            parts.append(deltas.select(*self.cols))
         if not parts:
             return self.spark.createDataFrame([], self.schema)
         return functools.reduce(DataFrame.unionByName, parts)
@@ -348,11 +333,6 @@ def pk_bucket_col(col: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(col), F.lit(n_buckets))
 
 
-@functools.cache
-def _key_bucket(key: str, n_buckets: int) -> F.Column:
-    return pk_bucket_col(F.col(key), n_buckets)
-
-
 class LastWinsDeltaStore(_DeltaStoreBase):
     """Keyed last-writer-wins state with tombstones — MERGE as
     merge-on-read. A delta row is a resolved decision for its key: a
@@ -368,8 +348,7 @@ class LastWinsDeltaStore(_DeltaStoreBase):
     its partition from the same snapshot changes nothing.
 
     The base is laid out as ``upto=U/bucket=K/`` (``n_buckets`` hash
-    buckets of the key, one file each), so a probe of few keys opens
-    few files.
+    buckets of the key), so a probe of few keys opens few buckets.
     ``ddl`` types the key and value columns.
     """
 
@@ -396,7 +375,7 @@ class LastWinsDeltaStore(_DeltaStoreBase):
 
     def bucket(self) -> F.Column:
         """Each row's base bucket, from the key column."""
-        return _key_bucket(self.key, self.n_buckets)
+        return pk_bucket_col(F.col(self.key), self.n_buckets)
 
     def _with_watermark_row(self, rows: DataFrame) -> DataFrame:
         marker = self.spark.range(1).select(
@@ -423,11 +402,6 @@ class LastWinsDeltaStore(_DeltaStoreBase):
             F.lit(-1).cast("long").alias("batch_id"),
         )
         self._swap_base(self._with_watermark_row(base), -1)
-
-    def _swap_base(self, rows: DataFrame, upto: int) -> None:
-        # one file per bucket, whatever the input's partitioning: the
-        # writers read a batch's buckets in a single task
-        super()._swap_base(rows.repartition("bucket"), upto)
 
     def write_delta(self, df: DataFrame, batch_id: int) -> None:
         """Persist one batch's decisions (key + value columns and
@@ -467,6 +441,23 @@ class LastWinsDeltaStore(_DeltaStoreBase):
         if len(buckets) < self.n_buckets:
             rows = rows.filter(F.col("bucket").isin(sorted(buckets)))
         return rows
+
+    def snapshot_bytes(self, buckets: set[int], batch_id: int) -> int:
+        """Bytes of the files ``begin_batch`` reads for ``buckets`` and
+        batch ``batch_id``: those base buckets and the live deltas older
+        than the batch. Directory listings only, no Spark job."""
+        upto = self.watermark()
+        dirs = [self._delta_dir(b) for b in self.newer_deltas(upto) if b < batch_id]
+        if upto is not None:
+            base = os.path.join(self.base.cur_dir, f"upto={upto}")
+            dirs += [os.path.join(base, f"bucket={b}") for b in buckets]
+        return sum(
+            f.stat().st_size
+            for d in dirs
+            if os.path.isdir(d)
+            for f in os.scandir(d)
+            if f.name.endswith(".parquet")
+        )
 
     def newest(self, rows: DataFrame) -> DataFrame:
         """Each key's newest row (tombstones included): one hash

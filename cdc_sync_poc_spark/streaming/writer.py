@@ -4,15 +4,18 @@ merge-on-read on the shared delta-store recipe
 guard (streaming/dedup.py::LoopGuardStore) folded into the same batch.
 
 Per micro-batch N (the 5 s trigger replaces the reference's Oracle
-Scheduler job, st04), in one partition throughout — the batch is
-bounded by the source's per-trigger cap, and ``SinglePartition``
-satisfies every keyed aggregate's clustered distribution, so the plan
-has no exchange and no broadcast:
+Scheduler job, st04), in one partition while the inputs fit one task —
+the batch is bounded by the source's per-trigger cap, each snapshot by
+its touched buckets' bytes against ``ONE_TASK_BYTES``, and
+``SinglePartition`` satisfies every keyed aggregate's clustered
+distribution, so the plan has no exchange and no broadcast:
 
-1. the batch is persisted once, ``coalesce(1)``, and one driver
-   ``collect`` gives each store the base buckets its keys touch
-   (``LastWinsDeltaStore.begin_batch``: compact if due, read the
-   immutable pre-batch snapshot of those buckets);
+1. the batch is persisted once (filled in parallel, then read as one
+   partition), and one driver ``collect`` gives each store the base
+   buckets its keys touch (``LastWinsDeltaStore.begin_batch``: compact
+   if due, read the immutable pre-batch snapshot of those buckets). A
+   snapshot past one task's bytes is cut to the batch keys by a
+   broadcast semi-join instead, and its aggregate shuffles;
 2. with a guard (``guard_dir``), ``dedup.guard_walk`` folds each
    change_hash's events from its snapshot ``last_us`` with the batch
    loop guard's walk; the hashes whose ``last_us`` moved become the
@@ -64,10 +67,9 @@ exactly-once):
 
 from __future__ import annotations
 
-import functools
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_sync_poc_spark.functions.loopguard import flagged_rows, stage1_invalid
@@ -79,11 +81,12 @@ from cdc_sync_poc_spark.streaming.dedup import (
 from cdc_sync_poc_spark.streaming.delta_store import (
     LastWinsDeltaStore,
     LastWinsWriter,
-    named_cols,
 )
 from cdc_sync_poc_spark.streaming.util import persisted
 
-OP_COLS = ["cdc_seq", "pk", "operation", "val"]
+# The snapshot bytes one task reads: Spark's default
+# spark.sql.files.maxPartitionBytes, the input it gives one scan task.
+ONE_TASK_BYTES = 128 * 1024 * 1024
 
 
 def _ops(changes: DataFrame, strategy: str) -> DataFrame:
@@ -94,12 +97,12 @@ def _ops(changes: DataFrame, strategy: str) -> DataFrame:
     audit rows keep a joinable sequence number, and first_op rides
     along so a net DELETE of a key CREATED in the same batch is not
     audited TARGET_NOT_FOUND."""
+    rows = changes.select("cdc_seq", "pk", "operation", "val")
     if strategy == "net":
         from cdc_sync_poc_spark.operators.apply import net_effect
 
-        return net_effect(
-            changes.select(*OP_COLS), F.max("cdc_seq").alias("cdc_seq")
-        ).select(
+        last_seq = rows.groupBy("pk").agg(F.max("cdc_seq").alias("cdc_seq"))
+        return net_effect(rows).join(last_seq, "pk").select(
             "cdc_seq",
             "pk",
             F.col("net_op").alias("operation"),
@@ -108,115 +111,34 @@ def _ops(changes: DataFrame, strategy: str) -> DataFrame:
         )
     # last-wins audits the literal surviving op; no net algebra, so no
     # in-batch-creation exemption applies
-    return changes.select(*_last_wins_cols())
+    return rows.withColumn("first_op", F.lit(None).cast("string"))
 
 
-# The Column expressions of the per-batch plans are built once (see
-# delta_store.named_cols): they do not depend on the batch.
-
-
-@functools.cache
-def _last_wins_cols() -> tuple[Column, ...]:
-    return (*named_cols(*OP_COLS), F.lit(None).cast("string").alias("first_op"))
-
-
-_OP = "struct<cdc_seq:bigint,operation:string,val:double,first_op:string>"
-
-
-@functools.cache
-def _decide_cols() -> dict[str, tuple[Column, ...]]:
-    op = F.struct(
-        F.col("cdc_seq").cast("bigint").alias("cdc_seq"),
-        F.col("operation").cast("string").alias("operation"),
-        F.col("val").cast("double").alias("val"),
-        F.col("first_op").cast("string").alias("first_op"),
-    )
-    return {
-        "ops": (
-            F.col("pk"),
-            op.alias("op"),
-            F.col("cdc_seq").alias("seq"),
-            F.lit(None).cast("boolean").alias("deleted"),
-            F.lit(None).cast("long").alias("batch_id"),
-        ),
-        "snap": (
-            F.col("pk"),
-            F.lit(None).cast(_OP).alias("op"),
-            F.lit(None).cast("long").alias("seq"),
-            F.col("deleted"),
-            F.col("batch_id").cast("long"),
-        ),
-        "agg": (
+def _decide(ops: DataFrame, snap: DataFrame, one_task: bool) -> DataFrame:
+    """The per-key reduce and the probe in one keyed aggregate: each key
+    of ``ops`` with its newest op (``max_by`` on cdc_seq) beside
+    ``exists`` — whether its newest ``snap`` row (by batch_id) is a live
+    row. With ``one_task`` both sides go into one partition, so the
+    aggregate needs no exchange; snapshot-only keys carry no op and are
+    dropped."""
+    rows = ops.select(
+        "pk",
+        F.struct("cdc_seq", "operation", "val", "first_op").alias("op"),
+        F.col("cdc_seq").alias("seq"),
+    ).unionByName(snap.select("pk", "deleted", "batch_id"), allowMissingColumns=True)
+    if one_task:
+        rows = rows.coalesce(1)
+    return (
+        rows.groupBy("pk")
+        .agg(
             F.max_by("op", "seq").alias("op"),
             F.coalesce(~F.max_by("deleted", "batch_id"), F.lit(False)).alias(
                 "exists"
             ),
-        ),
-        "decided": (F.col("op").isNotNull(),),
-        "out": named_cols(
-            "op.cdc_seq", "pk", "op.operation", "op.val", "op.first_op", "exists"
-        ),
-    }
-
-
-def _decide(ops: DataFrame, snap: DataFrame | None) -> DataFrame:
-    """The per-key reduce and the probe in one keyed aggregate: each key
-    of ``ops`` with its newest op (``max_by`` on cdc_seq) beside
-    ``exists`` — whether its newest ``snap`` row (by batch_id) is a live
-    row. Both sides go into one partition, so the aggregate needs no
-    exchange; snapshot-only keys carry no op and are dropped."""
-    c = _decide_cols()
-    rows = ops.select(*c["ops"])
-    if snap is not None:
-        rows = rows.unionByName(snap.select(*c["snap"]))
-    return (
-        rows.coalesce(1)
-        .groupBy(*named_cols("pk"))
-        .agg(*c["agg"])
-        .filter(*c["decided"])
-        .select(*c["out"])
-    )
-
-
-def reduce_batch(changes: DataFrame, strategy: str) -> DataFrame:
-    """The per-key batch reduction ParquetMergeWriter applies (inside
-    its probe aggregate): one row per key, (cdc_seq, pk, operation,
-    val, first_op). ``last_wins``: the newest row per key decides
-    (s01/ap01 semantics); ``net``: ap08's net op per key."""
-    return _decide(_ops(changes, strategy), None).drop("exists")
-
-
-@functools.cache
-def _guard_cols() -> tuple[Column, ...]:
-    return (F.col("change_hash"), F.unix_micros("ts").alias("us"))
-
-
-@functools.cache
-def _write_cols() -> dict[str, tuple[Column, ...]]:
-    op, exists, pk = F.col("operation"), F.col("exists"), F.col("pk")
-    deleted = op == "DELETE"
-    created_in_batch = F.coalesce(F.col("first_op") == "INSERT", F.lit(False))
-    status = (
-        F.when(
-            op.isin("UPDATE", "DELETE") & ~exists & ~created_in_batch,
-            "TARGET_NOT_FOUND",
         )
-        .otherwise("SUCCESS")
+        .filter(F.col("op").isNotNull())
+        .select("op.*", "pk", "exists")
     )
-    audit_key = named_cols("cdc_seq", "pk", "operation")
-    return {
-        "applied": (op.isin("INSERT", "UPSERT") | exists,),
-        "delta": (
-            pk,
-            F.when(~deleted, F.concat(F.lit("U"), pk.cast("string"))).alias("name"),
-            F.when(~deleted, F.col("val")).alias("acctbal"),
-            deleted.alias("deleted"),
-        ),
-        "audit": (*audit_key, status.alias("status")),
-        "kept_row": (~F.col("loop_blocked"),),
-        "blocked_row": (F.col("loop_blocked"),),
-        "blocked": (*audit_key, F.lit("LOOP_BLOCKED").alias("status")),
-    }
 
 
 class ParquetMergeWriter(LastWinsWriter):
@@ -275,39 +197,47 @@ class ParquetMergeWriter(LastWinsWriter):
         return self.store.live().select("pk", "name", "acctbal")
 
     def apply_batch(self, changes: DataFrame, batch_id: int) -> None:
-        """The foreachBatch body: one partition, one collect for both
-        stores' batch-start steps, the guard walk, then one decide
-        aggregate -> guard delta, MERGE delta and audit partitions."""
+        """The foreachBatch body: one collect for both stores'
+        batch-start steps, the guard walk, then one decide aggregate ->
+        guard delta, MERGE delta and audit partitions."""
         stores = [self.store]
-        cols = named_cols(*OP_COLS)
+        cols = ["cdc_seq", "pk", "operation", "val"]
         if self.guard is not None:
             stores.append(self.guard)
-            cols += (
-                *_guard_cols(),
+            cols += [
+                "change_hash",
+                F.unix_micros("ts").alias("us"),
                 stage1_invalid(changes).alias("invalid"),
-            )
-        # the batch is bounded by the source's per-trigger cap, so it is
-        # cached as ONE partition: cached plans keep their partitioning
-        # (AQE does not coalesce them), and every aggregate over it then
-        # plans without an exchange
-        with persisted(changes.select(*cols).coalesce(1)) as batch:
-            buckets = batch.select(*[s.bucket() for s in stores]).distinct().collect()
-            snaps = [
-                s.begin_batch({r[i] for r in buckets}, batch_id, self._compact_at())
-                for i, s in enumerate(stores)
             ]
+        # cached as the input is partitioned, so the cache fills in
+        # parallel; every plan reads it as ONE partition, since the
+        # source's per-trigger cap bounds it
+        with persisted(changes.select(*cols)) as cached:
+            batch = cached.coalesce(1)
+            touched = batch.select(*[s.bucket() for s in stores]).distinct().collect()
+            snaps, one_task = [], []
+            for i, s in enumerate(stores):
+                buckets = {r[i] for r in touched}
+                snaps.append(s.begin_batch(buckets, batch_id, self._compact_at()))
+                # a snapshot past one task's bytes is cut to the batch
+                # keys first, and its aggregate shuffles
+                one_task.append(s.snapshot_bytes(buckets, batch_id) <= ONE_TASK_BYTES)
+                if snaps[i] is not None and not one_task[i]:
+                    snaps[i] = snaps[i].join(
+                        F.broadcast(batch.select(s.key)), s.key, "left_semi"
+                    )
             if any(snap is None for snap in snaps):
                 return
-            if self.guard is None:
-                kept, blocked = batch, None
-            else:
-                walked = guard_walk(batch, snaps[1])
+            blocked = None
+            if self.guard is not None:
+                walked = guard_walk(batch, snaps[1], one_task[1])
                 self.guard.write_walk(walked, batch_id)
                 flagged = flagged_rows(walked)
-                c = _write_cols()
-                kept = flagged.filter(*c["kept_row"])
-                blocked = flagged.filter(*c["blocked_row"])
-            with persisted(_decide(_ops(kept, self.strategy), snaps[0])) as decided:
+                batch = flagged.filter(~F.col("loop_blocked"))
+                blocked = flagged.filter(F.col("loop_blocked"))
+            with persisted(
+                _decide(_ops(batch, self.strategy), snaps[0], one_task[0])
+            ) as decided:
                 self._write(decided, batch_id, blocked)
 
     def _write(
@@ -325,13 +255,37 @@ class ParquetMergeWriter(LastWinsWriter):
         key was created AND deleted inside this batch: the sequential
         replay it claims parity with would log INSERT=SUCCESS then
         DELETE=SUCCESS, so it is audited SUCCESS too (ADVICE r4)."""
-        c = _write_cols()
+        op, exists, pk = F.col("operation"), F.col("exists"), F.col("pk")
+        deleted = op == "DELETE"
         self.store.write_delta(
-            decided.filter(*c["applied"]).select(*c["delta"]), batch_id
+            decided.filter(op.isin("INSERT", "UPSERT") | exists).select(
+                pk,
+                F.when(~deleted, F.concat(F.lit("U"), pk.cast("string"))).alias(
+                    "name"
+                ),
+                F.when(~deleted, F.col("val")).alias("acctbal"),
+                deleted.alias("deleted"),
+            ),
+            batch_id,
         )
-        audit = decided.select(*c["audit"])
+        created_in_batch = F.coalesce(F.col("first_op") == "INSERT", F.lit(False))
+        audit = decided.select(
+            "cdc_seq",
+            "pk",
+            "operation",
+            F.when(
+                op.isin("UPDATE", "DELETE") & ~exists & ~created_in_batch,
+                "TARGET_NOT_FOUND",
+            )
+            .otherwise("SUCCESS")
+            .alias("status"),
+        )
         if blocked is not None:
-            audit = audit.unionByName(blocked.select(*c["blocked"])).coalesce(1)
+            audit = audit.unionByName(
+                blocked.select(
+                    "cdc_seq", "pk", "operation", F.lit("LOOP_BLOCKED").alias("status")
+                )
+            ).coalesce(1)
         audit.write.mode("overwrite").parquet(
             os.path.join(self.audit_dir, f"batch_id={batch_id}")
         )

@@ -1103,6 +1103,21 @@ def test_keyed_delta_store_totals_invariant(
     assert {r.k: r.n for r in store.totals().collect()} == want
 
 
+def _newest_per_key(changes):
+    """The last-wins batch reduction the writer is checked against,
+    written independently of it: a row_number() window keeps each key's
+    newest row by cdc_seq."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    newest_first = Window.partitionBy("pk").orderBy(F.desc("cdc_seq"))
+    return (
+        changes.withColumn("rn", F.row_number().over(newest_first))
+        .filter("rn = 1")
+        .select("cdc_seq", "pk", "operation", "val")
+    )
+
+
 @given(
     batches=st.lists(
         st.lists(
@@ -1135,10 +1150,7 @@ def test_merge_writer_state_matches_per_batch_merge_fold(
     merge_final_state over the batches — compaction and replays must be
     observationally invisible, including folds that delete every key."""
     from cdc_sync_poc_spark.operators.apply import merge_final_state
-    from cdc_sync_poc_spark.streaming.writer import (
-        ParquetMergeWriter,
-        reduce_batch,
-    )
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
 
     root = tmp_path_factory.mktemp("mor_prop")
     base_ddl = "c_custkey long, c_name string, c_acctbal double"
@@ -1165,8 +1177,7 @@ def test_merge_writer_state_matches_per_batch_merge_fold(
         if bid == compact_after:
             writer.store.compact(bid)
         folded = merge_final_state(
-            spark.createDataFrame(sorted(want), base_ddl),
-            reduce_batch(frame, "last_wins"),
+            spark.createDataFrame(sorted(want), base_ddl), _newest_per_key(frame)
         )
         want = {(r.pk, r.name, r.acctbal) for r in folded.collect()}
     if replay < len(frames):

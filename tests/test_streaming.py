@@ -411,6 +411,26 @@ def _guard_hashes(guard, base_only=False):
     return {r.change_hash: r.last_us for r in rows if r.change_hash}
 
 
+def _guarded_outputs(spark, writer, out):
+    """What a guarded run leaves: MERGE state, guard hashes, audit."""
+    audit = spark.read.parquet(str(out / "audit")).collect()
+    return (
+        sorted(writer.current_state().collect()),
+        _guard_hashes(writer.guard),
+        sorted((r.batch_id, r.cdc_seq, r.status) for r in audit),
+    )
+
+
+_GUARDED_BATCHES = [
+    [(0, 1, "UPDATE", 10.0, "a", 0), (1, 2, "INSERT", 5.0, "b", 1)],
+    # a: 3 min after its applied event -> blocked
+    [(2, 1, "UPDATE", 10.0, "a", 3), (3, 3, "UPDATE", 7.0, "c", 4)],
+    # a: 6 min after -> applied; c: 3 min after -> blocked
+    [(4, 1, "UPDATE", 10.0, "a", 6), (5, 2, "DELETE", None, "d", 6),
+     (6, 3, "UPDATE", 7.0, "c", 7)],
+]
+
+
 def test_crash_between_guard_and_merge_deltas_converges(
     spark, tmp_path, monkeypatch
 ):
@@ -419,82 +439,102 @@ def test_crash_between_guard_and_merge_deltas_converges(
     walks from the pre-batch guard snapshot, which excludes its own
     guard delta, so it lands the same state, guard store and audit as
     a run without the crash. Reading the half-written guard delta would
-    block event 4 (its hash applied at minute 6 by the crashed attempt)."""
-    batches = [
-        [(0, 1, "UPDATE", 10.0, "a", 0), (1, 2, "INSERT", 5.0, "b", 1)],
-        # a: 3 min after its applied event -> blocked
-        [(2, 1, "UPDATE", 10.0, "a", 3), (3, 3, "UPDATE", 7.0, "c", 4)],
-        # a: 6 min after -> applied; c: 3 min after -> blocked
-        [(4, 1, "UPDATE", 10.0, "a", 6), (5, 2, "DELETE", None, "d", 6),
-         (6, 3, "UPDATE", 7.0, "c", 7)],
-    ]
+    block event 4 (its hash applied at minute 6 by the crashed attempt).
 
-    def run(out, crash):
-        writer = _guarded_writer(spark, out)
-        writer.init_state(_keyed_base(spark, 20))
-        for bid, rows in enumerate(batches[:2]):
-            writer.apply_batch(_guarded_batch(spark, rows), bid)
-        last = _guarded_batch(spark, batches[2])
-        if crash:
-            def crashing_write(df, batch_id):
-                raise OSError("simulated crash")
+    Batch N on the shuffle plan (its snapshots past ``ONE_TASK_BYTES``:
+    cut to the batch keys, an exchange before each keyed aggregate)
+    lands the same outputs too."""
+    import shutil
 
-            monkeypatch.setattr(writer.store, "write_delta", crashing_write)
-            with pytest.raises(OSError, match="simulated crash"):
-                writer.apply_batch(last, 2)
-            assert (out / "guard" / "deltas" / "batch_id=2").is_dir()
-            assert not (out / "state" / "deltas" / "batch_id=2").exists()
-            writer = _guarded_writer(spark, out)  # restart
-        writer.apply_batch(last, 2)
-        audit = spark.read.parquet(str(out / "audit")).collect()
-        return (
-            sorted(writer.current_state().collect()),
-            _guard_hashes(writer.guard),
-            sorted((r.batch_id, r.cdc_seq, r.status) for r in audit),
-        )
+    from cdc_sync_poc_spark.streaming import writer as writer_mod
 
-    want = run(tmp_path / "clean", crash=False)
-    assert run(tmp_path / "crash", crash=True) == want
+    decide = writer_mod._decide
+    exchanges = []
+
+    def spy(ops, snap, one_task):
+        decided = decide(ops, snap, one_task)
+        plan = decided._jdf.queryExecution().executedPlan().toString()
+        exchanges.append("Exchange" in plan)
+        return decided
+
+    monkeypatch.setattr(writer_mod, "_decide", spy)
+    clean = tmp_path / "clean"
+    writer = _guarded_writer(spark, clean)
+    writer.init_state(_keyed_base(spark, 20))
+    for bid, rows in enumerate(_GUARDED_BATCHES[:2]):
+        writer.apply_batch(_guarded_batch(spark, rows), bid)
+    for name in ("crash", "shuffle"):  # the same state before batch 2
+        shutil.copytree(clean, tmp_path / name)
+    last = _guarded_batch(spark, _GUARDED_BATCHES[2])
+    writer.apply_batch(last, 2)
+    want = _guarded_outputs(spark, writer, clean)
     assert [seq for _b, seq, st in want[2] if st == "LOOP_BLOCKED"] == [2, 6]
     assert want[1]["a"] - want[1]["c"] == 2 * 60 * 1_000_000  # 6 min vs 4
+
+    crash = tmp_path / "crash"
+    writer = _guarded_writer(spark, crash)
+
+    def crashing_write(df, batch_id):
+        raise OSError("simulated crash")
+
+    monkeypatch.setattr(writer.store, "write_delta", crashing_write)
+    with pytest.raises(OSError, match="simulated crash"):
+        writer.apply_batch(last, 2)
+    assert (crash / "guard" / "deltas" / "batch_id=2").is_dir()
+    assert not (crash / "state" / "deltas" / "batch_id=2").exists()
+    writer = _guarded_writer(spark, crash)  # restart
+    writer.apply_batch(last, 2)
+    assert _guarded_outputs(spark, writer, crash) == want
+
+    monkeypatch.setattr(writer_mod, "ONE_TASK_BYTES", -1)
+    writer = _guarded_writer(spark, tmp_path / "shuffle")
+    writer.apply_batch(last, 2)
+    assert _guarded_outputs(spark, writer, tmp_path / "shuffle") == want
+    assert exchanges == [False] * 5 + [True]
 
 
 def test_guard_state_stays_bounded_past_the_ttl(spark, tmp_path, monkeypatch):
     """Guard compaction evicts hashes applied more than 10 minutes
-    (SP_CLEANUP_HASH, st03) before the newest folded one, so over
-    batches spanning 19 minutes the guard's base holds at most two
-    hashes. An evicted hash's next event is applied, while a hash
-    inside the TTL still blocks its echo."""
+    (SP_CLEANUP_HASH, st03) before the second-newest folded one, so
+    over batches spanning 19 minutes the guard's base stays at three
+    hashes. An evicted hash's next event is applied, while a hash inside
+    the TTL still blocks its echo — also after one far-future event,
+    which must not evict the hashes inside the TTL."""
     from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
 
     monkeypatch.setattr(ParquetMergeWriter, "_compact_at", lambda self: 1)
-    writer = _guarded_writer(spark, tmp_path / "g")
+    out = tmp_path / "g"
+    writer = _guarded_writer(spark, out)
     writer.init_state(_keyed_base(spark, 10))
+    batches = [
+        [(bid, bid, "UPDATE", 1.0, f"h{bid}", minute)]
+        for bid, minute in enumerate((0, 6, 12, 18))
+    ] + [
+        # by batch 4's fold (second-newest applied 12 min) h0 (0) is
+        # evicted: h0 returns and is applied, h3's echo is blocked; h9
+        # is ten thousand minutes ahead of the stream
+        [(4, 0, "UPDATE", 2.0, "h0", 19), (5, 3, "UPDATE", 1.0, "h3", 20),
+         (6, 9, "UPDATE", 1.0, "h9", 10_000)],
+        # batch 5's fold keeps h2 (12 min, in the TTL of h0's 19)
+        [(7, 2, "UPDATE", 1.0, "h2", 14)],
+    ]
     sizes = []
-    for bid, minute in enumerate((0, 6, 12, 18)):
-        writer.apply_batch(
-            _guarded_batch(spark, [(bid, bid, "UPDATE", 1.0, f"h{bid}", minute)]),
-            bid,
-        )
+    for bid, rows in enumerate(batches):
+        writer.apply_batch(_guarded_batch(spark, rows), bid)
         sizes.append(len(_guard_hashes(writer.guard, base_only=True)))
-    # by batch 4's fold (newest applied 18 min) h0 (0) and h1 (6) are
-    # evicted; h0 returns and is applied, h3's echo is blocked
-    writer.apply_batch(
-        _guarded_batch(
-            spark,
-            [(4, 0, "UPDATE", 2.0, "h0", 19), (5, 3, "UPDATE", 1.0, "h3", 20)],
-        ),
-        4,
-    )
-    sizes.append(len(_guard_hashes(writer.guard, base_only=True)))
-    assert sizes == [0, 1, 2, 2, 2]
-    assert set(_guard_hashes(writer.guard, base_only=True)) == {"h2", "h3"}
-    assert set(_guard_hashes(writer.guard)) == {"h0", "h2", "h3"}
-    audit = {
-        r.cdc_seq: r.status
-        for r in spark.read.parquet(str(tmp_path / "g" / "audit" / "batch_id=4")).collect()
+    assert sizes == [0, 1, 2, 3, 3, 4]
+    assert set(_guard_hashes(writer.guard, base_only=True)) == {
+        "h0", "h2", "h3", "h9"
     }
-    assert audit == {4: "SUCCESS", 5: "LOOP_BLOCKED"}
+    audit = {
+        (r.batch_id, r.cdc_seq): r.status
+        for r in spark.read.parquet(str(out / "audit")).collect()
+        if r.batch_id >= 4
+    }
+    assert audit == {
+        (4, 4): "SUCCESS", (4, 5): "LOOP_BLOCKED", (4, 6): "SUCCESS",
+        (5, 7): "LOOP_BLOCKED",
+    }
     assert {r.pk: r.acctbal for r in writer.current_state().collect()}[0] == 2.0
 
 
